@@ -46,7 +46,8 @@ object IncrementalConsumer {
   def cursor(spark: SparkSession, cursorDir: String): Option[String] =
     ManifestTable.currentVersion(cursorDir)
 
-  /** The snapshot a consumer targets: main's current snapshot, or —
+  /** The snapshot a consumer targets on either layout (both share
+    * [[SnapshotLog]]): main's current snapshot, or —
     * BRANCH-AWARE consumption (the audit half of write-audit-publish:
     * quality gates tail the staged commits BEFORE fastForward makes
     * them live) — the named branch's head. Branch snapshots live in
@@ -144,22 +145,12 @@ object IncrementalConsumer {
 
   import graft.engine.SpecManifest.PartitionSpec
 
-  private def specHeadOf(spark: SparkSession, root: String,
-      ref: Option[String]): String = ref match {
-    case None => SpecManifest.currentSnapshot(spark, root)
-      .getOrElse(sys.error(
-        s"IncrementalConsumer: no snapshot committed under $root"))
-    case Some(r) => SpecManifest.branches(spark, root).get(r).map(_._1)
-      .getOrElse(sys.error(
-        s"IncrementalConsumer: no branch '$r' under $root"))
-  }
-
   /** [[bootstrap]] for a composite-spec table. */
   def bootstrapSpec(spark: SparkSession, root: String,
       spec: PartitionSpec, cursorDir: String,
       ref: Option[String] = None)(
       process: (DataFrame, String) => Unit): String = {
-    val snap = specHeadOf(spark, root, ref)
+    val snap = headOf(spark, root, ref)
     process(SpecManifest.read(spark, root, spec, Some(snap)), snap)
     advance(spark, cursorDir, snap)
     snap
@@ -173,7 +164,7 @@ object IncrementalConsumer {
       : Option[(String, String)] = {
     val from = cursor(spark, cursorDir).getOrElse(sys.error(
       s"IncrementalConsumer: no cursor under $cursorDir - bootstrap first"))
-    val to = specHeadOf(spark, root, ref)
+    val to = headOf(spark, root, ref)
     if (from == to) None
     else {
       val diff = SpecManifest.changesBetween(spark, root, spec, from, to)

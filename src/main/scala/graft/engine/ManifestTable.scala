@@ -157,10 +157,10 @@ object ManifestTable {
 
   /** Adopt an ALREADY-WRITTEN directory as the next version: one
     * directory rename (metadata-only — no data copy) + the same atomic
-    * pointer swap and GC as [[publish]]. The seeding path of
-    * [[PartitionedManifest]]: a single partitioned write job produces
-    * every partition's files, and each partition directory is adopted
-    * into its own manifest root without rewriting a byte. */
+    * pointer swap and GC as [[publish]]. The commit path of both table
+    * layouts: a single partitioned write job produces every key's
+    * files, and each key directory is adopted into its own manifest
+    * root without rewriting a byte. */
   private[engine] def adoptVersion(root: String, srcDir: String,
       protect: Set[String] = Set.empty): String = {
     val fs = fsFor(root)
@@ -187,7 +187,7 @@ object ManifestTable {
   }
 
   /** Swap a root-level pointer to an arbitrary name through the same
-    * atomic-rename machinery as [[publish]] (PartitionedManifest's
+    * atomic-rename machinery as [[publish]] ([[SnapshotLog]]'s
     * snapshot commits ride this), then journal the movement in the
     * root's history log — every snapshot that BECAME current is one
     * line of `_history.tsv` (`epoch_ms<TAB>snapshot<TAB>action`), the
@@ -235,7 +235,7 @@ object ManifestTable {
   /** Adopt `srcDir` as the next version directory of `root` WITHOUT
     * advancing the partition pointer and WITHOUT running GC — branch
     * commits stage their versions invisibly to live readers
-    * (PartitionedManifest.commitSnapshotToBranch). The branch's
+    * ([[SnapshotLog]]'s branch commits). The branch's
     * snapshot file, written moments later under the same root publish
     * lock, is what protects a staged dir from commit-time GC: every
     * protection set derives from the snapshot files present, and
@@ -295,7 +295,7 @@ object ManifestTable {
 
   /** Repoint the MANIFEST at an EXISTING version directory — rollback's
     * metadata-only primitive: no data is read, written, moved, or GC'd
-    * (the caller — PartitionedManifest.rollback — owns horizon
+    * (the caller — [[SnapshotLog]]'s rollback — owns horizon
     * bookkeeping via its snapshot protection; running [[gc]] here could
     * collect the version being abandoned while the snapshot that names
     * it is still kept). The target directory must exist; fails loudly
@@ -313,7 +313,7 @@ object ManifestTable {
 
   /** Atomic create-new of the lock file; breaks locks older than
     * [[LockStaleMs]] (a crashed publisher), fails loudly on a live one. */
-  /** Run `f` holding the root's publish lock — PartitionedManifest's
+  /** Run `f` holding the root's publish lock — [[SnapshotLog]]'s
     * snapshot commits serialize through this so two committers cannot
     * both read base mapping N and race to write N+1 (lost update). */
   private[graft] def withPublishLock[A](root: String)(f: => A): A = {

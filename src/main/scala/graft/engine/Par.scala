@@ -14,22 +14,6 @@ package graft.engine
   * earlier leaves keep resource priority and the pool only fills
   * otherwise-idle capacity.
   */
-/** Nanosecond phase timers for the commit machinery, printed only
-  * when GRAFT_TIMERS is set (zero-cost otherwise) — the measurement
-  * hook the optimization rounds use to attribute wall time inside
-  * multi-phase commits (guide §1: measure first). */
-private[graft] object Dbg {
-  val on: Boolean = sys.env.contains("GRAFT_TIMERS")
-  def t[A](tag: String)(f: => A): A =
-    if (!on) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[timer] $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-}
-
 private[graft] object Par {
 
   def map[A, B](xs: Seq[A], maxPar: Int = 8)(f: A => B): Seq[B] =

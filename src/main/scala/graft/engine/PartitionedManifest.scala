@@ -3,33 +3,31 @@ package graft.engine
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 
-/** Partition-scoped atomic publication: every partition of a table is
-  * its own [[ManifestTable]] root —
+/** The SINGLE-COLUMN table layout: partition-scoped atomic
+  * publication, where every partition of a table is its own
+  * [[ManifestTable]] root —
   *
   * {{{
   *   root/bk=0/MANIFEST        -> names root/bk=0/v000002-xxxx/
   *   root/bk=0/v000002-xxxx/   (parquet, partition column NOT stored)
   *   root/bk=1/MANIFEST        -> ...
+  *   root/MANIFEST, root/_snapshots/, root/_refs/, root/_branches/
   * }}}
   *
-  * This is the missing atomicity mode between w02/w05's whole-table
-  * manifest (a merge would rewrite the full table per publish — wrong
-  * when cost must scale with the delta's partition footprint) and
-  * dynamic partition overwrite (delta-scoped, but a concurrent reader
-  * of a partition mid-overwrite sees a torn mix of old and new files).
-  * Here a publish rewrites ONLY the touched partitions, and each
-  * partition flips old→new in one pointer swap: a reader never sees a
-  * torn PARTITION. For cross-partition consistency, [[commitSnapshot]]
-  * adds the root-level commit: one pointer over the whole partition
-  * set, so a multi-partition delta becomes visible in a single atomic
-  * rename and the previous commit stays readable (time travel) — the
-  * Iceberg snapshot model realized with the same pointer-file
-  * machinery (the packets' publish step commits through it).
+  * The missing atomicity mode between w02/w05's whole-table manifest
+  * (a merge rewrites the full table per publish) and dynamic partition
+  * overwrite (a reader mid-overwrite sees a torn mix of files): a
+  * publish rewrites ONLY the touched partitions, each flipping old→new
+  * in one pointer swap. The partition column lives in the DIRECTORY
+  * NAME (hive-style `col=value`), never in the data files.
   *
-  * The partition column is carried by the DIRECTORY NAME (hive-style
-  * `col=value`), never by the data files.
+  * Cross-partition consistency is the root-level snapshot log: the
+  * root `MANIFEST`, `_snapshots/`, `_refs/` and `_branches/` are owned
+  * by [[SnapshotLog]], shared with the multi-column [[SpecManifest]];
+  * here a snapshot key is a partition value `v` at `root/<partCol>=v`,
+  * and snapshot files also record the table schema (`#schema=`).
   *
   * Two reader paths. In-session serving goes through
   * [[syncCatalogTable]]: an external partitioned catalog table whose
@@ -39,11 +37,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * queries plan ONE partitioned relation with real PartitionFilters
   * pruning (plan-asserted in PlanAuditSpec). Fresh engines with no
   * catalog resolve the per-partition pointer files directly via
-  * [[read]], whose literal-partition-column union branches
-  * constant-fold under a `col = k` filter to a single partition's
-  * scan (also plan-asserted).
+  * [[read]], served through one content-pinned partitioned relation.
   */
-object PartitionedManifest {
+object PartitionedManifest extends SnapshotLog {
 
   /** A layout action (clustered OPTIMIZE) was asked to do something it
     * can never succeed at — distinguished from the transient failures
@@ -69,24 +65,6 @@ object PartitionedManifest {
     if (footerSchemaCache.size > 8192) footerSchemaCache.clear()
     footerSchemaCache.computeIfAbsent(dir,
       d => spark.read.parquet(d).schema)
-  }
-
-  /** Partition values ride in DIRECTORY NAMES, generated SQL partition
-    * specs, and tab-delimited snapshot lines — so they must be plain
-    * printable tokens. Reject anything else LOUDLY instead of letting a
-    * quote or newline corrupt an ALTER TABLE statement or a snapshot
-    * file (the API accepts arbitrary partType; current callers use int
-    * buckets, but a string-typed partition must not be able to smuggle
-    * structure). */
-  private def checkPartValue(v: String): String = {
-    require(v.nonEmpty && v.length <= 255 && v.forall(c =>
-      c > ' ' && c <= '~' && c != '\'' && c != '"' && c != '\\' &&
-        c != '/' && c != '`'),
-      s"PartitionedManifest: unsupported partition value '$v' - values " +
-        "must be non-empty printable ASCII without quotes, backticks, " +
-        "slashes, or whitespace (they appear in directory names, SQL " +
-        "partition specs, and snapshot lines)")
-    v
   }
 
   /** One Spark job writes `df` hive-partitioned by `partCol` into a
@@ -150,8 +128,7 @@ object PartitionedManifest {
   def publishPartition(spark: SparkSession, root: String, partCol: String,
       value: String, df: DataFrame): String = {
     checkPartValue(value)
-    val data =
-      if (df.columns.contains(partCol)) df.drop(partCol) else df
+    val data = dropCol(df, partCol)
     // on a snapshot-managed root, the per-partition keep-2 GC must not
     // collect versions the KEPT snapshots still reference (keep-N can
     // exceed the pointer horizon) — protect every dir any kept snapshot
@@ -323,12 +300,6 @@ object PartitionedManifest {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
 
-  /** Rebuild the session view over the current pointers — ONE catalog
-    * operation, the same no-torn-read property as w02's view re-point. */
-  def refreshView(spark: SparkSession, root: String, view: String,
-      partCol: String, partType: String): Unit =
-    read(spark, root, partCol, partType).createOrReplaceTempView(view)
-
   /** In-session serving through the CATALOG: an external partitioned
     * table whose per-partition LOCATIONs point at the current version
     * directories. Publishing flips a partition with one `ALTER TABLE …
@@ -444,411 +415,49 @@ object PartitionedManifest {
   }
 
   // ---------------------------------------------------------------------
-  // SNAPSHOT commits: one ROOT-level pointer over the whole partition
-  // set — the cross-partition consistency the per-partition pointers
-  // deliberately do not claim. A snapshot file lists every partition's
-  // version directory; publishing a delta writes the touched partitions'
-  // new version dirs, then swaps the single root MANIFEST to a new
-  // snapshot file naming the updated mapping — so a reader that
-  // resolves one snapshot sees EVERY partition at that commit, even
-  // when a publish touches many partitions (the Iceberg snapshot
-  // model, realized with the same pointer-file machinery). Old
-  // snapshots stay readable until GC'd (keep-N horizon) — time travel.
+  // SNAPSHOT commits: [[SnapshotLog]] over keys at `root/<partCol>=<v>`.
 
-  private val SnapDir = "_snapshots"
+  protected def logName = "PartitionedManifest"
+  protected def keysNoun = "partitions"
 
-  private def fsOf(spark: SparkSession, root: String) =
-    new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def partLeaf(partCol: String): String => String =
+    v => s"$partCol=$v"
 
-  /** Parse a snapshot file: lines of `value<TAB>versionDirName`;
-    * `#key=value` header lines (commit metadata) are skipped. */
-  def snapshotMapping(spark: SparkSession, root: String,
-      snap: String): Seq[(String, String)] = {
-    val fs = fsOf(spark, root)
-    val in = fs.open(new HPath(s"$root/$SnapDir/$snap"))
-    val text = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    text.linesIterator.filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map { l => val Array(v, dir) = l.split("\t", 2); (v, dir) }.toSeq
-  }
-
-  /** A snapshot's commit wall-clock (epoch millis) from its header.
-    * None for pre-header snapshot files (older layouts parse fine). */
-  def snapshotCommittedMs(spark: SparkSession, root: String,
-      snap: String): Option[Long] = {
-    val fs = fsOf(spark, root)
-    val in = fs.open(new HPath(s"$root/$SnapDir/$snap"))
-    val text = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    text.linesIterator.find(_.startsWith("#committed_ms="))
-      .map(_.stripPrefix("#committed_ms=").trim.toLong)
-      // header-less snapshot (pre-header layout): fall back to the
-      // file's mtime so as-of resolution still sees it — skipping it
-      // would make snapshotAsOf return None/an older commit on a
-      // mixed-layout table even when this snapshot satisfies the
-      // contract
-      .orElse(try Some(fs.getFileStatus(
-          new HPath(s"$root/$SnapDir/$snap")).getModificationTime)
-        catch { case _: java.io.IOException => None })
-  }
-
-  /** The table schema RECORDED at a snapshot commit (data columns only,
-    * never the partition column). Every snapshot written since schema
-    * evolution landed carries one; None for older layouts (readers fall
-    * back to a live version dir's parquet footer). */
-  def snapshotSchema(spark: SparkSession, root: String,
-      snap: String): Option[StructType] = {
-    val fs = fsOf(spark, root)
-    val in = fs.open(new HPath(s"$root/$SnapDir/$snap"))
-    val text = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    text.linesIterator.find(_.startsWith("#schema="))
-      .map(l => DataType.fromJson(l.stripPrefix("#schema="))
-        .asInstanceOf[StructType])
-  }
-
-  /** ADDITIVE schema evolution (the Iceberg add-column contract): every
-    * existing column must arrive unchanged (same name, same type); new
-    * columns append. A column REMOVAL goes through [[dropColumn]] (an
-    * explicit metadata-only commit), never through an update that
-    * silently omits it; a type change needs a rewrite, not evolution. */
-  private def mergeSchemas(prev: StructType, upd: StructType): StructType = {
-    prev.fields.foreach { f =>
-      upd.fields.find(_.name == f.name) match {
-        case None => sys.error(
-          s"commitSnapshot: update omits column '${f.name}' - evolution " +
-            "is additive; use dropColumn() for an explicit metadata-only " +
-            "drop")
-        case Some(u) if u.dataType != f.dataType => sys.error(
-          s"commitSnapshot: column '${f.name}' changes type " +
-            s"${f.dataType.simpleString} -> ${u.dataType.simpleString}; " +
-            "type changes need a rewrite, not schema evolution")
-        case _ =>
-      }
-    }
-    StructType(prev.fields ++
-      upd.fields.filterNot(u => prev.fieldNames.contains(u.name)))
-  }
-
-  /** AS-OF time travel: the LATEST snapshot committed at or before
-    * `tsMs` (the Iceberg `TIMESTAMP AS OF` contract). Snapshots within
-    * the keep-N horizon only — older commits are expired. None if every
-    * kept snapshot is newer than `tsMs`. */
-  def snapshotAsOf(spark: SparkSession, root: String,
-      tsMs: Long): Option[String] =
-    snapshots(spark, root).reverse.find(sn =>
-      snapshotCommittedMs(spark, root, sn).exists(_ <= tsMs))
-
-  /** The current snapshot name (root MANIFEST content), if committed. */
-  def currentSnapshot(spark: SparkSession, root: String): Option[String] = {
-    val fs = fsOf(spark, root)
-    val p = new HPath(root, "MANIFEST")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
-  }
-
-  /** All committed snapshots, oldest first (generation-ordered names). */
-  def snapshots(spark: SparkSession, root: String): Seq[String] = {
-    val fs = fsOf(spark, root)
-    val dir = new HPath(root, SnapDir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("s")).sorted.toSeq
-  }
-
-  // ---------------------------------------------------------------------
-  // NAMED REFS (tags): immutable name → snapshot bindings under _refs/.
-  // A tagged snapshot is pinned OUTSIDE the keep-N horizon: its snapshot
-  // file survives the commit-time trim and (because every GC protection
-  // set is derived from the snapshot files still present under
-  // _snapshots/) its version directories stay protected until the tag is
-  // dropped — the Iceberg tag retention contract.
-
-  private val RefsDir = "_refs"
-
-  private def checkRefName(name: String): String = {
-    require(name.nonEmpty && name.length <= 128 && name.forall(c =>
-      c.isLetterOrDigit || c == '.' || c == '_' || c == '-'),
-      s"PartitionedManifest: unsupported ref name '$name' - letters, " +
-        "digits, dot, underscore, dash only (ref names are file names)")
-    name
-  }
-
-  /** Tag a committed snapshot with an immutable name (defaults to the
-    * CURRENT snapshot). Fails loudly if the name exists (tags never
-    * move — use a new name) or the snapshot is unknown. Returns the
-    * tagged snapshot id. */
-  def tagSnapshot(spark: SparkSession, root: String, name: String,
-      snapshot: Option[String] = None): String = {
-    checkRefName(name)
-    // under the root publish lock: a concurrent commit's keep-N trim
-    // must not expire the snapshot between the existence check and the
-    // ref write (a dangling tag would pin nothing)
-    ManifestTable.withPublishLock(root) {
-      val snap = snapshot.orElse(currentSnapshot(spark, root)).getOrElse(
-        sys.error(s"PartitionedManifest: no snapshot committed under $root"))
-      require(snapshots(spark, root).contains(snap),
-        s"PartitionedManifest: cannot tag unknown/expired snapshot $snap")
-      // immutable create-once: conditional PUT on a store-backed root,
-      // tmp+rename-no-overwrite elsewhere — two racing taggers of the
-      // same name cannot both succeed
-      ManifestTable.writeOnce(root, s"$RefsDir/$name", snap + "\n")
-      snap
-    }
-  }
-
-  /** All named refs: tag name → snapshot id. */
-  def tags(spark: SparkSession, root: String): Map[String, String] = {
-    val fs = fsOf(spark, root)
-    val dir = new HPath(root, RefsDir)
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).filter(s => s.isFile &&
-        !s.getPath.getName.startsWith(".")).map { s =>
-      val in = fs.open(s.getPath)
-      val snap = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim finally in.close()
-      s.getPath.getName -> snap
-    }.toMap
-  }
-
-  /** Drop a tag. The snapshot it pinned re-enters the normal keep-N
-    * horizon at the NEXT commit (trim and version GC are commit-time
-    * activities — nothing is deleted here). */
-  def dropTag(spark: SparkSession, root: String, name: String): Unit =
-    fsOf(spark, root).delete(
-      new HPath(root, s"$RefsDir/${checkRefName(name)}"), false)
-
-  /** Resolve a ref: a tag name, a literal snapshot id, or None for the
-    * current snapshot. */
-  def resolveRef(spark: SparkSession, root: String,
-      ref: Option[String]): Option[String] = ref match {
-    case None => currentSnapshot(spark, root)
-    case Some(r) => tags(spark, root).get(r)
-      .orElse(branches(spark, root).get(r).map(_._1))
-      .orElse(Some(r))
-  }
-
-  // ---------------------------------------------------------------------
-  // BRANCHES (mutable refs) + WRITE-AUDIT-PUBLISH: commits can land on a
-  // named branch whose staged version directories are INVISIBLE to live
-  // readers (partition pointers never move); auditors read the branch
-  // head like any snapshot; a validated branch FAST-FORWARDS into main
-  // in one metadata operation. The Iceberg branch / WAP contract — at
-  // 100 TB this is how bad data stays out of production: ingest lands on
-  // `audit`, quality gates run against the branch, and only a passing
-  // head is ever published. Branch files are mutable pointers under
-  // _branches/ (`head<TAB>forkBase`), updated atomically under the root
-  // publish lock.
-
-  private val BranchesDir = "_branches"
-
-  /** All branches: name → (head snapshot, fork-base snapshot). */
-  def branches(spark: SparkSession, root: String)
-      : Map[String, (String, String)] = {
-    val fs = fsOf(spark, root)
-    val dir = new HPath(root, BranchesDir)
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).filter(s => s.isFile &&
-        !s.getPath.getName.startsWith(".")).map { s =>
-      val in = fs.open(s.getPath)
-      val txt = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim finally in.close()
-      val Array(head, base) = txt.split("\t", 2)
-      s.getPath.getName -> ((head, base))
-    }.toMap
-  }
-
-  def branchHead(spark: SparkSession, root: String,
-      name: String): Option[String] =
-    branches(spark, root).get(name).map(_._1)
-
-  /** Create a branch at a snapshot (default: current). Create-once —
-    * two racing creators of one name cannot both succeed. */
-  def createBranch(spark: SparkSession, root: String, name: String,
-      from: Option[String] = None): String = {
-    checkRefName(name)
-    ManifestTable.withPublishLock(root) {
-      val snap = from.flatMap(r => resolveRef(spark, root, Some(r)))
-        .orElse(currentSnapshot(spark, root)).getOrElse(sys.error(
-          s"PartitionedManifest: no snapshot committed under $root"))
-      require(snapshots(spark, root).contains(snap),
-        s"PartitionedManifest: cannot branch from unknown/expired " +
-          s"snapshot $snap")
-      require(!branches(spark, root).contains(name),
-        s"PartitionedManifest: branch '$name' already exists")
-      // the existence check above runs under the root publish lock, so
-      // the write itself can use the same atomic-overwrite path every
-      // later branch update uses (one write machinery, one checksum
-      // story — writeOnce's fs.create would leave a CRC sidecar the
-      // NIO-based pointer swaps don't maintain)
-      ManifestTable.swapRefPointer(root, s"$BranchesDir/$name",
-        s"$snap\t$snap\n")
-      snap
-    }
-  }
-
-  /** Drop a branch. Its head snapshot re-enters the normal keep-N
-    * horizon at the next commit (nothing is deleted here). */
-  def dropBranch(spark: SparkSession, root: String, name: String): Unit =
-    ManifestTable.withPublishLock(root) {
-      fsOf(spark, root).delete(new HPath(root, s"$BranchesDir/$name"), false)
-    }
-
-  /** Commit to a BRANCH: version directories are STAGED (the partition
-    * pointers never move — live readers cannot see branch data), the
-    * snapshot file lands in the shared history, and only the branch
-    * pointer advances. Readers audit the result via
-    * `readSnapshot(resolveRef(branch))`. Branch commits may touch
-    * EXISTING partitions only: a branch-created partition directory
-    * would appear in live readers' partition listings with no published
-    * pointer and break them. */
+  /** Commit to a BRANCH ([[SnapshotLog]]'s write-audit-publish):
+    * version directories are STAGED (partition pointers never move —
+    * live readers cannot see branch data), and only the branch pointer
+    * advances; audit via `readSnapshot(resolveRef(branch))`. Branch
+    * commits may touch EXISTING partitions only; additive schema
+    * evolution applies against the branch head's recorded schema. */
   def commitSnapshotToBranch(spark: SparkSession, root: String,
       partCol: String, updates: Map[String, DataFrame], branch: String,
       keepSnapshots: Int = 2): String = {
-    require(keepSnapshots >= 2, "keepSnapshots must be >= 2")
-    require(updates.nonEmpty, "branch commit needs updates")
     updates.keys.foreach(checkPartValue)
-    ManifestTable.withPublishLock(root) {
-      val (head, base) = branches(spark, root).getOrElse(branch,
-        sys.error(s"PartitionedManifest: no branch '$branch'"))
-      val baseMapping = snapshotMapping(spark, root, head).toMap
-      val unknown = updates.keySet.filterNot(baseMapping.contains)
-      require(unknown.isEmpty,
-        s"PartitionedManifest: branch commit may only touch existing " +
-          s"partitions (new: ${unknown.toSeq.sorted.mkString(",")}) - " +
-          "create partitions on main first")
-      // additive schema evolution works on branches too, against the
-      // BRANCH head's recorded schema
-      val prevSchema = snapshotSchema(spark, root, head)
-      val updSchema = updates.headOption.map { case (_, df) =>
-        StructType(df.schema.filterNot(_.name == partCol)) }
-      val merged = (prevSchema, updSchema) match {
-        case (Some(p), Some(u)) => Some(mergeSchemas(p, u))
-        case (None, u) => u
-        case (p, None) => p
-      }
-      val fs = fsOf(spark, root)
-      val scratch = writeScratchParts(spark, root, partCol, updates)
-      try {
-        val staged: Map[String, String] = updates.keys.toSeq.sorted.map {
-          v =>
-            val src = new HPath(s"$scratch/$partCol=$v")
-            val dir =
-              if (fs.exists(src))
-                ManifestTable.stageVersion(s"$root/$partCol=$v",
-                  src.toString)
-              else {
-                // an all-empty partition update wrote no scratch subdir;
-                // its (legitimate) empty version still needs staging
-                val tmp = s"$root/$partCol=$v/.stage-" +
-                  java.util.UUID.randomUUID.toString.take(8)
-                val df = updates(v)
-                (if (df.columns.contains(partCol)) df.drop(partCol)
-                 else df).write.parquet(tmp)
-                ManifestTable.stageVersion(s"$root/$partCol=$v", tmp)
-              }
-            v -> new HPath(dir).getName
-        }.toMap
-        val mapping = (baseMapping ++ staged).toSeq.sortBy(_._1)
-        val snap = writeSnapshotFileLocked(spark, root, mapping,
-          keepSnapshots, merged, advanceRoot = false,
-          operation = "branch-commit")
-        ManifestTable.swapRefPointer(root, s"$BranchesDir/$branch",
-          s"$snap\t$base\n")
-        snap
-      } finally fs.delete(new HPath(scratch), true)
-    }
+    commitToBranch(spark, root, branch, updates.keys.toSeq, keepSnapshots,
+      partLeaf(partCol),
+      updates.headOption.map { case (_, df) =>
+        StructType(df.schema.filterNot(_.name == partCol)) },
+      () => writeScratchParts(spark, root, partCol, updates),
+      v => dropCol(updates(v), partCol))
   }
 
-  /** PUBLISH a branch: fast-forward main to the branch head in one
-    * metadata operation (repoint the diverged partitions' pointers,
-    * swap the root pointer to the branch's snapshot file — no data
-    * moves; the staged dirs simply become live). Fails loudly if main
-    * advanced since the branch forked: a fast-forward would silently
-    * drop main's commits — recreate the branch from current and replay
-    * instead. After publishing, the branch is synced (base = head). */
+  /** PUBLISH a branch: fast-forward main to its head in one metadata
+    * operation (see [[SnapshotLog]]). */
   def fastForward(spark: SparkSession, root: String, partCol: String,
       branch: String): String =
-    ManifestTable.withPublishLock(root) {
-      val (head, base) = branches(spark, root).getOrElse(branch,
-        sys.error(s"PartitionedManifest: no branch '$branch'"))
-      val cur = currentSnapshot(spark, root).getOrElse(sys.error(
-        s"PartitionedManifest: no snapshot committed under $root"))
-      if (head == cur) head
-      else {
-        require(cur == base,
-          s"PartitionedManifest: main advanced since branch '$branch' " +
-            s"forked ($base -> $cur) - a fast-forward would drop main's " +
-            "commits; recreate the branch from current and replay " +
-            "(rebase), then publish")
-        val target = snapshotMapping(spark, root, head)
-        val fs = fsOf(spark, root)
-        target.foreach { case (v, d) =>
-          val pr = s"$root/$partCol=$v"
-          if (!ManifestTable.currentVersion(pr).contains(d)) {
-            require(fs.exists(new HPath(s"$pr/$d")),
-              s"PartitionedManifest: branch head dir $pr/$d is gone")
-            ManifestTable.repointVersion(pr, d)
-          }
-        }
-        ManifestTable.swapRootPointer(root, head, "fast-forward")
-        ManifestTable.swapRefPointer(root, s"$BranchesDir/$branch",
-          s"$head\t$head\n")
-        head
-      }
-    }
+    fastForwardBranch(spark, root, branch, partLeaf(partCol))
 
-  /** ROLLBACK: restore the table to `toSnap`'s state as a NEW commit —
-    * history moves forward (the bad commits stay readable until the
-    * horizon drops them), exactly Iceberg's
-    * `rollback_to_snapshot`. METADATA-ONLY: no data is read, written,
-    * or copied; each diverged partition's pointer is swapped back to
-    * the target snapshot's version directory (which the keep-N/tag
-    * protection has kept alive), and the root pointer advances to a
-    * fresh snapshot file carrying the restored mapping. `toSnap` may
-    * be a tag name.
-    *
-    * Partitions CREATED after the target snapshot are not covered by
-    * the restored mapping: snapshot readers correctly never see them,
-    * but the live per-partition `read()` path would — so rollback
-    * fails loudly if any exist rather than serving two readers two
-    * different answers. Drop or ignore such partitions explicitly
-    * first. */
+  /** ROLLBACK to a kept snapshot or tag as a NEW forward commit,
+    * metadata-only (see [[SnapshotLog]]). Partitions CREATED after the
+    * target fail it loudly: snapshot readers would never see them but
+    * the live per-partition `read()` path would — drop them first. */
   def rollback(spark: SparkSession, root: String, partCol: String,
-      toSnap: String, keepSnapshots: Int = 2): String = {
-    require(keepSnapshots >= 2, "keepSnapshots must be >= 2")
-    ManifestTable.withPublishLock(root) {
-      val snap = resolveRef(spark, root, Some(toSnap)).get
-      val target = snapshotMapping(spark, root, snap).toMap
-      require(target.nonEmpty,
-        s"PartitionedManifest: empty rollback target $snap")
-      val extra = partitionValues(spark, root, partCol)
-        .filterNot(target.contains)
-      require(extra.isEmpty,
-        s"PartitionedManifest: partitions ${extra.mkString(",")} were " +
-          s"created after $snap - rollback cannot restore their absence " +
-          "for live-pointer readers; remove them first")
-      val fs = fsOf(spark, root)
-      target.toSeq.sortBy(_._1).foreach { case (v, d) =>
-        val pr = s"$root/$partCol=$v"
-        if (!ManifestTable.currentVersion(pr).contains(d)) {
-          require(fs.exists(new HPath(s"$pr/$d")),
-            s"PartitionedManifest: rollback target dir $pr/$d is gone")
-          ManifestTable.repointVersion(pr, d)
-        }
-      }
-      // the restored commit carries the TARGET's schema: rolling back
-      // past a schema evolution restores the pre-evolution shape too
-      writeSnapshotFileLocked(spark, root, target.toSeq.sortBy(_._1),
-        keepSnapshots, snapshotSchema(spark, root, snap),
-        operation = "rollback")
-    }
-  }
+      toSnap: String, keepSnapshots: Int = 2): String =
+    rollbackTo(spark, root, toSnap, keepSnapshots, partLeaf(partCol),
+      () => partitionValues(spark, root, partCol))
+
+  private def dropCol(df: DataFrame, partCol: String): DataFrame =
+    if (df.columns.contains(partCol)) df.drop(partCol) else df
 
   /** METADATA-ONLY column drop (the Iceberg drop-column contract): a
     * new snapshot commits the SAME partition→version mapping with the
@@ -857,7 +466,7 @@ object PartitionedManifest {
     * time travel to pre-drop snapshots still serves them; the next
     * compaction of a partition materializes the reduced shape). ADD
     * column needs no API at all: commit an update carrying the new
-    * column and [[mergeSchemas]] appends it — older partitions read it
+    * column and additive evolution appends it — older partitions read it
     * as NULL. Returns the new snapshot name. */
   def dropColumn(spark: SparkSession, root: String, partCol: String,
       column: String, keepSnapshots: Int = 2): String = {
@@ -878,7 +487,7 @@ object PartitionedManifest {
       val reduced = StructType(schema.filterNot(_.name == column))
       require(reduced.fields.nonEmpty,
         "dropColumn: cannot drop the last data column")
-      writeSnapshotFileLocked(spark, root, mapping, keepSnapshots,
+      writeSnapshotLocked(spark, root, mapping, keepSnapshots,
         Some(reduced), operation = "drop-column")
     }
   }
@@ -1012,9 +621,7 @@ object PartitionedManifest {
     val p = new HPath(dirPath, MorFile)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val text = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+      val text = SnapshotLog.readUtf8(fs, p)
       val keys = text.linesIterator.find(_.startsWith("#keys="))
         .map(_.stripPrefix("#keys=").trim.split(",").toSeq)
         .getOrElse(sys.error(s"PartitionedManifest: $dirPath/$MorFile " +
@@ -1497,7 +1104,7 @@ object PartitionedManifest {
           schema.map(f => (f.name, f.dataType))),
         "commitMerge: the table schema evolved while the delta was " +
           "staging - restage against the current schema")
-      val protectByPart = protectedDirsByPartition(spark, root,
+      val protectByPart = protectedDirsByKey(spark, root,
         keepSnapshots)
       val written: Map[String, String] = Par.map(staged) {
         case (v, up, del, stage) =>
@@ -1537,30 +1144,12 @@ object PartitionedManifest {
             }
           v -> new HPath(dir).getName
       }.toMap
-      writeSnapshotFileLocked(spark, root,
+      writeSnapshotLocked(spark, root,
         (base ++ written).toSeq.sortBy(_._1), keepSnapshots, Some(schema),
         operation = "merge")
     } catch {
       case e: Throwable => dropStaged(); throw e
     }
-  }
-
-  /** Version dirs every protection-relevant snapshot (kept-N + tags +
-    * branch heads + current) references, per partition value — the
-    * shared protect-set computation of [[commitMerge]] and
-    * [[adoptPartsLocked]] (callers expand through MOR chains at the
-    * partition root). */
-  private def protectedDirsByPartition(spark: SparkSession, root: String,
-      keepSnapshots: Int): Map[String, Set[String]] = {
-    val taggedSnaps = tags(spark, root).values.toSet
-    val branchHeads = branches(spark, root).values.map(_._1).toSet
-    val allSnaps = snapshots(spark, root)
-    val keptOld = (allSnaps.filter(taggedSnaps) ++
-      allSnaps.filter(branchHeads) ++
-      currentSnapshot(spark, root).toSeq ++
-      allSnaps.takeRight(keepSnapshots)).distinct
-    keptOld.flatMap(sn => snapshotMapping(spark, root, sn))
-      .groupBy(_._1).map { case (v, dirs) => v -> dirs.map(_._2).toSet }
   }
 
   /** Commit a snapshot: write ALL touched partitions' new version
@@ -1571,15 +1160,10 @@ object PartitionedManifest {
     * the ONE root pointer to a snapshot file naming every partition's
     * version — the whole delta becomes visible in a single atomic
     * rename. Pass `updates` as partitionValue → new rows (without the
-    * partition column). Returns the snapshot name.
-    *
-    * `keepSnapshots` (≥ 2) is the time-travel horizon: the last N
-    * commits stay fully readable. Per-partition version GC is
-    * snapshot-aware — a touched partition keeps exactly the versions
-    * referenced by the kept snapshots plus its live pointer — and
-    * delta-scoped: an UNtouched partition's obsolete versions are
-    * collected when that partition is next touched (GC cost stays on
-    * the delta's partition footprint, never the partition count). */
+    * partition column). Returns the snapshot name. `keepSnapshots`
+    * (≥ 2) is the time-travel horizon; version GC keeps the pinned
+    * snapshots' dirs and is delta-scoped (an untouched partition's
+    * obsolete versions collect on its next touch). */
   def commitSnapshot(spark: SparkSession, root: String, partCol: String,
       updates: Map[String, DataFrame], keepSnapshots: Int = 2): String = {
     require(keepSnapshots >= 2, "keepSnapshots must be >= 2 (current + previous)")
@@ -1587,50 +1171,29 @@ object PartitionedManifest {
     // their own partition roots - disjoint, no deadlock): two racing
     // commits must not both read base mapping N and fight over N+1
     ManifestTable.withPublishLock(root) {
-      commitSnapshotLocked(spark, root, partCol, updates, keepSnapshots)
+      updates.keys.foreach(checkPartValue)
+      val scratch =
+        if (updates.isEmpty) None
+        else Some(writeScratchParts(spark, root, partCol, updates))
+      val updSchema = updates.headOption.map { case (_, df) =>
+        StructType(df.schema.filterNot(_.name == partCol))
+      }
+      try adoptPartsLocked(spark, root, partCol, scratch,
+        updates.keys.toSeq.sorted, v => updates(v), keepSnapshots, updSchema)
+      finally scratch.foreach(s => fsOf(spark, root).delete(new HPath(s), true))
     }
   }
 
-  /** [[commitSnapshot]]'s body, for callers that already hold the root
-    * publish lock AND need to form their read-set under it (compact():
-    * resolving version dirs outside the lock would lose a concurrent
-    * committer's update despite perfect lock serialization). */
-  private def commitSnapshotLocked(spark: SparkSession, root: String,
-      partCol: String, updates: Map[String, DataFrame],
-      keepSnapshots: Int): String = {
-    updates.keys.foreach(checkPartValue)
-    val fs = fsOf(spark, root)
-    val scratch =
-      if (updates.isEmpty) None
-      else Some(writeScratchParts(spark, root, partCol, updates))
-    val updSchema = updates.headOption.map { case (_, df) =>
-      StructType(df.schema.filterNot(_.name == partCol))
-    }
-    try adoptPartsLocked(spark, root, partCol, scratch,
-      updates.keys.toSeq.sorted, v => updates(v), keepSnapshots, updSchema)
-    finally scratch.foreach(s => fs.delete(new HPath(s), true))
-  }
-
-  /** The ONE hive-partitioned REBALANCE write of every touched
-    * partition's rows, into a fresh scratch dir under `root`. Factored
-    * out of the locked commit path so [[compact]] can run this — the
-    * expensive Spark job — entirely OUTSIDE the root publish lock.
-    * Rebalance, not repartition(partCol): one task per VALUE would push
-    * a skewed partition's whole delta through a single writer (see
-    * [[seed]]). Returns the scratch path (caller deletes). */
+  /** The ONE hive-partitioned write of every touched partition's rows
+    * into a fresh scratch dir under `root` ([[SnapshotLog.writeTagged]]),
+    * factored out so [[compact]] can run this expensive job OUTSIDE the
+    * root publish lock. Returns the scratch path (caller deletes). */
   private def writeScratchParts(spark: SparkSession, root: String,
       partCol: String, updates: Map[String, DataFrame]): String = {
-    val scratch =
-      s"$root/.commit-${java.util.UUID.randomUUID.toString.take(8)}"
-    val parts = updates.keys.toSeq.sorted
-    val schemaCols = updates(parts.head).drop(partCol).columns.toSeq
-    updates.map { case (v, df) =>
-      (if (df.columns.contains(partCol)) df.drop(partCol) else df)
-        .select(schemaCols.map(col): _*)
-        .withColumn(partCol, lit(v))
-    }.reduce(_.unionByName(_))
-      .hint("rebalance", col(partCol))
-      .write.mode("error").partitionBy(partCol).parquet(scratch)
+    val scratch = s"$root/.commit-${SnapshotLog.uuid8()}"
+    writeTagged(unionTagged(Seq(partCol),
+      updates.map { case (v, df) => Seq(v) -> df }).get, Seq(partCol),
+      scratch)
     scratch
   }
 
@@ -1744,12 +1307,8 @@ object PartitionedManifest {
       zOrder: Boolean): Boolean = {
     val fs = fsOf(spark, dirPath)
     val p = new HPath(dirPath, ClusterMarker)
-    fs.exists(p) && {
-      val in = fs.open(p)
-      val text = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      text == clusterMarkerBody(clusterBy, clusterFiles, zOrder)
-    }
+    fs.exists(p) && SnapshotLog.readUtf8(fs, p) ==
+      clusterMarkerBody(clusterBy, clusterFiles, zOrder)
   }
 
   /** The METADATA half of a snapshot commit, always under the root
@@ -1763,118 +1322,23 @@ object PartitionedManifest {
       emptyUpdate: String => DataFrame, keepSnapshots: Int,
       updatesSchema: Option[StructType] = None,
       operation: String = "commit"): String = {
-    val base: Map[String, String] = currentSnapshot(spark, root) match {
-      case Some(s) => snapshotMapping(spark, root, s).toMap
-      case None => // adopt the standing per-partition pointers as gen-0
-        partitionValues(spark, root, partCol).map { v =>
-          v -> new HPath(ManifestTable.currentDataDir(s"$root/$partCol=$v")
-            .getOrElse(sys.error(s"no MANIFEST under $root/$partCol=$v")))
-            .getName
-        }.toMap
-    }
-    val fs = fsOf(spark, root)
-    // versions the still-kept snapshots reference, per partition — the
-    // per-partition GC must not collect them while a kept snapshot
-    // names them. Protect ALL currently-kept snapshots (keepSnapshots,
-    // not keepSnapshots - 1): adoption GC runs BEFORE the new snapshot
-    // file and root swap exist, so collecting the expiring snapshot's
-    // dirs here would break its reads permanently if this commit
-    // aborts mid-way (the pointer would still name it). Its uniquely-
-    // referenced dirs collect lazily on the partition's next touch,
-    // after the snapshot file itself is dropped below.
-    // tagged snapshots are pinned outside the horizon: their version
-    // dirs must survive partition GC exactly like the kept-N's. So are
-    // BRANCH HEADS (their staged dirs have no live pointer protecting
-    // them) and main's CURRENT snapshot — branch commits interleave in
-    // the shared generation order, so takeRight(N) alone could slide
-    // past the root pointer's own commit. (Tags + branch heads +
-    // current + kept-N: protectedDirsByPartition.)
-    val protectByPart: Map[String, Set[String]] =
-      protectedDirsByPartition(spark, root, keepSnapshots)
+    val base = baseMappingLocked(spark, root, partLeaf(partCol),
+      () => partitionValues(spark, root, partCol))
     // schema evolution check FIRST — a rejected merge (silent column
     // drop, type change) must fail BEFORE any partition pointer moves,
     // or the table would be torn between adopted dirs and the old
-    // snapshot. mergeSchemas is additive-only; see dropColumn.
-    val prevSchema = currentSnapshot(spark, root)
-      .flatMap(sn => snapshotSchema(spark, root, sn))
-    val mergedSchema: Option[StructType] =
-      (prevSchema, updatesSchema) match {
-        case (Some(p), Some(u)) => Some(mergeSchemas(p, u))
-        case (None, Some(u)) => Some(u)
-        case (p, None) => p
-      }
-    val written: Map[String, String] = Par.map(parts.toSeq) { v =>
-      val src = scratch.map(s => new HPath(s"$s/$partCol=$v"))
-        .filter(fs.exists)
-      // chain expansion: a protected MOR layer keeps its bases alive
-      val protect = expandMorProtect(spark, s"$root/$partCol=$v",
-        protectByPart.getOrElse(v, Set.empty))
-      val dir = src match {
-        case Some(p) =>
-          ManifestTable.adoptVersion(s"$root/$partCol=$v", p.toString,
-            protect)
-        case None =>
-          // an all-empty partition writes no scratch directory; its
-          // (legitimate) empty version still needs publishing
-          val df = emptyUpdate(v)
-          ManifestTable.publish(spark, s"$root/$partCol=$v",
-            if (df.columns.contains(partCol)) df.drop(partCol) else df,
-            protect)
-      }
-      v -> new HPath(dir).getName
-    }.toMap
+    // snapshot. Evolution is additive-only; see dropColumn.
+    val mergedSchema = evolvedSchema(currentSnapshot(spark, root)
+      .flatMap(sn => snapshotSchema(spark, root, sn)), updatesSchema)
+    val written = adoptLeavesLocked(spark, root, scratch, parts,
+      keepSnapshots, partLeaf(partCol), v => dropCol(emptyUpdate(v), partCol))
     val mapping = (base ++ written).toSeq.sortBy(_._1)
     // first commit / legacy tables with neither a recorded schema nor
     // updates derive theirs once from a live version dir's footer
     val newSchema = mergedSchema.orElse(mapping.headOption.map {
       case (v, d) => footerSchema(spark, s"$root/$partCol=$v/$d") })
-    writeSnapshotFileLocked(spark, root, mapping, keepSnapshots, newSchema,
+    writeSnapshotLocked(spark, root, mapping, keepSnapshots, newSchema,
       operation = operation)
-  }
-
-  /** Write + atomically publish a snapshot file carrying `mapping`,
-    * then trim snapshot files past the keep-N horizon — TAGGED
-    * snapshots survive the trim until their tag is dropped. Caller
-    * holds the root publish lock. Shared tail of [[commitSnapshot]]
-    * and [[rollback]]. */
-  private def writeSnapshotFileLocked(spark: SparkSession, root: String,
-      mapping: Seq[(String, String)], keepSnapshots: Int,
-      schema: Option[StructType] = None,
-      advanceRoot: Boolean = true,
-      operation: String = "commit"): String = {
-    val fs = fsOf(spark, root)
-    fs.mkdirs(new HPath(root, SnapDir))
-    val gen = snapshots(spark, root).lastOption
-      .map(_.drop(1).takeWhile(_.isDigit).toInt).getOrElse(0) + 1
-    val snap = f"s$gen%06d-${java.util.UUID.randomUUID.toString.take(8)}"
-    // commit metadata headers feed the snapshots/history inspection
-    // tables: operation (commit/merge/compact/rollback/…) and parent
-    // (the snapshot current when this one was written)
-    val parent = currentSnapshot(spark, root)
-    val body = s"#committed_ms=${System.currentTimeMillis()}\n" +
-      s"#operation=$operation\n" +
-      parent.map(p => s"#parent=$p\n").getOrElse("") +
-      schema.map(s => s"#schema=${s.json}\n").getOrElse("") +
-      mapping.map { case (v, d) => s"$v\t$d" }.mkString("\n") + "\n"
-    // immutable uniquely-named file: one conditional PUT on an
-    // object-store-backed root, tmp+rename elsewhere
-    ManifestTable.writeOnce(root, s"$SnapDir/$snap", body)
-    // the root pointer swap reuses ManifestTable's atomic-rename path
-    // (NIO ATOMIC_MOVE on local, FileContext OVERWRITE elsewhere);
-    // a BRANCH commit advances only its branch pointer, never the root
-    if (advanceRoot) ManifestTable.swapRootPointer(root, snap, operation)
-    // drop snapshot files past the keep-N horizon (their uniquely-
-    // referenced version dirs are collected lazily, on each partition's
-    // next touch); TAGGED snapshots and BRANCH HEADS are pinned until
-    // untagged/dropped, and main's current snapshot always survives
-    // (branch commits interleave in the generation order)
-    val keep = snapshots(spark, root).takeRight(keepSnapshots).toSet +
-      snap ++ tags(spark, root).values ++
-      branches(spark, root).values.map(_._1) ++
-      currentSnapshot(spark, root)
-    snapshots(spark, root).filterNot(keep).foreach(s =>
-      fs.delete(new HPath(root, s"$SnapDir/$s"), false))
-    snap
   }
 
   /** Data files in a table root's LIVE version directory (pointer
@@ -2090,205 +1554,20 @@ object PartitionedManifest {
       done.sorted.toSeq)
   }
 
-  /** AGE-BASED snapshot expiry (Iceberg's `expire_snapshots`): drop
-    * snapshot FILES whose commit wall-clock is older than
-    * `olderThanMs`, always keeping the newest `keepLast` plus tags,
-    * branch heads, and the current pointer — the same protection
-    * surface every keep-N trim applies, now with a time horizon
-    * ("keep 7 days" instead of "keep 2 commits": a quiet table's last
-    * N commits can span months, and a hot one's N commits span
-    * minutes). Metadata-only and O(#snapshots): version-dir GC stays
-    * LAZY (a partition's newly-unreferenced dirs collect on its next
-    * touch, exactly like the count-based trim). Pre-header snapshot
-    * files (no recorded wall-clock) are never age-expired. Returns the
-    * expired names. */
-  def expireSnapshots(spark: SparkSession, root: String,
-      olderThanMs: Long, keepLast: Int = 2): Seq[String] = {
-    require(keepLast >= 2, "keepLast must be >= 2 (current + previous)")
-    ManifestTable.withPublishLock(root) {
-      val fs = fsOf(spark, root)
-      val all = snapshots(spark, root)
-      val protect = all.takeRight(keepLast).toSet ++
-        tags(spark, root).values ++
-        branches(spark, root).values.map(_._1) ++
-        currentSnapshot(spark, root)
-      val expired = all.filterNot(protect).filter { sn =>
-        snapshotCommittedMs(spark, root, sn).exists(_ < olderThanMs)
-      }
-      expired.foreach(sn =>
-        fs.delete(new HPath(root, s"$SnapDir/$sn"), false))
-      expired
-    }
-  }
-
-  /** ORPHAN cleanup (Iceberg's `remove_orphan_files`, scoped to the
-    * layout this format actually writes): a crashed writer can strand
-    * (a) scratch directories (`.commit-*`, `.optimize-*`, `.seed-*`,
-    * `.mor-*`, `.fold-*` — written OUTSIDE any lock by design) and
-    * (b) fully-written version directories no snapshot ever came to
-    * reference (a crash between stage and commit). Both are invisible
-    * to readers but cost storage forever. This pass deletes, under the
-    * root and under every partition root, dot-prefixed scratch
-    * entries and UNREFERENCED version dirs whose modification time is
-    * older than `graceMs` — the grace window keeps in-flight writers
-    * safe (pick it ≫ the longest plausible write; referenced = named
-    * by ANY kept snapshot file, any MOR chain they anchor, or a live
-    * partition pointer). Runs under the publish lock so the reference
-    * set cannot move mid-scan. Returns the deleted paths. */
+  /** ORPHAN cleanup ([[SnapshotLog]]'s sweep) under the root and every
+    * partition root; the partition column is read off the table's own
+    * `<col>=<value>` layout. Returns the deleted paths. */
   def cleanOrphans(spark: SparkSession, root: String,
-      graceMs: Long = 24L * 3600 * 1000): Seq[String] =
-    ManifestTable.withPublishLock(root) {
-      val fs = fsOf(spark, root)
-      val cutoff = System.currentTimeMillis() - graceMs
-      // the full reference set: every kept snapshot's dirs + every
-      // live pointer, expanded through MOR chains
-      val referencedByPart: Map[String, Set[String]] = {
-        val fromSnaps = snapshots(spark, root)
-          .flatMap(sn => snapshotMapping(spark, root, sn))
-        val fromPointers = partitionValues(spark, root,
-            snapshotPartCol(spark, root)).flatMap { v =>
-          ManifestTable.currentVersion(
-            s"$root/${snapshotPartCol(spark, root)}=$v").map(v -> _)
-        }
-        (fromSnaps ++ fromPointers).groupBy(_._1).map { case (v, ds) =>
-          v -> ds.map(_._2).toSet
-        }
-      }
-      val deleted = scala.collection.mutable.ListBuffer.empty[String]
-      def sweep(dir: HPath, referenced: Set[String]): Unit =
-        if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
-          val name = st.getPath.getName
-          val stale = st.getModificationTime < cutoff
-          if (st.isDirectory && stale &&
-              (name.startsWith(".") ||
-                (name.startsWith("v") && name.drop(1).headOption
-                  .exists(_.isDigit) && !referenced.contains(name)))) {
-            fs.delete(st.getPath, true)
-            deleted += st.getPath.toString
-          }
-        }
-      // root-level scratch (.commit-*/.optimize-*/.seed-* land here)
-      fs.listStatus(new HPath(root)).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory && name.startsWith(".") &&
-            st.getModificationTime < cutoff) {
-          fs.delete(st.getPath, true)
-          deleted += st.getPath.toString
-        }
-      }
-      val pc = snapshotPartCol(spark, root)
-      partitionValues(spark, root, pc).foreach { v =>
-        val pr = s"$root/$pc=$v"
-        val referenced = expandMorProtect(spark, pr,
-          referencedByPart.getOrElse(v, Set.empty))
-        sweep(new HPath(pr), referenced)
-      }
-      deleted.sorted.toSeq
-    }
+      graceMs: Long = 24L * 3600 * 1000): Seq[String] = {
+    val pc = snapshotPartCol(spark, root)
+    sweepOrphans(spark, root, graceMs, partLeaf(pc),
+      () => partitionValues(spark, root, pc))
+  }
 
-  /** One row of [[filesMetadata]]: partition value, version dir name,
-    * file path RELATIVE to the version dir (MOR delta files keep their
-    * `_delta/...` prefix), size, mtime, and the zone-map stats per
-    * analyzed column (empty where unanalyzed). */
-  final case class FileMeta(partition: String, version: String,
-      file: String, bytes: Long, modified: Long,
-      stats: Map[String, (String, Option[String], Option[String])])
-
-  /** FILE-LEVEL metadata table (Iceberg's `table.files` inspection
-    * surface): one row per data file in a snapshot (default current) —
-    * the inventory compaction planners, skew debuggers and storage
-    * audits read. Built from directory listings + the `_filestats.tsv`
-    * sidecars only (ZERO data bytes; driver-side, file-count bounded —
-    * the pointer-resolution cost class). Merge-on-read version dirs
-    * contribute their `_delta/` files, so every live byte is
-    * accounted. */
+  /** FILE inspection table of a snapshot (see [[SnapshotLog]]). */
   def filesMetadata(spark: SparkSession, root: String, partCol: String,
-      snapshot: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val snap = snapshot.orElse(currentSnapshot(spark, root)).getOrElse(
-      sys.error(s"PartitionedManifest: no snapshot committed under $root"))
-    snapshotMapping(spark, root, snap).flatMap { case (v, d) =>
-      filesOfVersion(spark, s"$root/$partCol=$v/$d", v, d)
-    }.toDF()
-  }
-
-  private[engine] def filesOfVersion(spark: SparkSession,
-      dirPath: String, partition: String, version: String)
-      : Seq[FileMeta] = {
-    val fs = fsOf(spark, dirPath)
-    val base = new HPath(dirPath)
-    val stats = FileStats.statsFor(spark, dirPath).getOrElse(Map.empty)
-    def walk(p: HPath): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) {
-          if (n.startsWith(".")) Nil else walk(st.getPath)
-        } else if (n.startsWith("_") || n.startsWith(".")) Nil
-        else Seq(st)
-      }
-    walk(base).map { st =>
-      val rel = st.getPath.toString.stripPrefix(
-        fs.makeQualified(base).toString).stripPrefix("/")
-      FileMeta(partition, version, rel, st.getLen,
-        st.getModificationTime,
-        stats.getOrElse(rel, Map.empty).map { case (c, cs) =>
-          c -> (cs.typ, cs.min, cs.max) })
-    }
-  }
-
-  /** One row of [[snapshotsMetadata]]. */
-  final case class SnapshotMeta(snapshot: String,
-      committedMs: Option[Long], operation: Option[String],
-      parent: Option[String], entries: Long)
-
-  /** SNAPSHOT inspection table (Iceberg's `table.snapshots`): one row
-    * per KEPT snapshot file — id, commit wall-clock, operation
-    * (commit/merge/compact/rollback/branch-commit/drop-column),
-    * parent (the snapshot current when it was written), and the
-    * partition/leaf entry count. Metadata-only: snapshot files are
-    * small and zero data bytes are read. Pre-header snapshots (older
-    * layouts) surface with null operation/parent. The snapshot-file
-    * layout is shared, so this serves BOTH layouts (the SpecManifest
-    * alias delegates here). */
-  def snapshotsMetadata(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    val fs = fsOf(spark, root)
-    snapshots(spark, root).map { sn =>
-      val in = fs.open(new HPath(s"$root/$SnapDir/$sn"))
-      val text = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      def header(k: String): Option[String] = text.linesIterator
-        .find(_.startsWith(s"#$k=")).map(_.stripPrefix(s"#$k=").trim)
-      SnapshotMeta(sn, header("committed_ms").map(_.toLong),
-        header("operation"), header("parent"),
-        text.linesIterator
-          .count(l => l.nonEmpty && !l.startsWith("#")).toLong)
-    }.toDF()
-  }
-
-  /** One row of [[historyMetadata]]. */
-  final case class HistoryMeta(madeCurrentMs: Long, snapshot: String,
-      action: String, isCurrent: Boolean)
-
-  /** HISTORY inspection table (Iceberg's `table.history`): every ROOT
-    * pointer movement, oldest first — commits, merges, compactions,
-    * rollbacks (the restore lands as a forward movement), and
-    * fast-forwards (which move the pointer WITHOUT writing a new
-    * snapshot file — exactly the movements the snapshot files alone
-    * cannot show). Sourced from the `_history.tsv` journal every
-    * [[ManifestTable.swapRootPointer]] appends under the publish
-    * lock; tables created before the journal landed report from
-    * their next commit on. */
-  def historyMetadata(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    val cur = currentSnapshot(spark, root)
-    val lines = ManifestTable.historyLines(root)
-    lines.zipWithIndex.map { case (l, i) =>
-      val Array(ts, snap, action) = l.split("\t", 3)
-      HistoryMeta(ts.toLong, snap, action,
-        i == lines.length - 1 && cur.contains(snap))
-    }.toDF()
-  }
+      snapshot: Option[String] = None): DataFrame =
+    filesMetadataOf(spark, root, snapshot, partLeaf(partCol))
 
   /** The partition column name recoverable from the table's own layout
     * (`<col>=<value>` dirs) — lets maintenance passes run without the

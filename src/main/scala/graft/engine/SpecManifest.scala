@@ -20,23 +20,20 @@ import org.apache.spark.sql.functions._
   *   root/_snapshots/s000001-x     lines: `y=1994/b=2<TAB>v000001-x`
   * }}}
   *
-  * so every single-partition-column guarantee carries over unchanged:
-  * a leaf flips old→new in one pointer swap, a multi-leaf delta
-  * becomes visible in ONE root snapshot rename, old snapshots stay
-  * readable (time travel), and CDC diffs only the leaves whose version
-  * directory moved. Reads serve through a content-pinned catalog
-  * relation with BOTH partition columns — one plan node, real
-  * PartitionFilters pruning on each level (plan-asserted in w22).
-  *
-  * Scope: seed / snapshot-commit / merge-on-read commit / read /
-  * readLeaf / time-travel (by snapshot and by timestamp) / CDC /
-  * hidden-pruning (helper and transparent rule) / spec EVOLUTION /
-  * optimistic leaf fold-down / zone-map analyze / tags / rollback /
-  * age-based expiry / orphan cleanup, plus the graft-spec-table sink
-  * and the graft-cdc `spec` source option — full parity with the
-  * single-column [[PartitionedManifest]] surface.
+  * The root `MANIFEST`, `_snapshots/`, `_refs/` and `_branches/` are
+  * owned by [[SnapshotLog]], shared with the single-column
+  * [[PartitionedManifest]]; here a snapshot key is a leaf path
+  * `y=…/b=…`. A leaf flips old→new in one pointer swap, a multi-leaf
+  * delta becomes visible in ONE root snapshot rename, and tags,
+  * branches, rollback, expiry and the orphan sweep are the shared
+  * ones. CDC diffs only the leaves whose version directory moved.
+  * Reads serve through a content-pinned catalog relation with ALL
+  * partition columns (one plan node, PartitionFilters pruning on each
+  * level — plan-asserted in w22). On top of the log this layout owns
+  * its seed, merge-on-read commits, reads, hidden pruning, spec
+  * EVOLUTION, leaf fold-down, layout rewrite and zone-map analyze.
   */
-object SpecManifest {
+object SpecManifest extends SnapshotLog {
 
   /** Partition transforms (the Iceberg set, minus the ones the corpus
     * does not exercise). All derived values render as STRINGS — they
@@ -112,20 +109,11 @@ object SpecManifest {
       PartField(n, src, Transform.parse(t))
     })
 
-  private val SnapDir = "_snapshots"
+  protected def logName = "SpecManifest"
+  protected def keysNoun = "leaves"
+
   private val SpecFile = "_spec"
   private val SpecsDir = "_specs"
-
-  private def fsOf(spark: SparkSession, root: String) =
-    new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def checkValue(v: String): String = {
-    require(v.nonEmpty && v.length <= 255 && v.forall(c =>
-      c > ' ' && c <= '~' && c != '\'' && c != '"' && c != '\\' &&
-        c != '/' && c != '`'),
-      s"SpecManifest: unsupported partition value '$v'")
-    v
-  }
 
   /** `y=1994/b=2` — the snapshot-file key AND the leaf's relative
     * path. */
@@ -133,17 +121,14 @@ object SpecManifest {
     require(values.length == spec.fields.length,
       s"SpecManifest: expected ${spec.fields.length} values, got $values")
     spec.fields.zip(values).map { case (f, v) =>
-      s"${f.name}=${checkValue(v)}" }.mkString("/")
+      s"${f.name}=${checkPartValue(v)}" }.mkString("/")
   }
 
   /** The stored spec (readers' authority — a caller-supplied spec must
     * match it, or two writers could disagree on the table's shape). */
   def readSpec(spark: SparkSession, root: String): PartitionSpec = {
-    val fs = fsOf(spark, root)
-    val in = fs.open(new HPath(root, SpecFile))
-    val text = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    PartitionSpec.parse(text)
+    PartitionSpec.parse(
+      SnapshotLog.readUtf8(fsOf(spark, root), new HPath(root, SpecFile)))
   }
 
   /** All spec versions, oldest first — v1 is the seed-time `_spec`;
@@ -154,12 +139,8 @@ object SpecManifest {
     val later =
       if (!fs.exists(dir)) Seq.empty
       else fs.listStatus(dir).map(_.getPath.getName)
-        .filter(_.startsWith("spec-")).sorted.toSeq.map { n =>
-          val in = fs.open(new HPath(dir, n))
-          val text = try new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-          PartitionSpec.parse(text)
-        }
+        .filter(_.startsWith("spec-")).sorted.toSeq.map(n =>
+          PartitionSpec.parse(SnapshotLog.readUtf8(fs, new HPath(dir, n))))
     readSpec(spark, root) +: later
   }
 
@@ -221,11 +202,17 @@ object SpecManifest {
   /** All leaf keys present on disk (depth = spec arity; partition-count
     * bounded metadata listing). */
   def leafKeys(spark: SparkSession, root: String,
-      spec: PartitionSpec): Seq[Seq[String]] = {
-    val fs = fsOf(spark, root)
-    def walk(dir: HPath, depth: Int): Seq[(HPath, Seq[String])] = {
+      spec: PartitionSpec): Seq[Seq[String]] =
+    leafDirs(spark, root, spec).map(_._2).sortBy(_.mkString("/"))
+
+  /** Every `f1=v1/…/fn=vn` directory of `spec`'s shape under `dir`, with
+    * its values. */
+  private def leafDirs(spark: SparkSession, dir: String,
+      spec: PartitionSpec): Seq[(HPath, Seq[String])] = {
+    val fs = fsOf(spark, dir)
+    def walk(d: HPath, depth: Int): Seq[(HPath, Seq[String])] = {
       val want = s"${spec.fields(depth).name}="
-      fs.listStatus(dir)
+      fs.listStatus(d)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(want))
         .toSeq.flatMap { s =>
           val v = s.getPath.getName.stripPrefix(want)
@@ -234,7 +221,7 @@ object SpecManifest {
             (p, v +: vs) }
         }
     }
-    walk(new HPath(root), 0).map(_._2).sortBy(_.mkString("/"))
+    walk(new HPath(dir), 0)
   }
 
   /** Leaf keys across EVERY spec generation, each with its OWNING spec
@@ -258,71 +245,20 @@ object SpecManifest {
   def seed(spark: SparkSession, root: String, df: DataFrame,
       spec: PartitionSpec): String = {
     val scratch = s"$root/.seed-${java.util.UUID.randomUUID.toString.take(8)}"
-    val tagged = spec.fields.foldLeft(df)((d, f) =>
-      d.withColumn(f.name, f.derived))
-    tagged.hint("rebalance", spec.names.map(col): _*)
-      .write.mode("error").partitionBy(spec.names: _*).parquet(scratch)
-    val fs = fsOf(spark, root)
+    writeTagged(spec.fields.foldLeft(df)((d, f) =>
+      d.withColumn(f.name, f.derived)), spec.names, scratch)
     // adopt every scratch leaf in place
-    def leaves(dir: HPath, depth: Int): Seq[(HPath, Seq[String])] = {
-      val want = s"${spec.fields(depth).name}="
-      fs.listStatus(dir)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(want))
-        .toSeq.flatMap { s =>
-          val v = s.getPath.getName.stripPrefix(want)
-          if (depth == spec.fields.length - 1) Seq((s.getPath, Seq(v)))
-          else leaves(s.getPath, depth + 1).map { case (p, vs) =>
-            (p, v +: vs) }
-        }
-    }
-    val found = leaves(new HPath(scratch), 0)
+    val found = leafDirs(spark, scratch, spec)
     require(found.nonEmpty, "SpecManifest: seed produced no partitions")
     found.foreach { case (src, values) =>
       ManifestTable.adoptVersion(s"$root/${leafPath(spec, values)}",
         src.toString)
     }
-    fs.delete(new HPath(scratch), true)
+    fsOf(spark, root).delete(new HPath(scratch), true)
     ManifestTable.writeOnce(root, SpecFile, spec.render + "\n")
     commitSnapshot(spark, root, spec, Map.empty)
   }
 
-  def currentSnapshot(spark: SparkSession, root: String): Option[String] = {
-    val fs = fsOf(spark, root)
-    val p = new HPath(root, "MANIFEST")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
-  }
-
-  def snapshots(spark: SparkSession, root: String): Seq[String] = {
-    val fs = fsOf(spark, root)
-    val dir = new HPath(root, SnapDir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("s")).sorted.toSeq
-  }
-
-  /** Snapshot content: leaf key (relative path) → version dir name. */
-  def snapshotMapping(spark: SparkSession, root: String,
-      snap: String): Seq[(String, String)] = {
-    val fs = fsOf(spark, root)
-    val in = fs.open(new HPath(s"$root/$SnapDir/$snap"))
-    val text = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    text.linesIterator.filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map { l => val Array(k, d) = l.split("\t", 2); (k, d) }.toSeq
-  }
-
-  /** Commit a snapshot over leaf-keyed updates (values = the leaf's
-    * full replacement rows WITHOUT the partition columns): one
-    * hive-partitioned scratch write for the whole delta, per-leaf
-    * pointer adoption with kept-snapshot GC protection, one atomic
-    * root snapshot swap — [[PartitionedManifest.commitSnapshot]]
-    * generalized to composite keys. */
   /** Thrown when a [[commitSnapshot]] conflict guard trips: another
     * committer landed between the caller's read and its commit, so the
     * caller's replacement frames were computed from a stale base —
@@ -332,23 +268,17 @@ object SpecManifest {
   final class ConcurrentCommitException(msg: String)
     extends RuntimeException(msg)
 
+  /** Commit a snapshot over leaf-keyed updates (values = the leaf's
+    * full replacement rows WITHOUT the partition columns): one
+    * hive-partitioned scratch write for the whole delta, per-leaf
+    * pointer adoption with pinned-snapshot GC protection, one atomic
+    * root snapshot swap. */
   def commitSnapshot(spark: SparkSession, root: String,
       spec: PartitionSpec, updates: Map[Seq[String], DataFrame],
       keepSnapshots: Int = 2,
       expectedBase: Option[Option[String]] = None): String = {
-    // Map-of-frames spelling delegates to the one-pass tagged core:
-    // each leaf's frame gets its leaf values attached as literal
-    // string columns, and the union is staged in ONE partitionBy job
-    val tagged: Option[DataFrame] = updates.headOption.map { h =>
-      val dataCols = h._2.columns.toSeq.filterNot(spec.names.contains)
-      updates.map { case (vs, df) =>
-        val d = spec.names.foldLeft(df)((x, n) =>
-          if (x.columns.contains(n)) x.drop(n) else x)
-        spec.fields.zip(vs).foldLeft(d.select(dataCols.map(col): _*)) {
-          case (x, (f, v)) => x.withColumn(f.name, lit(v))
-        }
-      }.reduce(_.unionByName(_))
-    }
+    // Map-of-frames spelling delegates to the one-pass tagged core
+    val tagged = unionTagged(spec.names, updates)
     commitSnapshotTagged(spark, root, spec, tagged,
       updates.keys.toSeq, keepSnapshots, expectedBase)
   }
@@ -390,16 +320,8 @@ object SpecManifest {
       if (!fs.exists(new HPath(root, SpecFile)))
         ManifestTable.writeOnce(root, SpecFile, spec.render + "\n")
       checkSpec(spark, root, spec)
-      val base: Map[String, String] = currentSnapshot(spark, root) match {
-        case Some(s) => snapshotMapping(spark, root, s).toMap
-        case None =>
-          leafKeys(spark, root, spec).map { vs =>
-            val lp = leafPath(spec, vs)
-            lp -> new HPath(ManifestTable.currentDataDir(s"$root/$lp")
-              .getOrElse(sys.error(s"no MANIFEST under $root/$lp")))
-              .getName
-          }.toMap
-      }
+      val base = baseMappingLocked(spark, root, identity,
+        () => leafKeys(spark, root, spec).map(leafPath(spec, _)))
       // spec evolution: creating a NEW leaf is reserved to the CURRENT
       // spec (old layouts stay mergeable but never grow new leaves)
       val versions = specVersions(spark, root)
@@ -411,427 +333,79 @@ object SpecManifest {
           s"SpecManifest: new leaves (${fresh.mkString(",")}) must use " +
             "the CURRENT spec version")
       }
-      // kept snapshots' dirs per leaf — the per-leaf GC protection
-      val protectByLeaf: Map[String, Set[String]] =
-        protectedDirsByLeaf(spark, root, keepSnapshots)
       val written: Map[String, String] =
         if (data.isEmpty || touched.isEmpty) Map.empty
         else {
           val df = data.get
-          val dataCols = df.columns.toSeq
-            .filterNot(spec.names.contains)
-          val scratch =
-            s"$root/.commit-${java.util.UUID.randomUUID.toString.take(8)}"
-          df.select((dataCols ++ spec.names).map(col): _*)
-            .hint("rebalance", spec.names.map(col): _*)
-            .write.mode("error").partitionBy(spec.names: _*)
-            .parquet(scratch)
-          // per-leaf pointer adoption is independent fs work —
-          // overlap it (guide §2.6)
-          try Par.map(touched.sortBy(_.mkString("/"))) { vs =>
-            val lp = leafPath(spec, vs)
-            val src = new HPath(s"$scratch/$lp")
-            // chain expansion: a protected MOR layer keeps its bases
-            val protect = PartitionedManifest.expandMorProtect(spark,
-              s"$root/$lp", protectByLeaf.getOrElse(lp, Set.empty))
-            val dir =
-              if (fs.exists(src))
-                ManifestTable.adoptVersion(s"$root/$lp", src.toString,
-                  protect)
-              else // all-empty leaf update: publish its empty version
-                ManifestTable.publish(spark, s"$root/$lp",
-                  df.select(dataCols.map(col): _*).limit(0),
-                  protect)
-            lp -> new HPath(dir).getName
-          }.toMap
+          val scratch = s"$root/.commit-${SnapshotLog.uuid8()}"
+          writeTagged(df, spec.names, scratch)
+          try adoptLeavesLocked(spark, root, Some(scratch),
+            touched.map(leafPath(spec, _)).distinct.sorted, keepSnapshots,
+            identity,
+            _ => df.select(df.columns.filterNot(spec.names.contains)
+              .map(col): _*).limit(0))
           finally fs.delete(new HPath(scratch), true)
         }
-      writeSnapshotLocked(spark, root, (base ++ written).toSeq.sortBy(_._1),
-        keepSnapshots)
+      val mapping = (base ++ written).toSeq.sortBy(_._1)
+      require(mapping.nonEmpty, "SpecManifest: nothing to commit")
+      writeSnapshotLocked(spark, root, mapping, keepSnapshots)
     }
   }
 
-  /** Version dirs the kept snapshots (+ tags + branch heads + current)
-    * reference, per leaf — the GC protection base every commit path
-    * shares (callers expand through MOR chains at the leaf root).
-    * Branch heads matter doubly: their STAGED dirs have no live
-    * pointer protecting them. */
-  private def protectedDirsByLeaf(spark: SparkSession, root: String,
-      keepSnapshots: Int): Map[String, Set[String]] =
-    (currentSnapshot(spark, root).toSeq ++
-      tags(spark, root).values ++
-      branches(spark, root).values.map(_._1) ++
-      snapshots(spark, root).takeRight(keepSnapshots)).distinct
-      .flatMap(sn => snapshotMapping(spark, root, sn))
-      .groupBy(_._1).map { case (k, ds) => k -> ds.map(_._2).toSet }
-
-  /** Write + atomically publish a snapshot file carrying `mapping`,
-    * then trim past the keep-N horizon. Caller holds the root publish
-    * lock. Shared tail of [[commitSnapshot]], [[commitMerge]],
-    * [[compactLeaves]], [[rollback]] and (with `advanceRoot=false`)
-    * [[commitSnapshotToBranch]]. */
-  private def writeSnapshotLocked(spark: SparkSession, root: String,
-      mapping: Seq[(String, String)], keepSnapshots: Int,
-      advanceRoot: Boolean = true,
-      operation: String = "commit"): String = {
-    require(mapping.nonEmpty, "SpecManifest: nothing to commit")
-    val fs = fsOf(spark, root)
-    fs.mkdirs(new HPath(root, SnapDir))
-    val gen = snapshots(spark, root).lastOption
-      .map(_.drop(1).takeWhile(_.isDigit).toInt).getOrElse(0) + 1
-    val snap = f"s$gen%06d-${java.util.UUID.randomUUID.toString.take(8)}"
-    // operation + parent headers feed the snapshots/history inspection
-    // tables (see [[PartitionedManifest.snapshotsMetadata]])
-    val parent = currentSnapshot(spark, root)
-    val body = s"#committed_ms=${System.currentTimeMillis()}\n" +
-      s"#operation=$operation\n" +
-      parent.map(p => s"#parent=$p\n").getOrElse("") +
-      mapping.map { case (k, d) => s"$k\t$d" }.mkString("\n") + "\n"
-    ManifestTable.writeOnce(root, s"$SnapDir/$snap", body)
-    // a BRANCH commit advances only its branch pointer, never the root
-    if (advanceRoot) ManifestTable.swapRootPointer(root, snap, operation)
-    // TAGGED snapshots and BRANCH HEADS survive the keep-N trim; so
-    // does main's CURRENT snapshot (branch commits interleave in the
-    // shared generation order, so takeRight(N) alone could slide past
-    // the root pointer's own commit)
-    val keep = snapshots(spark, root).takeRight(keepSnapshots).toSet +
-      snap ++ tags(spark, root).values ++
-      branches(spark, root).values.map(_._1) ++
-      currentSnapshot(spark, root)
-    snapshots(spark, root).filterNot(keep).foreach(s =>
-      fs.delete(new HPath(root, s"$SnapDir/$s"), false))
-    snap
-  }
-
-  private val RefsDir = "_refs"
-
-  private def checkRefName(name: String): String = {
-    require(name.nonEmpty && name.length <= 128 && name.forall(c =>
-      c.isLetterOrDigit || c == '.' || c == '_' || c == '-'),
-      s"SpecManifest: unsupported ref name '$name' - letters, digits, " +
-        "dot, underscore, dash only (ref names are file names)")
-    name
-  }
-
-  /** Tag a committed snapshot with an IMMUTABLE name (defaults to the
-    * current snapshot) — pins it outside the keep-N horizon exactly
-    * like [[PartitionedManifest.tagSnapshot]]: create-once ref
-    * (conditional PUT on object stores — racing taggers of one name
-    * cannot both win), honored by snapshot trims and per-leaf GC
-    * protection. Returns the tagged snapshot id. */
-  def tagSnapshot(spark: SparkSession, root: String, name: String,
-      snapshot: Option[String] = None): String = {
-    checkRefName(name)
-    ManifestTable.withPublishLock(root) {
-      val snap = snapshot.orElse(currentSnapshot(spark, root)).getOrElse(
-        sys.error(s"SpecManifest: no snapshot committed under $root"))
-      require(snapshots(spark, root).contains(snap),
-        s"SpecManifest: cannot tag unknown/expired snapshot $snap")
-      ManifestTable.writeOnce(root, s"$RefsDir/$name", snap + "\n")
-      snap
-    }
-  }
-
-  /** All named refs: tag name → snapshot id. */
-  def tags(spark: SparkSession, root: String): Map[String, String] = {
-    val fs = fsOf(spark, root)
-    val dir = new HPath(root, RefsDir)
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).filter(s => s.isFile &&
-        !s.getPath.getName.startsWith(".")).map { s =>
-      val in = fs.open(s.getPath)
-      val snap = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim finally in.close()
-      s.getPath.getName -> snap
-    }.toMap
-  }
-
-  /** Drop a tag. The snapshot it pinned re-enters the keep-N horizon
-    * at the NEXT commit (trims are commit-time activities). */
-  def dropTag(spark: SparkSession, root: String, name: String): Unit =
-    fsOf(spark, root).delete(
-      new HPath(root, s"$RefsDir/${checkRefName(name)}"), false)
-
-  /** Resolve a ref: a tag name, a branch name (its head), a literal
-    * snapshot id, or None for the current snapshot. */
-  def resolveRef(spark: SparkSession, root: String,
-      ref: Option[String]): Option[String] = ref match {
-    case None => currentSnapshot(spark, root)
-    case Some(r) => tags(spark, root).get(r)
-      .orElse(branches(spark, root).get(r).map(_._1))
-      .orElse(Some(r))
-  }
-
-  // ---------------------------------------------------------------------
-  // BRANCHES + WRITE-AUDIT-PUBLISH on the composite layout — the same
-  // contract as [[PartitionedManifest]]'s: branch commits STAGE leaf
-  // version dirs (leaf pointers never move — live readers cannot see
-  // the batch), auditors read the branch head like any snapshot, and a
-  // validated head FAST-FORWARDS into main in one metadata operation.
-  // Branch files are mutable `head<TAB>forkBase` pointers under
-  // _branches/, updated atomically under the root publish lock.
-
-  private val BranchesDir = "_branches"
-
-  /** All branches: name → (head snapshot, fork-base snapshot). */
-  def branches(spark: SparkSession, root: String)
-      : Map[String, (String, String)] = {
-    val fs = fsOf(spark, root)
-    val dir = new HPath(root, BranchesDir)
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).filter(s => s.isFile &&
-        !s.getPath.getName.startsWith(".")).map { s =>
-      val in = fs.open(s.getPath)
-      val text = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim finally in.close()
-      val Array(head, base) = text.split("\t", 2)
-      s.getPath.getName -> (head, base)
-    }.toMap
-  }
-
-  /** Create a branch at a kept snapshot (default: current). */
-  def createBranch(spark: SparkSession, root: String, name: String,
-      from: Option[String] = None): String = {
-    checkRefName(name)
-    ManifestTable.withPublishLock(root) {
-      val snap = from.flatMap(r => resolveRef(spark, root, Some(r)))
-        .orElse(currentSnapshot(spark, root)).getOrElse(sys.error(
-          s"SpecManifest: no snapshot committed under $root"))
-      require(snapshots(spark, root).contains(snap),
-        s"SpecManifest: cannot branch from unknown/expired snapshot $snap")
-      require(!branches(spark, root).contains(name),
-        s"SpecManifest: branch '$name' already exists")
-      ManifestTable.swapRefPointer(root, s"$BranchesDir/$name",
-        s"$snap\t$snap\n")
-      snap
-    }
-  }
-
-  /** Drop a branch. Its head re-enters the keep-N horizon at the next
-    * commit (nothing is deleted here). */
-  def dropBranch(spark: SparkSession, root: String, name: String): Unit =
-    ManifestTable.withPublishLock(root) {
-      fsOf(spark, root).delete(
-        new HPath(root, s"$BranchesDir/${checkRefName(name)}"), false)
-    }
-
-  /** Commit to a BRANCH: leaf version dirs are STAGED (leaf pointers
-    * never move — live readers cannot see branch data), the snapshot
-    * file lands in the shared history, and only the branch pointer
-    * advances. Branch commits may touch EXISTING leaves only. */
+  /** Commit to a BRANCH ([[SnapshotLog]]'s write-audit-publish): leaf
+    * version dirs are STAGED (leaf pointers never move — live readers
+    * cannot see branch data) and only the branch pointer advances.
+    * Branch commits may touch EXISTING leaves only. */
   def commitSnapshotToBranch(spark: SparkSession, root: String,
       spec: PartitionSpec, updates: Map[Seq[String], DataFrame],
       branch: String, keepSnapshots: Int = 2): String = {
-    require(keepSnapshots >= 2, "keepSnapshots must be >= 2")
-    require(updates.nonEmpty, "branch commit needs updates")
     checkSpec(spark, root, spec)
-    ManifestTable.withPublishLock(root) {
-      val (head, base) = branches(spark, root).getOrElse(branch,
-        sys.error(s"SpecManifest: no branch '$branch'"))
-      val baseMapping = snapshotMapping(spark, root, head).toMap
-      val touchedPaths = updates.keys.toSeq.sortBy(_.mkString("/"))
-        .map(vs => vs -> leafPath(spec, vs))
-      val unknown = touchedPaths.collect {
-        case (_, lp) if !baseMapping.contains(lp) => lp }
-      require(unknown.isEmpty,
-        s"SpecManifest: branch commit may only touch existing leaves " +
-          s"(new: ${unknown.mkString(",")}) - create leaves on main first")
-      val fs = fsOf(spark, root)
-      val scratch =
-        s"$root/.branch-${java.util.UUID.randomUUID.toString.take(8)}"
-      val dataCols = updates.head._2.columns.toSeq
-        .filterNot(spec.names.contains)
-      updates.map { case (vs, df) =>
-        val d = spec.names.foldLeft(df)((x, n) =>
-          if (x.columns.contains(n)) x.drop(n) else x)
-        spec.fields.zip(vs).foldLeft(d.select(dataCols.map(col): _*)) {
-          case (x, (f, v)) => x.withColumn(f.name, lit(v))
-        }
-      }.reduce(_.unionByName(_))
-        .hint("rebalance", spec.names.map(col): _*)
-        .write.mode("error").partitionBy(spec.names: _*).parquet(scratch)
-      try {
-        val staged: Map[String, String] = touchedPaths.map {
-          case (vs, lp) =>
-            val src = new HPath(s"$scratch/$lp")
-            val dir =
-              if (fs.exists(src))
-                ManifestTable.stageVersion(s"$root/$lp", src.toString)
-              else {
-                // an all-empty leaf update still stages its empty version
-                val tmp = s"$root/$lp/.stage-" +
-                  java.util.UUID.randomUUID.toString.take(8)
-                updates(vs).select(dataCols.map(col): _*).limit(0)
-                  .write.parquet(tmp)
-                ManifestTable.stageVersion(s"$root/$lp", tmp)
-              }
-            lp -> new HPath(dir).getName
-        }.toMap
-        val snap = writeSnapshotLocked(spark, root,
-          (baseMapping ++ staged).toSeq.sortBy(_._1), keepSnapshots,
-          advanceRoot = false, operation = "branch-commit")
-        ManifestTable.swapRefPointer(root, s"$BranchesDir/$branch",
-          s"$snap\t$base\n")
-        snap
-      } finally fs.delete(new HPath(scratch), true)
-    }
+    val valuesOf = updates.keys.map(vs => leafPath(spec, vs) -> vs).toMap
+    commitToBranch(spark, root, branch, valuesOf.keys.toSeq, keepSnapshots,
+      identity, None,
+      () => {
+        val scratch = s"$root/.branch-${SnapshotLog.uuid8()}"
+        writeTagged(unionTagged(spec.names, updates).get, spec.names,
+          scratch)
+        scratch
+      },
+      lp => updates(valuesOf(lp)).select(updates.head._2.columns
+        .filterNot(spec.names.contains).map(col): _*).limit(0))
   }
 
-  /** PUBLISH a branch: fast-forward main to the branch head in one
-    * metadata operation (repoint the diverged leaves, swap the root
-    * pointer — the staged dirs simply become live). Fails loudly if
-    * main advanced since the fork (recreate + replay instead). After
-    * publishing, the branch is synced (base = head). */
+  /** PUBLISH a branch: fast-forward main to its head in one metadata
+    * operation (see [[SnapshotLog]]). */
   def fastForward(spark: SparkSession, root: String,
       spec: PartitionSpec, branch: String): String = {
     checkSpec(spark, root, spec)
-    ManifestTable.withPublishLock(root) {
-      val (head, base) = branches(spark, root).getOrElse(branch,
-        sys.error(s"SpecManifest: no branch '$branch'"))
-      val cur = currentSnapshot(spark, root).getOrElse(sys.error(
-        s"SpecManifest: no snapshot committed under $root"))
-      if (head == cur) head
-      else {
-        require(cur == base,
-          s"SpecManifest: main advanced since branch '$branch' forked " +
-            s"($base -> $cur) - a fast-forward would drop main's " +
-            "commits; recreate the branch from current and replay")
-        val fs = fsOf(spark, root)
-        snapshotMapping(spark, root, head).foreach { case (lp, d) =>
-          val pr = s"$root/$lp"
-          if (!ManifestTable.currentVersion(pr).contains(d)) {
-            require(fs.exists(new HPath(s"$pr/$d")),
-              s"SpecManifest: branch head dir $pr/$d is gone")
-            ManifestTable.repointVersion(pr, d)
-          }
-        }
-        ManifestTable.swapRootPointer(root, head, "fast-forward")
-        ManifestTable.swapRefPointer(root, s"$BranchesDir/$branch",
-          s"$head\t$head\n")
-        head
-      }
-    }
+    fastForwardBranch(spark, root, branch, identity)
   }
 
-  /** ROLLBACK to a kept snapshot (or tag): METADATA-ONLY — each leaf
-    * repoints at the target's (still-present, GC-protected) version
-    * dir and the restored mapping lands as a NEW forward commit, so
-    * history is append-only and CDC sees the restore as a diff.
-    * Leaves created after the target fail the rollback loudly
-    * (live-pointer readers would otherwise diverge from snapshot
-    * readers). Returns the new snapshot name. */
+  /** ROLLBACK to a kept snapshot or tag as a NEW forward commit,
+    * metadata-only (see [[SnapshotLog]]). The created-after guard spans
+    * EVERY spec generation: an old-generation leaf created between the
+    * target and a later evolution would otherwise escape it. */
   def rollback(spark: SparkSession, root: String, spec: PartitionSpec,
       toSnap: String, keepSnapshots: Int = 2): String = {
-    require(keepSnapshots >= 2, "keepSnapshots must be >= 2")
     checkSpec(spark, root, spec)
-    ManifestTable.withPublishLock(root) {
-      val snap = resolveRef(spark, root, Some(toSnap)).get
-      val target = snapshotMapping(spark, root, snap).toMap
-      require(target.nonEmpty, s"SpecManifest: empty rollback target $snap")
-      // guard across EVERY spec generation: an old-generation leaf
-      // created between the target and a later evolution would escape a
-      // current-spec-only check, restoring a mapping that omits it while
-      // its live pointer remains (exactly the live-pointer/snapshot
-      // divergence this require() exists to prevent)
-      val extra = allLeaves(spark, root)
-        .map { case (sp, vs) => leafPath(sp, vs) }
-        .filterNot(target.contains)
-      require(extra.isEmpty,
-        s"SpecManifest: leaves ${extra.mkString(",")} were created " +
-          s"after $snap - rollback cannot restore their absence for " +
-          "live-pointer readers; remove them first")
-      val fs = fsOf(spark, root)
-      target.toSeq.sortBy(_._1).foreach { case (lp, d) =>
-        val pr = s"$root/$lp"
-        if (!ManifestTable.currentVersion(pr).contains(d)) {
-          require(fs.exists(new HPath(s"$pr/$d")),
-            s"SpecManifest: rollback target dir $pr/$d is gone")
-          ManifestTable.repointVersion(pr, d)
-        }
-      }
-      writeSnapshotLocked(spark, root, target.toSeq.sortBy(_._1),
-        keepSnapshots, operation = "rollback")
-    }
+    rollbackTo(spark, root, toSnap, keepSnapshots, identity,
+      () => allLeafPaths(spark, root))
   }
 
-  /** AGE-BASED snapshot expiry —
-    * [[PartitionedManifest.expireSnapshots]] on the composite layout:
-    * metadata-only, O(#snapshots); newest `keepLast`, tags, and the
-    * current pointer always survive; leaf version GC stays lazy.
-    * Returns the expired names. */
-  def expireSnapshots(spark: SparkSession, root: String,
-      olderThanMs: Long, keepLast: Int = 2): Seq[String] = {
-    require(keepLast >= 2, "keepLast must be >= 2 (current + previous)")
-    ManifestTable.withPublishLock(root) {
-      val fs = fsOf(spark, root)
-      val all = snapshots(spark, root)
-      val protect = all.takeRight(keepLast).toSet ++
-        tags(spark, root).values ++
-        branches(spark, root).values.map(_._1) ++
-        currentSnapshot(spark, root)
-      val expired = all.filterNot(protect).filter { sn =>
-        committedMsOf(spark, root, sn).exists(_ < olderThanMs)
-      }
-      expired.foreach(sn =>
-        fs.delete(new HPath(root, s"$SnapDir/$sn"), false))
-      expired
-    }
-  }
-
-  /** ORPHAN cleanup — [[PartitionedManifest.cleanOrphans]] on the
-    * composite layout: under the root and every LEAF root, delete
-    * dot-prefixed scratch dirs (crashed lock-free writers) and version
-    * dirs no kept snapshot, MOR chain, or live pointer references,
-    * behind the same grace window. Returns the deleted paths. */
+  /** ORPHAN cleanup ([[SnapshotLog]]'s sweep) under the root and every
+    * LEAF root of EVERY spec generation: an evolved table's old-layout
+    * leaves still hold live data and can still strand scratch and
+    * unreferenced version dirs. Returns the deleted paths. */
   def cleanOrphans(spark: SparkSession, root: String,
       spec: PartitionSpec, graceMs: Long = 24L * 3600 * 1000)
-      : Seq[String] = ManifestTable.withPublishLock(root) {
+      : Seq[String] = {
     checkSpec(spark, root, spec)
-    val fs = fsOf(spark, root)
-    val cutoff = System.currentTimeMillis() - graceMs
-    // the sweep set spans EVERY spec generation: on an evolved table,
-    // old-generation leaves (e.g. y=…/b=… after evolving to b8) still
-    // hold live data and can still strand .mor-*/.fold-* scratch and
-    // unreferenced version dirs — a current-spec-only enumeration would
-    // leak them forever
-    val sweepLeaves = allLeaves(spark, root)
-      .map { case (sp, vs) => leafPath(sp, vs) }.distinct
-    val referencedByLeaf: Map[String, Set[String]] = {
-      val fromSnaps = snapshots(spark, root)
-        .flatMap(sn => snapshotMapping(spark, root, sn))
-      val fromPointers = sweepLeaves.flatMap { lp =>
-        ManifestTable.currentVersion(s"$root/$lp").map(lp -> _)
-      }
-      (fromSnaps ++ fromPointers).groupBy(_._1).map { case (lp, ds) =>
-        lp -> ds.map(_._2).toSet }
-    }
-    val deleted = scala.collection.mutable.ListBuffer.empty[String]
-    fs.listStatus(new HPath(root)).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith(".") &&
-          st.getModificationTime < cutoff) {
-        fs.delete(st.getPath, true)
-        deleted += st.getPath.toString
-      }
-    }
-    sweepLeaves.foreach { lp =>
-      val pr = s"$root/$lp"
-      val referenced = PartitionedManifest.expandMorProtect(spark, pr,
-        referencedByLeaf.getOrElse(lp, Set.empty))
-      fs.listStatus(new HPath(pr)).foreach { st =>
-        val name = st.getPath.getName
-        val stale = st.getModificationTime < cutoff
-        if (st.isDirectory && stale &&
-            (name.startsWith(".") ||
-              (name.startsWith("v") && name.drop(1).headOption
-                .exists(_.isDigit) && !referenced.contains(name)))) {
-          fs.delete(st.getPath, true)
-          deleted += st.getPath.toString
-        }
-      }
-    }
-    deleted.sorted.toSeq
+    sweepOrphans(spark, root, graceMs, identity,
+      () => allLeafPaths(spark, root))
   }
+
+  private def allLeafPaths(spark: SparkSession, root: String): Seq[String] =
+    allLeaves(spark, root).map { case (sp, vs) => leafPath(sp, vs) }.distinct
 
   private def hash8(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -1194,10 +768,10 @@ object SpecManifest {
     require(touched.nonEmpty, "commitMerge needs upserts or deletes")
     val fs = fsOf(spark, root)
     // ---- LOCK-FREE phase: validate optimistically, stage the delta --
-    val snap0 = Dbg.t("cm.snap0")(currentSnapshot(spark, root)).getOrElse(sys.error(
+    val snap0 = currentSnapshot(spark, root).getOrElse(sys.error(
       s"SpecManifest: commitMerge needs a committed snapshot under " +
         s"$root - seed first"))
-    val base0 = Dbg.t("cm.mapping")(snapshotMapping(spark, root, snap0)).toMap
+    val base0 = snapshotMapping(spark, root, snap0).toMap
     val touchedPaths = touched.map(vs => vs -> leafPath(spec, vs))
     val unknown0 = touchedPaths.collect {
       case (_, lp) if !base0.contains(lp) => lp }
@@ -1215,10 +789,10 @@ object SpecManifest {
         PartitionedManifest.morChain(spark, s"$root/$lp", live).last
       PartitionedManifest.footerSchema(spark, s"$root/$lp/$bottom")
     }
-    val schema = Dbg.t("cm.bottomSchema0")(bottomSchema(touchedPaths.head._2,
-      base0(touchedPaths.head._2)))
+    val schema = bottomSchema(touchedPaths.head._2,
+      base0(touchedPaths.head._2))
     // independent per-leaf footer reads (~25 ms each) — overlap them
-    Dbg.t("cm.bottomSchemaRest")(Par.map(touchedPaths.tail) { case (_, lp) =>
+    Par.map(touchedPaths.tail) { case (_, lp) =>
       val sc = bottomSchema(lp, base0(lp))
       require(sc.map(f => (f.name, f.dataType)) ==
           schema.map(f => (f.name, f.dataType)),
@@ -1228,7 +802,7 @@ object SpecManifest {
           s"(${schema.fieldNames.mkString(",")}) - mixed-shape " +
           "leaves cannot share one delta; rewrite the stale leaves " +
           "first (copy-on-write DML does this automatically)")
-    })
+    }
     keyCols.foreach(k => require(schema.fieldNames.contains(k),
       s"commitMerge: unknown key column '$k'"))
     def dataOnly(df: DataFrame): DataFrame =
@@ -1299,14 +873,14 @@ object SpecManifest {
     // different scratch roots) — submit both so the second's tasks
     // back-fill cores freed by the first's tail (guide §2.6)
     val Seq(scratchUp, scratchDel) = Par.map(Seq(
-      ("cm.scratchUp", upAll, "up"), ("cm.scratchDel", delAll, "del"))) {
-      case (tag, df, what) => Dbg.t(tag)(scratchWrite(df, what))
+      (upAll, "up"), (delAll, "del"))) {
+      case (df, what) => scratchWrite(df, what)
     }
     // the up/del disjointness contract checks against the WRITTEN
     // scratches (explicit schema, so an all-empty side still reads):
     // one cheap scan of materialized delta bytes instead of
     // re-evaluating both tagged unions a second time
-    for (us <- scratchUp; ds <- scratchDel) Dbg.t("cm.overlap") {
+    for (us <- scratchUp; ds <- scratchDel) {
       val u = spark.read.schema(upAll.get.schema).parquet(us)
       val d = spark.read.schema(delAll.get.schema).parquet(ds)
       val overlap = u.select((keyCols :+ Tag).map(col): _*)
@@ -1351,7 +925,7 @@ object SpecManifest {
       try fs.delete(new HPath(st), true)
       catch { case _: java.io.IOException => () }
     }
-    try Dbg.t("cm.locked")(ManifestTable.withPublishLock(root) {
+    try ManifestTable.withPublishLock(root) {
       val snap = currentSnapshot(spark, root).get
       val base = snapshotMapping(spark, root, snap).toMap
       val unknown = staged.collect {
@@ -1373,7 +947,7 @@ object SpecManifest {
           s"commitMerge: leaf $lp's schema evolved while the delta " +
             "was staging - restage against the current schema")
       }
-      val protectByLeaf = protectedDirsByLeaf(spark, root, keepSnapshots)
+      val protectByLeaf = protectedDirsByKey(spark, root, keepSnapshots)
       val written: Map[String, String] = Par.map(staged) { case (lp, stage) =>
         val pr = s"$root/$lp"
         val baseDir = ManifestTable.currentVersion(pr).getOrElse(
@@ -1395,7 +969,7 @@ object SpecManifest {
       writeSnapshotLocked(spark, root,
         (base ++ written).toSeq.sortBy(_._1), keepSnapshots,
         operation = "merge")
-    }) catch {
+    } catch {
       case e: Throwable => dropStaged(); throw e
     }
   }
@@ -1415,8 +989,7 @@ object SpecManifest {
     // every generation's leaves: an evolved table's old-layout leaves
     // hold live data too — skipping them would leave zone maps
     // uncollected there while the returned count suggests full coverage
-    allLeaves(spark, root).map { case (sp, vs) =>
-      val lp = leafPath(sp, vs)
+    allLeafPaths(spark, root).map { lp =>
       val dir = ManifestTable.currentDataDir(s"$root/$lp").getOrElse(
         sys.error(s"SpecManifest: no MANIFEST under $root/$lp"))
       require(!PartitionedManifest.isMorDir(spark, dir),
@@ -1426,56 +999,26 @@ object SpecManifest {
     }.sum
   }
 
-  /** AS-OF time travel: the LATEST kept snapshot committed at or
-    * before `tsMs` ([[PartitionedManifest.snapshotAsOf]] on the
-    * composite layout); compose with [[read]]'s snapshot parameter.
-    * None if every kept snapshot is newer (the retention horizon has
-    * moved past the asked instant — never silently serves younger
-    * data). */
-  def snapshotAsOf(spark: SparkSession, root: String,
-      tsMs: Long): Option[String] =
-    snapshots(spark, root).reverse.find(sn =>
-      committedMsOf(spark, root, sn).exists(_ <= tsMs))
-
-  /** A snapshot's commit wall-clock from its #committed_ms header. */
-  def committedMsOf(spark: SparkSession, root: String,
-      snap: String): Option[Long] = {
-    val fs = fsOf(spark, root)
-    val in = fs.open(new HPath(s"$root/$SnapDir/$snap"))
-    val text = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    text.linesIterator.find(_.startsWith("#committed_ms="))
-      .map(_.stripPrefix("#committed_ms=").trim.toLong)
-  }
-
-  /** FILE-LEVEL metadata table —
-    * [[PartitionedManifest.filesMetadata]] on the composite layout:
-    * one row per data file in a snapshot (default current), partition
-    * = the leaf's relative path. Listings + sidecars only, zero data
-    * bytes. */
+  /** FILE inspection table of a snapshot (see [[SnapshotLog]]);
+    * `partition` is the leaf path. */
   def filesMetadata(spark: SparkSession, root: String,
       spec: PartitionSpec, snapshot: Option[String] = None): DataFrame = {
-    import spark.implicits._
     checkSpec(spark, root, spec)
-    val snap = snapshot.orElse(currentSnapshot(spark, root)).getOrElse(
-      sys.error(s"SpecManifest: no snapshot committed under $root"))
-    snapshotMapping(spark, root, snap).flatMap { case (lp, d) =>
-      PartitionedManifest.filesOfVersion(spark, s"$root/$lp/$d", lp, d)
-    }.toDF()
+    filesMetadataOf(spark, root, snapshot, identity)
   }
 
-  /** SNAPSHOT inspection table — the snapshot-file layout is shared
-    * with the single-column format, so this delegates to
-    * [[PartitionedManifest.snapshotsMetadata]] (entries = leaf
-    * count). */
-  def snapshotsMetadata(spark: SparkSession, root: String): DataFrame =
-    PartitionedManifest.snapshotsMetadata(spark, root)
-
-  /** HISTORY inspection table — every root pointer movement incl.
-    * rollbacks and fast-forwards; delegates to
-    * [[PartitionedManifest.historyMetadata]]. */
-  def historyMetadata(spark: SparkSession, root: String): DataFrame =
-    PartitionedManifest.historyMetadata(spark, root)
+  /** The validated tail of an optimistic leaf rewrite: repoint each
+    * clean leaf at its staged dir and commit the current mapping with
+    * them replaced. Caller holds the root publish lock. */
+  private def commitRepointedLocked(spark: SparkSession, root: String,
+      staged: Map[String, String], keepSnapshots: Int,
+      operation: String): String = {
+    staged.foreach { case (lp, d) =>
+      ManifestTable.repointVersion(s"$root/$lp", d) }
+    val base = snapshotMapping(spark, root, currentSnapshot(spark, root).get)
+    writeSnapshotLocked(spark, root, (base.toMap ++ staged).toSeq.sortBy(_._1),
+      keepSnapshots, operation = operation)
+  }
 
   /** Fold every merge-on-read leaf back down to a pure data dir — the
     * spec table's compaction pass, OPTIMISTIC like
@@ -1532,14 +1075,9 @@ object SpecManifest {
               ManifestTable.currentVersion(s"$root/$lp").contains(d)
             }
             if (clean.nonEmpty) {
-              clean.keys.foreach(lp =>
-                ManifestTable.repointVersion(s"$root/$lp", st(lp)))
-              val snap = currentSnapshot(spark, root).get
-              val base = snapshotMapping(spark, root, snap).toMap
-              lastSnap = Some(writeSnapshotLocked(spark, root,
-                (base ++ clean.keys.map(lp => lp -> st(lp))).toSeq
-                  .sortBy(_._1), keepSnapshots,
-                operation = "compact"))
+              lastSnap = Some(commitRepointedLocked(spark, root,
+                clean.keys.map(lp => lp -> st(lp)).toMap, keepSnapshots,
+                "compact"))
               done ++= clean.keys
             }
             // staged dirs for invalidated leaves are orphans: drop them
@@ -1686,14 +1224,9 @@ object SpecManifest {
               ManifestTable.currentVersion(s"$root/$lp").contains(d)
             }
             if (clean.nonEmpty) {
-              clean.keys.foreach(lp =>
-                ManifestTable.repointVersion(s"$root/$lp", st(lp)))
-              val snap = currentSnapshot(spark, root).get
-              val base = snapshotMapping(spark, root, snap).toMap
-              lastSnap = Some(writeSnapshotLocked(spark, root,
-                (base ++ clean.keys.map(lp => lp -> st(lp))).toSeq
-                  .sortBy(_._1), keepSnapshots,
-                operation = "rewrite_layout"))
+              lastSnap = Some(commitRepointedLocked(spark, root,
+                clean.keys.map(lp => lp -> st(lp)).toMap, keepSnapshots,
+                "rewrite_layout"))
               done ++= clean.keys
             }
             dirty.keys.foreach(lp =>

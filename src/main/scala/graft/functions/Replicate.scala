@@ -13,8 +13,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * multiplicity is in the millions (duplicates are legal: plain INSERT
   * enforces nothing) allocates a multi-megabyte array per row and can
   * OOM where a streaming generator cannot. This generator yields one
-  * tiny row at a time, the same posture as Spark's own ReplicateRows
-  * lowering of exceptAll. `n <= 0` (or NULL) emits nothing. */
+  * tiny row at a time. Catalyst's own ReplicateRows (the generator
+  * `exceptAll` lowers to) is no substitute: its `eval` returns
+  * `Range.Long(0, n, 1).map(...)`, a strict map that builds all `n`
+  * output rows before the first is emitted, so swapping to it would
+  * bring back exactly the per-row allocation this generator removes.
+  * `n <= 0` (or NULL) emits nothing. */
 case class ReplicateN(child: Expression)
     extends UnaryExpression with Generator with CodegenFallback {
   override def elementSchema: StructType =

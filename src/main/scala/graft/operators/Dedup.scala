@@ -36,18 +36,6 @@ object Dedup {
       ColumnBridge.expression(tokens(text)), w))
   }
 
-  /** numPerm-wide MinHash signature in ONE pass over the shingles:
-    * each shingle hashed once (md5-derived, SQL-reproducible —
-    * SimHashFns.tokenHash), then numPerm multiply-shift
-    * permutations π_p(h) = a_p·h + b_p, sig[p] = min over shingles.
-    *
-    * Implemented as the native codegen'd [[graft.functions.MinHashSig]]
-    * expression — the interpreted `aggregate`/`zip_with` formulation
-    * allocated a boxed 64-wide array per shingle and measured 7.3 s of
-    * d02's 7.5 s at sf0.1; the JVM perm loop is negligible. */
-  def minhashSignature(sh: Column, numPerm: Int): Column =
-    graft.functions.MinHash.minhashSig(sh, numPerm)
-
   /** LSH band keys: split the signature into `bands` rows-per-band groups;
     * key = xxhash64 of the band's slice + band index. Docs sharing ANY
     * band key become candidate pairs. */

@@ -628,7 +628,7 @@ class GraftMetaTable(tableName: String, val kind: String,
 object GraftMetaTable {
   val Kinds = Set("files", "snapshots", "history")
   import org.apache.spark.sql.Encoders
-  import graft.engine.PartitionedManifest.{FileMeta, HistoryMeta, SnapshotMeta}
+  import graft.engine.SnapshotLog.{FileMeta, HistoryMeta, SnapshotMeta}
   private[sql] def schemaOf(kind: String): StructType = kind match {
     case "files" => Encoders.product[FileMeta].schema
     case "snapshots" => Encoders.product[SnapshotMeta].schema

@@ -440,10 +440,9 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
 
   private def runOnce(spark: SparkSession): Seq[Row] = {
     import GraftDml._
-    import graft.engine.{Dbg, Par}
+    import graft.engine.Par
     val base0 = SpecManifest.currentSnapshot(spark, table.root)
-    val srcDf = Dbg.t("mg.src")(
-      ColumnBridge.ofRows(spark, source).localCheckpoint())
+    val srcDf = ColumnBridge.ofRows(spark, source).localCheckpoint()
     val srcMap = attrMap(source.output, srcDf)
     val targetIds = targetOutput.map(_.exprId).toSet
     val sourceIds = source.output.map(_.exprId).toSet
@@ -614,9 +613,8 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
     val Seq(taggedMOpt, taggedNOpt) = Par.map(Seq[() => Option[DataFrame]](
       () =>
         if (matched.isEmpty) None
-        else Some(Dbg.t("mg.matched")(
-          tagClauses(tgt.join(srcMaybeB, onCond, "inner"),
-            matched, both).localCheckpoint())),
+        else Some(tagClauses(tgt.join(srcMaybeB, onCond, "inner"),
+          matched, both).localCheckpoint()),
       () =>
         if (notMatchedBySource.isEmpty || !hasSnapshot) None
         else {
@@ -631,9 +629,8 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
                 org.apache.spark.sql.functions.broadcast(srcKeys)
               else srcKeys, antiCond, "left_anti")
             } else tgt.join(srcMaybeB, onCond, "left_anti")
-          Some(Dbg.t("mg.bySource")(
-            tagClauses(anti, notMatchedBySource, tgtMap)
-              .localCheckpoint()))
+          Some(tagClauses(anti, notMatchedBySource, tgtMap)
+            .localCheckpoint())
         }))(_.apply())
     val (remM, delM, updM):
         (Option[DataFrame], Option[DataFrame], Seq[DataFrame]) =
@@ -727,7 +724,7 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
         // would eagerly materialize the insert anti-join's stages),
         // no shuffle, and the bound is the cluster-sized session conf
         val u = u0.coalesce(spark.sessionState.conf.numShufflePartitions)
-        Dbg.t("mg.affected")(u.localCheckpoint())
+        u.localCheckpoint()
       }
     val removed: Option[DataFrame] = remLazy.flatMap(_ =>
       affectedAll.map(_.filter(col(SideCol) === "r").drop(SideCol)))
@@ -738,7 +735,7 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
     val someKeyNull = tKeys.map(col(_).isNull)
       .reduceOption(_ || _).getOrElse(lit(false))
     val (touched: Seq[Seq[String]], anyNullKey: Boolean) =
-      Dbg.t("mg.touched")(affectedAll match {
+      affectedAll match {
         case None => (Seq.empty[Seq[String]], false)
         case Some(df) =>
           val tagged = spec.fields.foldLeft(df)((d, f) =>
@@ -748,7 +745,7 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
               .as("_graft_nullkey")).collect()
           (agg.toSeq.map(r => spec.names.indices.map(r.getString)),
             agg.exists(_.getBoolean(spec.names.length)))
-      })
+      }
     if (touched.isEmpty) return Seq.empty
     // ---- MERGE-ON-READ fast path: the whole MERGE lands as key-
     // merged DELTAS in one atomic commitMerge — bytes written scale
@@ -803,8 +800,7 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
     // the residual) — a keyed upsert delta would silently REPLACE that
     // row; only the copy-on-write route adds alongside it
     val insertsKeySafe = residual.isEmpty || inserted.isEmpty
-    val existing = Dbg.t("mg.leafKeys")(
-      SpecManifest.leafKeys(spark, table.root, spec).toSet)
+    val existing = SpecManifest.leafKeys(spark, table.root, spec).toSet
     // files (and so delta chains) spell RENAMED columns physically
     val physSchema = GraftSchemas.physicalSchema(table.dataSchema)
     def physOf(logical: String): String =
@@ -812,17 +808,17 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
     val tKeysPhys = tKeys.map(physOf)
     // per-leaf chain/footer inspections are independent ~25 ms driver
     // reads — overlap them (guide §2.6)
-    val chainsOk = Dbg.t("mg.chainsOk")(Par.map(touched)(vs =>
+    val chainsOk = Par.map(touched)(vs =>
       SpecManifest.leafChainKeys(spark, table.root, spec, vs)
-        .forall(_ == tKeysPhys)).forall(identity))
+        .forall(_ == tKeysPhys)).forall(identity)
     // a leaf whose physical schema predates a catalog ALTER cannot
     // take catalog-shaped deltas — copy-on-write rewrites it instead
-    val schemasOk = Dbg.t("mg.schemasOk")(Par.map(touched)(vs =>
+    val schemasOk = Par.map(touched)(vs =>
       !existing.contains(vs) ||
         SpecManifest.leafBottomSchema(spark, table.root, spec, vs)
           .map(f => (f.name, f.dataType)) ==
           physSchema.map(f => (f.name, f.dataType)).toSeq)
-      .forall(identity))
+      .forall(identity)
     // DUPLICATE keys break merge-on-read resolution, which is keyed:
     // base-row removal is a key anti-join (it would drop EVERY row
     // sharing an affected key, affected or not) and chain resolution

@@ -184,10 +184,8 @@ class CdcSource(ctx: SQLContext, parameters: Map[String, String])
   /** Snapshot name at a generation. Fails LOUDLY when the generation is
     * past the keep-N horizon — a lagging stream must never silently
     * skip commits (re-bootstrap explicitly instead). */
-  private def allSnapshots(): Seq[String] = specOpt match {
-    case Some(_) => SpecManifest.snapshots(spark, root)
-    case None => PartitionedManifest.snapshots(spark, root)
-  }
+  private def allSnapshots(): Seq[String] =
+    PartitionedManifest.snapshots(spark, root) // either layout: one log
 
   private def snapAt(gen: Long): String =
     allSnapshots()
@@ -199,18 +197,12 @@ class CdcSource(ctx: SQLContext, parameters: Map[String, String])
 
   override def getOffset: Option[Offset] = (ref match {
     case Some(r) =>
-      val resolved = specOpt match {
-        case Some(_) => SpecManifest.resolveRef(spark, root, Some(r))
-        case None => PartitionedManifest.resolveRef(spark, root, Some(r))
-      }
+      val resolved = PartitionedManifest.resolveRef(spark, root, Some(r))
       require(resolved.exists(allSnapshots().contains),
         s"graft-cdc: ref '$r' does not resolve to a known snapshot " +
           s"of $root")
       resolved
-    case None => specOpt match {
-      case Some(_) => SpecManifest.currentSnapshot(spark, root)
-      case None => PartitionedManifest.currentSnapshot(spark, root)
-    }
+    case None => PartitionedManifest.currentSnapshot(spark, root)
   }).map(sn => LongOffset(CdcSource.genOf(sn)))
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {

@@ -76,15 +76,9 @@ class SpecTableSink(ctx: SQLContext, parameters: Map[String, String])
   }
   private val catalogNamed = parameters.contains("table")
   private val keyCol = opt("keyCol")
-  private val sinkId = {
-    val id = parameters.getOrElse("sinkId", "default")
-    require(id.nonEmpty && id.length <= 128 && id.forall(c =>
-      c.isLetterOrDigit || c == '.' || c == '_' || c == '-') &&
-      !id.startsWith("."),
-      s"graft-spec-table: unsupported sinkId '$id' - letters, digits, " +
-        "'.', '_', '-' only")
-    id
-  }
+  // the id lands in a ref PATH under the table root: a ref name
+  private val sinkId = SpecManifest.checkRefName(
+    parameters.getOrElse("sinkId", "default"))
   /** Explicit option wins; a catalog-NAMED sink otherwise honors the
     * table's `graft.keep_snapshots` property (the retention a CDC
     * consumer of the same table relies on). */
@@ -93,24 +87,10 @@ class SpecTableSink(ctx: SQLContext, parameters: Map[String, String])
     else 2)
   private val mergeOnRead =
     parameters.getOrElse("mergeOnRead", "false").toBoolean
-  private val batchRef = s"_refs_stream/$sinkId"
-
-  private def lastBatch(): Long = {
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      ctx.sparkSession.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(root, batchRef)
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      finally in.close()
-    }
-  }
-
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    if (batchId <= lastBatch()) return // replayed batch: already committed
     val spark = ctx.sparkSession
+    // replayed batch: already committed
+    if (batchId <= SpecManifest.lastStreamBatch(spark, root, sinkId)) return
     val raw = org.apache.spark.sql.graft.ColumnBridge
       .asBatchDataFrame(spark, data)
     // a catalog-named sink aligns each batch to the table's CURRENT
@@ -193,8 +173,8 @@ class SpecTableSink(ctx: SQLContext, parameters: Map[String, String])
           keepSnapshots)
       }
     }
-    // advance the batch ref AFTER the commit (see TableSink)
-    ManifestTable.swapRefPointer(root, batchRef, batchId.toString + "\n")
+    // AFTER the commit (see SnapshotLog.recordStreamBatch)
+    SpecManifest.recordStreamBatch(root, sinkId, batchId)
   }
 
   override def toString: String = s"GraftSpecTableSink($root)"

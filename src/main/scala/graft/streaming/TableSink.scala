@@ -53,17 +53,9 @@ class TableSink(ctx: SQLContext, parameters: Map[String, String])
   private val root = opt("root")
   private val partCol = opt("partCol")
   private val keyCol = opt("keyCol")
-  private val sinkId = {
-    val id = parameters.getOrElse("sinkId", "default")
-    // the id lands in a ref PATH under the table root — same charset
-    // contract as tag/branch names (no separators, no traversal)
-    require(id.nonEmpty && id.length <= 128 && id.forall(c =>
-      c.isLetterOrDigit || c == '.' || c == '_' || c == '-') &&
-      !id.startsWith("."),
-      s"graft-table: unsupported sinkId '$id' - letters, digits, " +
-        "'.', '_', '-' only")
-    id
-  }
+  // the id lands in a ref PATH under the table root: a ref name
+  private val sinkId = PartitionedManifest.checkRefName(
+    parameters.getOrElse("sinkId", "default"))
   private val keepSnapshots =
     parameters.getOrElse("keepSnapshots", "2").toInt
   // merge-on-read mode: each micro-batch lands as ONE commitMerge —
@@ -75,24 +67,11 @@ class TableSink(ctx: SQLContext, parameters: Map[String, String])
   // batch (MOR can only layer on existing partitions).
   private val mergeOnRead =
     parameters.getOrElse("mergeOnRead", "false").toBoolean
-  private val batchRef = s"_refs_stream/$sinkId"
-
-  private def lastBatch(): Long = {
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      ctx.sparkSession.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(root, batchRef)
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      finally in.close()
-    }
-  }
-
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    if (batchId <= lastBatch()) return // replayed batch: already committed
     val spark = ctx.sparkSession
+    // replayed batch: already committed
+    if (batchId <= PartitionedManifest.lastStreamBatch(spark, root, sinkId))
+      return
     // the incoming DataFrame is streaming-tagged (V1 Sink contract) —
     // re-present it as a batch plan over the same incremental
     // execution (the MemorySink pattern), then freeze it once: it is
@@ -137,10 +116,8 @@ class TableSink(ctx: SQLContext, parameters: Map[String, String])
           keepSnapshots)
       }
     }
-    // advance the batch ref AFTER the commit: a crash in between makes
-    // the replay re-run the (idempotent, key-merged) commit; a crash
-    // after makes it a clean skip — either way one logical outcome
-    ManifestTable.swapRefPointer(root, batchRef, batchId.toString + "\n")
+    // AFTER the commit (see SnapshotLog.recordStreamBatch)
+    PartitionedManifest.recordStreamBatch(root, sinkId, batchId)
   }
 
   override def toString: String = s"GraftTableSink($root)"

@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Add, EvalMode, Expression, Multiply}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into Spark's package-private Column ↔ Expression conversions.
@@ -73,13 +73,6 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.catalogManager.catalog(name)
 
-  /** Wrapping (2-complement) long arithmetic for hash mixing — ANSI mode
-    * (Spark 4 default) makes `*`/`+` throw on overflow, but universal
-    * hashing WANTS modular wraparound. */
-  def wrapMul(a: Column, b: Column): Column =
-    column(Multiply(expression(a), expression(b), EvalMode.LEGACY))
-  def wrapAdd(a: Column, b: Column): Column =
-    column(Add(expression(a), expression(b), EvalMode.LEGACY))
 }
 
 /** V2 partition-transform bridge: the connector transform case classes

@@ -1599,6 +1599,23 @@ class EngineSpec extends AnyFunSuite {
     assert(np.getMessage.contains("existing"), np.getMessage)
   }
 
+  test("dropBranch validates the ref name: '../MANIFEST' cannot step out " +
+      "of _branches/ and delete the table's root pointer") {
+    val root = Files.createTempDirectory("graft-refescape").toString
+    import spark.implicits._
+    import graft.engine.PartitionedManifest
+    PartitionedManifest.seed(spark, root,
+      (0 until 4).map(i => (i.toLong, i % 2)).toDF("i", "bk"), "bk")
+    val s1 = PartitionedManifest.commitSnapshot(spark, root, "bk", Map.empty)
+    val manifest = java.nio.file.Paths.get(root, "MANIFEST")
+    assert(Files.exists(manifest))
+    intercept[IllegalArgumentException] {
+      PartitionedManifest.dropBranch(spark, root, "../MANIFEST")
+    }
+    assert(Files.exists(manifest), "the root MANIFEST must survive")
+    assert(PartitionedManifest.currentSnapshot(spark, root).contains(s1))
+  }
+
   test("racing main and branch committers serialize safely: both land, " +
       "main never sees staged data, the branch never loses its head") {
     val root = Files.createTempDirectory("graft-race-br").toString
@@ -2873,6 +2890,46 @@ class EngineSpec extends AnyFunSuite {
     assert(hm2.map(_.action) === Array("commit", "fast-forward"),
       s"spec history: ${hm2.map(_.action).toSeq}")
     assert(hm2.last.snapshot == head && hm2.last.isCurrent)
+    // ON-DISK FORMAT of the shared snapshot log, pinned on both layouts
+    // after a commit, a tag, a branch commit and a rollback: header
+    // order, keys (`v` vs `g=…`), `_refs/<tag>` = `snap\n`,
+    // `_branches/<b>` = `head<TAB>base\n`; only the single-column
+    // layout records `#schema`
+    def text(r: String, rel: String): String =
+      new String(Files.readAllBytes(java.nio.file.Paths.get(r, rel)),
+        java.nio.charset.StandardCharsets.UTF_8)
+    def headerKeys(r: String, sn: String): Seq[String] =
+      text(r, s"_snapshots/$sn").linesIterator.filter(_.startsWith("#"))
+        .map(_.takeWhile(_ != '=')).toSeq
+    PartitionedManifest.createBranch(spark, root, "wap")
+    val pmBranch = PartitionedManifest.commitSnapshotToBranch(spark, root,
+      "bk", Map("0" -> Seq((7L, 7.0)).toDF("k", "v")), "wap",
+      keepSnapshots = 10)
+    SpecManifest.tagSnapshot(spark, r2, "t2")
+    val specBase = SpecManifest.currentSnapshot(spark, r2).get
+    SpecManifest.createBranch(spark, r2, "wap")
+    val specBranch = SpecManifest.commitSnapshotToBranch(spark, r2, spec,
+      Map(Seq("a") -> Seq((200L, "a")).toDF("k", "grp")), "wap",
+      keepSnapshots = 10)
+    val specRb = SpecManifest.rollback(spark, r2, spec, "t2",
+      keepSnapshots = 10)
+    assert(headerKeys(root, s1) ===
+      Seq("#committed_ms", "#operation", "#schema"))
+    Seq(s5, pmBranch).foreach(sn => assert(headerKeys(root, sn) ===
+      Seq("#committed_ms", "#operation", "#parent", "#schema"), sn))
+    Seq(specBranch, specRb).foreach(sn => assert(headerKeys(r2, sn) ===
+      Seq("#committed_ms", "#operation", "#parent"), sn))
+    assert(text(root, s"_snapshots/$s5").contains("#operation=rollback\n"))
+    assert(PartitionedManifest.snapshotMapping(spark, root, s5)
+      .map(_._1) === Seq("0", "1"))
+    assert(SpecManifest.snapshotMapping(spark, r2, specRb)
+      .map(_._1) === Seq("g=a"))
+    assert(text(root, s"_snapshots/$pmBranch").linesIterator
+      .filterNot(_.startsWith("#")).forall(_.matches("[01]\tv\\d{6}-.*")))
+    assert(text(root, "_refs/t") == sm(2).snapshot + "\n")
+    assert(text(r2, "_refs/t2") == specBase + "\n")
+    assert(text(root, "_branches/wap") == s"$pmBranch\t$s5\n")
+    assert(text(r2, "_branches/wap") == s"$specBranch\t$specBase\n")
   }
 
   test("a delta chain refuses a differently-keyed merge: resolution " +
