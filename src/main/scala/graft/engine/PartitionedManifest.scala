@@ -39,33 +39,10 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * catalog resolve the per-partition pointer files directly via
   * [[read]], served through one content-pinned partitioned relation.
   */
-object PartitionedManifest extends SnapshotLog {
+object PartitionedManifest extends MergeOnRead {
 
-  /** A layout action (clustered OPTIMIZE) was asked to do something it
-    * can never succeed at — distinguished from the transient failures
-    * [[compact]]'s optimistic retry loop absorbs, so a misconfigured
-    * z-order column fails LOUDLY instead of silently no-opping through
-    * three retries. */
-  final class LayoutValidationException(msg: String)
-    extends IllegalArgumentException(msg)
-
-  /** Parquet footer schema of an IMMUTABLE version directory,
-    * memoized process-wide. Version dirs are write-once: uuid-named,
-    * adopted by a single rename, never mutated afterwards (the
-    * underscore sidecars later writes add are reader-invisible), so
-    * the footer can never change and repeated commits / reads /
-    * DML-eligibility gates stop re-paying the ~25-90 ms listing +
-    * footer job each inspection costs (guide §1.2: don't re-compute
-    * what you throw away). Bounded: cleared wholesale past 8192
-    * entries (schemas are tiny; the bound is paranoia, not need). */
-  private val footerSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-  private[graft] def footerSchema(spark: SparkSession, dir: String)
-      : StructType = {
-    if (footerSchemaCache.size > 8192) footerSchemaCache.clear()
-    footerSchemaCache.computeIfAbsent(dir,
-      d => spark.read.parquet(d).schema)
-  }
+  /** See [[MergeOnRead.LayoutValidationException]]. */
+  type LayoutValidationException = MergeOnRead.LayoutValidationException
 
   /** One Spark job writes `df` hive-partitioned by `partCol` into a
     * scratch dir; each partition directory is then ADOPTED (one rename,
@@ -192,10 +169,10 @@ object PartitionedManifest extends SnapshotLog {
   }
 
   /** Serve a resolved mapping, routing merge-on-read partitions through
-    * [[resolveVersionData]] and everything else through the content-
+    * [[resolveMorGrouped]] and everything else through the content-
     * pinned catalog relation: the common all-pure case keeps its ONE
-    * plan node; MOR partitions (bounded by compaction cadence) each
-    * compose base ∪ delta and union on top. */
+    * plan node; MOR partitions (bounded by compaction cadence) compose
+    * base ∪ delta and union on top. */
   private def serveResolved(spark: SparkSession, root: String,
       partCol: String, partType: String, dirs: Seq[(String, String)],
       schema: Option[StructType]): DataFrame = {
@@ -217,11 +194,6 @@ object PartitionedManifest extends SnapshotLog {
     (pureDf.toSeq ++ morDf.toSeq).reduce(_.unionByName(_))
   }
 
-  private def hash8(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(8)
-
   /** Pin names are content hashes of (mapping, schema): the SAME dirs
     * under an evolved schema (a metadata-only dropColumn) must serve
     * through a DIFFERENT pin, or the stale relation's columns would
@@ -229,9 +201,9 @@ object PartitionedManifest extends SnapshotLog {
     * pre-evolution names. */
   private def pinTableName(root: String, dirs: Seq[(String, String)],
       schema: Option[StructType] = None): String =
-    s"graft_pm_${hash8(root)}_" +
-      hash8(dirs.sortBy(_._1).map { case (v, d) => s"$v\t$d" }.mkString("\n")
-        + schema.map(s => "\n#schema=" + s.json).getOrElse(""))
+    s"graft_pm_${SnapshotLog.hash8(root)}_" + SnapshotLog.hash8(
+      dirs.sortBy(_._1).map { case (v, d) => s"$v\t$d" }.mkString("\n") +
+        schema.map(s => "\n#schema=" + s.json).getOrElse(""))
 
   /** Serve a RESOLVED (partition value → absolute version dir) mapping
     * through one partitioned catalog relation whose name is a CONTENT
@@ -271,7 +243,7 @@ object PartitionedManifest extends SnapshotLog {
     * full-mapping pin and the pure-subset pin count as valid. */
   private def gcStalePins(spark: SparkSession, root: String,
       partCol: String, keep: Set[String] = Set.empty): Unit = {
-    val prefix = s"graft_pm_${hash8(root)}_"
+    val prefix = s"graft_pm_${SnapshotLog.hash8(root)}_"
     def pinsFor(dirs: Seq[(String, String)],
         schema: Option[StructType]): Seq[String] = {
       val pure = dirs.filterNot { case (_, p) => isMorDir(spark, p) }
@@ -578,314 +550,6 @@ object PartitionedManifest extends SnapshotLog {
     }
   }
 
-  // ---------------------------------------------------------------------
-  // MERGE-ON-READ: the write mode copy-on-write cannot afford at 100 TB
-  // with hot partitions — a stream of small upsert batches into a 1 TB
-  // partition must NOT rewrite the terabyte per batch (write
-  // amplification = partition size / batch size). A MOR commit writes a
-  // new version directory holding ONLY the delta:
-  //
-  //   v000007-xxxx/
-  //     _mor.tsv            #keys=k1,k2 / base=v000006-yyyy
-  //     _delta/upserts/     (parquet: full-schema replacement rows)
-  //     _delta/deletes/     (parquet: key columns of removed rows)
-  //
-  // `base` names the PREVIOUS version directory — itself possibly MOR,
-  // so deltas chain (the Iceberg v2 delete-file / Delta deletion-vector
-  // posture realized on the pointer machinery: bytes written per commit
-  // scale with the DELTA, never the partition). Readers resolve the
-  // chain lazily: base rows whose key appears in any layer are dropped
-  // with ONE anti-join against the (delta-sized, broadcastable) key set,
-  // and each key's NEWEST layer event wins — an upsert contributes its
-  // replacement row, a delete contributes nothing. Every existing
-  // reader path (read/readSnapshot, changesBetween/CDC, the streaming
-  // CdcSource, IncrementalConsumer) resolves MOR dirs transparently.
-  //
-  // COMPACTION IS THE FOLD-DOWN: compact() selects MOR-live partitions
-  // unconditionally (a delta chain IS deferred merge work), rewrites the
-  // RESOLVED content, and publishes a pure data dir — converging the
-  // layout; chain length is therefore bounded by compaction cadence.
-  // GC safety: every protection set is expanded through _mor.tsv base
-  // chains, so a base dir can never be collected while a kept snapshot
-  // (or the live pointer) names a layer above it.
-
-  private[engine] val MorFile = "_mor.tsv"
-
-  private[engine] def isMorDir(spark: SparkSession, dirPath: String): Boolean =
-    fsOf(spark, dirPath).exists(new HPath(dirPath, MorFile))
-
-  /** Parse a MOR marker: (key columns, base version dir NAME). */
-  private def morInfo(spark: SparkSession, dirPath: String)
-      : Option[(Seq[String], String)] = {
-    val fs = fsOf(spark, dirPath)
-    val p = new HPath(dirPath, MorFile)
-    if (!fs.exists(p)) None
-    else {
-      val text = SnapshotLog.readUtf8(fs, p)
-      val keys = text.linesIterator.find(_.startsWith("#keys="))
-        .map(_.stripPrefix("#keys=").trim.split(",").toSeq)
-        .getOrElse(sys.error(s"PartitionedManifest: $dirPath/$MorFile " +
-          "has no #keys= header"))
-      val base = text.linesIterator.find(_.startsWith("base="))
-        .map(_.stripPrefix("base=").trim)
-        .getOrElse(sys.error(s"PartitionedManifest: $dirPath/$MorFile " +
-          "has no base= line"))
-      Some((keys, base))
-    }
-  }
-
-  /** A version dir plus its transitive MOR bases, newest first (the
-    * head is `dir` itself; a pure dir is a one-element chain). Cycle
-    * and runaway guarded. */
-  private[engine] def morChain(spark: SparkSession, partRoot: String,
-      dir: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer(dir)
-    var info = morInfo(spark, s"$partRoot/$dir")
-    while (info.isDefined) {
-      val next = info.get._2
-      require(!out.contains(next) && out.length < 100000,
-        s"PartitionedManifest: MOR base cycle under $partRoot: $out")
-      out += next
-      info = morInfo(spark, s"$partRoot/$next")
-    }
-    out.toSeq
-  }
-
-  /** The key columns of a version dir's delta chain (None = pure).
-    * Chains are keyed UNIFORMLY by construction — [[commitMerge]]
-    * refuses to layer a differently-keyed delta, because resolution
-    * applies the TOP layer's keys to every layer. */
-  private[engine] def chainKeys(spark: SparkSession, partRoot: String,
-      dirName: String): Option[Seq[String]] =
-    morInfo(spark, s"$partRoot/$dirName").map(_._1)
-
-  /** Expand a protection set through MOR base chains (see the section
-    * comment: protecting a layer must protect everything below it). */
-  private[engine] def expandMorProtect(spark: SparkSession, partRoot: String,
-      dirs: Set[String]): Set[String] =
-    dirs.flatMap(d => morChain(spark, partRoot, d))
-
-  /** One partition's LOGICAL content (no partition column) at version
-    * `dirName`: a pure dir reads directly; a MOR dir resolves base ∪
-    * layers — base rows whose key appears in ANY layer are dropped by
-    * one anti-join against the delta-sized key set (broadcast at scale),
-    * then each key's newest layer event contributes its upsert row (a
-    * newest-event delete contributes nothing). `schema` (the snapshot's
-    * recorded schema) is the read authority when given. */
-  private[engine] def resolveVersionData(spark: SparkSession,
-      partRoot: String, dirName: String,
-      schema: Option[StructType]): DataFrame = {
-    def readPure(d: String, sc: Option[StructType]): DataFrame =
-      sc.map(s => spark.read.schema(s).parquet(s"$partRoot/$d"))
-        .getOrElse(spark.read.parquet(s"$partRoot/$d"))
-    morInfo(spark, s"$partRoot/$dirName") match {
-      case None => readPure(dirName, schema)
-      case Some((keys, _)) =>
-        val chain = morChain(spark, partRoot, dirName)
-        val baseDir = chain.last
-        val layers = chain.init.reverse // oldest layer first
-        val fs = fsOf(spark, partRoot)
-        val dataSchema: StructType = schema.getOrElse(
-          footerSchema(spark, s"$partRoot/$baseDir"))
-        val base = readPure(baseDir, Some(dataSchema))
-        val events: Seq[DataFrame] = layers.zipWithIndex.flatMap {
-          case (d, i) =>
-            val up = {
-              val p = s"$partRoot/$d/_delta/upserts"
-              if (fs.exists(new HPath(p)))
-                Some(spark.read.schema(dataSchema).parquet(p)
-                  .withColumn("_graft_op", lit("u"))
-                  .withColumn("_graft_layer", lit(i + 1)))
-              else None
-            }
-            val del = {
-              val p = s"$partRoot/$d/_delta/deletes"
-              if (fs.exists(new HPath(p))) {
-                // delete dirs live inside immutable version dirs —
-                // their footer schema memoizes like any other
-                val keyDf = spark.read.schema(footerSchema(spark, p))
-                  .parquet(p)
-                Some(keyDf.select(dataSchema.fields.toSeq.map { f =>
-                  if (keys.contains(f.name))
-                    col(f.name).cast(f.dataType).as(f.name)
-                  else lit(null).cast(f.dataType).as(f.name)
-                }: _*).withColumn("_graft_op", lit("d"))
-                  .withColumn("_graft_layer", lit(i + 1)))
-              } else None
-            }
-            up.toSeq ++ del.toSeq
-        }
-        if (events.isEmpty) base
-        else {
-          val all = events.reduce(_.unionByName(_))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(keys.map(col): _*)
-            .orderBy(col("_graft_layer").desc)
-          val latest = all
-            .withColumn("_graft_rn",
-              org.apache.spark.sql.functions.row_number().over(w))
-            .filter(col("_graft_rn") === 1)
-          base.join(all.select(keys.map(col): _*).distinct(),
-              keys, "left_anti")
-            .unionByName(latest.filter(col("_graft_op") === "u")
-              .drop("_graft_op", "_graft_layer", "_graft_rn"))
-        }
-    }
-  }
-
-  /** Both directions of a multiset row diff in ONE aggregation —
-    * row-for-row what `to.exceptAll(from)` tagged 'insert' unioned
-    * with `from.exceptAll(to)` tagged 'delete' produces. Spark's own
-    * RewriteExceptAll turns EACH exceptAll into union → signed-count
-    * aggregate → replicate, so the two-direction spelling aggregates
-    * the combined input twice; tagging the sides ±1 and keeping both
-    * signs runs that same rewrite once (one exchange instead of two
-    * over the changed partitions' rows). Multiset-exact: a row with
-    * m copies on the to side and n on the from side emits |m-n|
-    * copies, inserts where m>n, deletes where n>m — the exceptAll
-    * multiplicity contract. Replication streams through the
-    * [[graft.functions.ReplicateN]] generator — an
-    * `explode(sequence(1, |w|))` would materialize a |w|-element array
-    * inside the task, a multi-MB allocation (and OOM risk) for a row
-    * legitimately duplicated millions of times. */
-  private[engine] def multisetDiff(to: DataFrame, from: DataFrame,
-      changeCol: String): DataFrame = {
-    val W = "_graft_w"
-    val cols = to.columns.toSeq
-    val summed = to.withColumn(W, lit(1L))
-      .unionByName(from.withColumn(W, lit(-1L)))
-      .groupBy(cols.map(col): _*)
-      .agg(org.apache.spark.sql.functions.sum(col(W)).as(W))
-      .filter(col(W) =!= 0L)
-    summed.select((cols :+ W).map(col) :+
-        graft.functions.Replicate.replicateN(
-          org.apache.spark.sql.functions.abs(col(W))): _*)
-      .select(cols.map(col) :+
-        org.apache.spark.sql.functions.when(col(W) > 0, lit("insert"))
-          .otherwise(lit("delete")).as(changeCol): _*)
-  }
-
-  /** Recover hive-style `field=value` path segments as STRING columns
-    * appended after the data columns, via the deterministic hidden
-    * file-metadata column (the multi-field generalization of
-    * [[readDirsWithPartCol]]'s trick). */
-  private[engine] def attachFieldsFromPath(df: DataFrame,
-      fields: Seq[String]): DataFrame = {
-    val dataCols = df.columns.toSeq
-    val withF = fields.foldLeft(df)((x, f) =>
-      x.withColumn(f, regexp_extract(col("_metadata.file_path"),
-        java.util.regex.Pattern.quote(s"/$f=") + "([^/]+)/", 1)))
-    withF.select((dataCols.map(col) ++ fields.map(col)): _*)
-  }
-
-  /** Read a set of (pure) version dirs as ONE relation with hive path
-    * fields recovered as string columns. */
-  private[engine] def readDirsWithFields(spark: SparkSession,
-      paths: Seq[String], fields: Seq[String],
-      schema: Option[StructType] = None): DataFrame =
-    attachFieldsFromPath(
-      schema.map(sc => spark.read.schema(sc).parquet(paths: _*))
-        .getOrElse(spark.read.parquet(paths: _*)), fields)
-
-  /** Resolve MANY merge-on-read chains in ONE bounded-width plan — the
-    * serving path for a CDC-heavy table with K hot partitions/leaves
-    * between folds. The per-chain resolver ([[resolveVersionData]])
-    * plans one subtree per chain: K hot leaves cost K union arms, the
-    * exact per-partition plan-width problem the content-pin work
-    * eliminated for pure dirs. Here the arms scale with CHAIN DEPTH,
-    * never K:
-    *
-    *   - every chain's BOTTOM (pure) dir reads as ONE relation, with
-    *     the hive partition fields recovered from the file paths;
-    *   - every chain's layer at depth d reads as ONE upsert relation +
-    *     ONE delete relation (depth is bounded by foldChainAt/compact
-    *     cadence, typically ≤ 3);
-    *   - resolution runs GLOBALLY, keyed on (partition fields ++ key
-    *     columns): one anti-join of the combined base against the
-    *     combined (delta-sized, broadcastable) key set, one
-    *     newest-layer-wins window over the DELTA union only — the same
-    *     per-key semantics as the per-chain resolver, because the
-    *     partition fields keep different leaves' keys apart and layer
-    *     numbering is per-chain.
-    *
-    * `entries` are (partition/leaf root, live MOR version dir name);
-    * `fields` the hive field names (in path order) to recover as
-    * STRING partition columns. Chains with different key-column sets
-    * group separately (arms = depth × distinct key sets). Output:
-    * data columns ++ fields. */
-  private[engine] def resolveMorGrouped(spark: SparkSession,
-      entries: Seq[(String, String)], fields: Seq[String],
-      schema: Option[StructType]): DataFrame = {
-    require(entries.nonEmpty, "resolveMorGrouped: no entries")
-    val fs = fsOf(spark, entries.head._1)
-    val infos = entries.map { case (pr, d) =>
-      val keys = morInfo(spark, s"$pr/$d").map(_._1).getOrElse(
-        sys.error(s"resolveMorGrouped: $pr/$d is not merge-on-read"))
-      (pr, morChain(spark, pr, d), keys)
-    }
-    def attach(df: DataFrame): DataFrame =
-      attachFieldsFromPath(df, fields)
-    infos.groupBy(_._3).toSeq.sortBy(_._1.mkString(","))
-      .map { case (keys, group) =>
-        val dataSchema: StructType = schema.getOrElse {
-          val (pr, chain, _) = group.head
-          footerSchema(spark, s"$pr/${chain.last}")
-        }
-        val base = attach(spark.read.schema(dataSchema).parquet(
-          group.map { case (pr, chain, _) => s"$pr/${chain.last}" }: _*))
-        val maxDepth = group.map(_._2.length - 1).max
-        val events: Seq[DataFrame] = (1 to maxDepth).flatMap { d =>
-          // depth d = the d-th layer ABOVE the base, oldest first
-          // (chain is newest-first: layer d = chain(len - 1 - d))
-          val layerDirs = group.collect {
-            case (pr, chain, _) if chain.length - 1 >= d =>
-              s"$pr/${chain(chain.length - 1 - d)}"
-          }
-          val ups = layerDirs.map(_ + "/_delta/upserts")
-            .filter(p => fs.exists(new HPath(p)))
-          val dels = layerDirs.map(_ + "/_delta/deletes")
-            .filter(p => fs.exists(new HPath(p)))
-          val u =
-            if (ups.isEmpty) None
-            else Some(attach(spark.read.schema(dataSchema)
-                .parquet(ups: _*))
-              .withColumn("_graft_op", lit("u"))
-              .withColumn("_graft_layer", lit(d)))
-          val dl =
-            if (dels.isEmpty) None
-            else {
-              val keyDf = attach(spark.read.parquet(dels: _*))
-              Some(keyDf.select((dataSchema.fields.toSeq.map { f =>
-                if (keys.contains(f.name))
-                  col(f.name).cast(f.dataType).as(f.name)
-                else lit(null).cast(f.dataType).as(f.name)
-              } ++ fields.map(col)): _*)
-                .withColumn("_graft_op", lit("d"))
-                .withColumn("_graft_layer", lit(d)))
-            }
-          u.toSeq ++ dl.toSeq
-        }
-        if (events.isEmpty) base
-        else {
-          val all = events.reduce(_.unionByName(_))
-          val grpKeys = fields ++ keys
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(grpKeys.map(col): _*)
-            .orderBy(col("_graft_layer").desc)
-          val latest = all
-            .withColumn("_graft_rn", row_number().over(w))
-            .filter(col("_graft_rn") === 1)
-          // re-select the base order: a using-columns join moves the
-          // join keys to the FRONT of the output
-          base.join(all.select(grpKeys.map(col): _*).distinct(),
-              grpKeys, "left_anti")
-            .select(base.columns.toSeq.map(col): _*)
-            .unionByName(latest.filter(col("_graft_op") === "u")
-              .drop("_graft_op", "_graft_layer", "_graft_rn"))
-        }
-      }.reduce(_.unionByName(_))
-  }
-
   /** One partition's current logical content (no partition column) —
     * MOR-resolving; the public single-partition reader the streaming
     * sink and merge paths use instead of a raw parquet read of the
@@ -900,40 +564,17 @@ object PartitionedManifest extends SnapshotLog {
     resolveVersionData(spark, pr, dir, sc)
   }
 
-  /** MERGE-ON-READ commit: fold `upserts` (full-schema replacement rows,
-    * keyed by `keyCols`) and `deletes` (key rows) into the touched
-    * partitions WITHOUT rewriting them — each touched partition gets a
-    * new version dir holding only the delta files and a `_mor.tsv`
-    * naming its base (see the section comment). One atomic snapshot
-    * commit covers the whole delta, so CDC, time travel, tags, branches
-    * and the incremental consumer see a MOR commit exactly like any
-    * other. Bytes written scale with the DELTA (w20 require()s it).
-    *
-    * Contract: the table must be snapshot-managed; touched partitions
-    * must exist (partition creation is a [[commitSnapshot]] job);
-    * upsert frames carry exactly the recorded schema (evolution goes
-    * through commitSnapshot); per partition, upsert keys and delete
-    * keys must be disjoint, and upsert keys unique (the Delta MERGE
-    * multiple-match contract — violations make the resolved content
-    * order-dependent). Returns the snapshot name.
-    *
-    * `foldChainAt` (> 0) BOUNDS the delta chain without a separate
-    * maintenance pass: a merge that would make a partition's chain
-    * that deep publishes the RESOLVED content as a pure data dir
-    * instead of another layer — the partition's bytes are paid once
-    * per `foldChainAt` merges (amortized 1/foldChainAt per commit)
-    * and every reader's chain walk stays ≤ foldChainAt. 0 leaves the
-    * bound to compaction cadence (compact() folds unconditionally).
-    *
-    * CONCURRENCY (the compact() posture): the delta parquet is staged
-    * with NO lock held — at high commit frequency concurrent merge
-    * committers overlap their I/O and serialize only on the cheap
-    * metadata tail. Under the lock each touched partition re-reads its
-    * FRESH live version as the chain base (the delta files never
-    * depend on it), so a committer that landed mid-staging simply
-    * becomes one more layer below — both commits land, newest layer
-    * still wins per key. The recorded schema is re-validated under the
-    * lock; a concurrent schema evolution fails the merge loudly.
+  /** MERGE-ON-READ commit over partition-keyed `upserts` (full-schema
+    * replacement rows, keyed by `keyCols`) and `deletes` (key rows): each
+    * touched partition gets a new version dir holding only the delta and
+    * a `_mor.tsv` naming its base, and one atomic snapshot covers the
+    * whole delta ([[MergeOnRead]]'s commit). Upserts carry exactly the
+    * recorded schema (evolution goes through [[commitSnapshot]]);
+    * touched partitions must exist. Bytes written scale with the DELTA
+    * (w20 require()s it). `foldChainAt` (> 0) bounds the chain inline:
+    * a merge that would make a partition's chain that deep publishes
+    * the resolved content as a pure dir instead; 0 leaves the bound to
+    * [[compact]]. Returns the snapshot name.
     *
     * @param onBeforeLock test seam, called after the lock-free staging
     *        completes and BEFORE the publish lock is taken — the race
@@ -943,213 +584,9 @@ object PartitionedManifest extends SnapshotLog {
       deletes: Map[String, DataFrame] = Map.empty,
       keepSnapshots: Int = 2, foldChainAt: Int = 0,
       onBeforeLock: () => Unit = () => ()): String = {
-    require(keepSnapshots >= 2, "keepSnapshots must be >= 2")
-    require(keyCols.nonEmpty && !keyCols.contains(partCol),
-      "commitMerge: keyCols must be non-empty data columns")
-    val touched = (upserts.keySet ++ deletes.keySet).toSeq.sorted
-    require(touched.nonEmpty, "commitMerge needs upserts or deletes")
-    touched.foreach(checkPartValue)
-    val fs = fsOf(spark, root)
-    // ---- LOCK-FREE phase: validate against an optimistic read of the
-    // current snapshot and stage every partition's delta parquet ----
-    val snap0 = currentSnapshot(spark, root).getOrElse(sys.error(
-      "PartitionedManifest: commitMerge needs a snapshot-managed " +
-        s"table under $root - commitSnapshot first"))
-    val base0 = snapshotMapping(spark, root, snap0).toMap
-    val unknown0 = touched.filterNot(base0.contains)
-    require(unknown0.isEmpty,
-      "PartitionedManifest: merge-on-read may only touch existing " +
-        s"partitions (new: ${unknown0.mkString(",")}) - create " +
-        "partitions through commitSnapshot")
-    val schema = snapshotSchema(spark, root, snap0).getOrElse {
-      val (v, d) = base0.head
-      footerSchema(spark, s"$root/$partCol=$v/$d")
-    }
-    keyCols.foreach(k => require(schema.fieldNames.contains(k),
-      s"commitMerge: unknown key column '$k'"))
-    upserts.foreach { case (v, df) =>
-      val cols = df.schema.filterNot(_.name == partCol)
-        .map(f => (f.name, f.dataType))
-      require(cols == schema.map(f => (f.name, f.dataType)).toSeq,
-        s"commitMerge: partition $v upsert schema " +
-          s"(${cols.map(_._1).mkString(",")}) does not match the " +
-          s"recorded schema (${schema.fieldNames.mkString(",")}) - " +
-          "schema evolution goes through commitSnapshot")
-    }
-    deletes.foreach { case (v, df) =>
-      val cols = df.columns.toSeq.filterNot(_ == partCol).sorted
-      require(cols == keyCols.sorted,
-        s"commitMerge: partition $v delete frame must carry exactly " +
-          s"the key columns ${keyCols.mkString(",")} (got " +
-          s"${cols.mkString(",")})")
-    }
-    // (upserts, deletes, staged delta dir) per partition. Staging
-    // writes collapse into ONE job for every partition's upserts and
-    // one for all deletes (per-partition frames tagged with the
-    // partition ordinal, unioned, `partitionBy` the tag into a root
-    // scratch, then renamed into the per-partition stage dirs): a tiny
-    // parquet write has ~0.1-0.3 s fixed cost, so L per-partition
-    // writes per commit collapsing to 2 jobs dominates multi-partition
-    // merge latency (guide §2.4; measured in OPTIMIZATION_r19.md).
-    // The per-partition up/del overlap checks batch into ONE intersect
-    // the same way. The lazy up/del frames stay in the tuple for the
-    // (amortized-rare) foldChainAt branch.
-    val Tag = "_graft_stage_leaf"
-    def dropPart(df: DataFrame): DataFrame =
-      if (df.columns.contains(partCol)) df.drop(partCol) else df
-    val idxOf: Map[String, Int] = touched.zipWithIndex.toMap
-    // a union of L per-partition delta frames carries the SUM of their
-    // partitions; coalesce back to the SESSION SHUFFLE PARALLELISM
-    // (scale-free: no shuffle, no size guess, a no-op for any union
-    // already narrower), which bounds both the write task count and
-    // the files-per-tag every later chain read pays for. A delta
-    // wider than the session conf is deliberately narrowed to it —
-    // the session parallelism is the cluster-sized write bound.
-    def taggedUnion(m: Map[String, DataFrame],
-        sel: DataFrame => DataFrame): Option[DataFrame] = {
-      val frames = touched.flatMap { v =>
-        m.get(v).map(df => sel(dropPart(df))
-          .withColumn(Tag, lit(idxOf(v).toString)))
-      }
-      // coalesce to the session's shuffle parallelism: a no-op when
-      // the union is already narrower, and no .rdd probe (which would
-      // eagerly materialize any shuffle stage a caller's frame holds)
-      frames.reduceOption(_.unionByName(_)).map(u =>
-        if (frames.lengthCompare(1) <= 0) u
-        else u.coalesce(spark.sessionState.conf.numShufflePartitions))
-    }
-    val upAll = taggedUnion(upserts,
-      _.select(schema.fieldNames.toSeq.map(col): _*))
-    val delAll = taggedUnion(deletes,
-      _.select(keyCols.map(col): _*)).map(_.distinct())
-    def scratchWrite(df: Option[DataFrame], what: String)
-        : Option[String] = df.map { d =>
-      val p = s"$root/.morstage-$what-" +
-        java.util.UUID.randomUUID.toString.take(8)
-      d.write.partitionBy(Tag).parquet(p)
-      p
-    }
-    // independent staging jobs — overlap them (guide §2.6)
-    val Seq(scratchUp, scratchDel) = Par.map(Seq(
-      (upAll, "up"), (delAll, "del"))) {
-      case (df, what) => scratchWrite(df, what)
-    }
-    // the up/del disjointness contract checks against the WRITTEN
-    // scratches (explicit schema, so an all-empty side still reads):
-    // one cheap scan of materialized delta bytes instead of
-    // re-evaluating both tagged unions a second time
-    for (us <- scratchUp; ds <- scratchDel) {
-      val u = spark.read.schema(upAll.get.schema).parquet(us)
-      val d = spark.read.schema(delAll.get.schema).parquet(ds)
-      val overlap = u.select((keyCols :+ Tag).map(col): _*)
-        .intersect(d.select((keyCols :+ Tag).map(col): _*))
-        .select(col(Tag)).distinct().collect()
-        .map(r => touched(r.getString(0).toInt))
-      if (overlap.nonEmpty) {
-        (scratchUp.toSeq ++ scratchDel.toSeq).foreach(p =>
-          try fs.delete(new HPath(p), true)
-          catch { case _: java.io.IOException => () })
-        require(overlap.isEmpty,
-          s"commitMerge: partition(s) ${overlap.sorted.mkString(",")} " +
-            "have keys in BOTH upserts and deletes - an upsert already " +
-            "replaces; a delete already removes (overlap makes the " +
-            "outcome ambiguous)")
-      }
-    }
-    val staged: Seq[(String, Option[DataFrame], Option[DataFrame],
-        String)] =
-      try touched.zipWithIndex.map { case (v, i) =>
-        val pr = s"$root/$partCol=$v"
-        val up = upserts.get(v).map(df =>
-          dropPart(df).select(schema.fieldNames.toSeq.map(col): _*))
-        val del = deletes.get(v).map(df =>
-          dropPart(df).select(keyCols.map(col): _*).distinct())
-        val stage =
-          s"$pr/.mor-${java.util.UUID.randomUUID.toString.take(8)}"
-        fs.mkdirs(new HPath(s"$stage/_delta"))
-        // a partition whose frame produced no rows writes no scratch
-        // subdir; the resolver probes each _delta subdir with
-        // fs.exists, so absent == empty (same read semantics)
-        def adopt(scratch: Option[String], sub: String): Unit =
-          scratch.foreach { sc =>
-            val src = new HPath(s"$sc/$Tag=$i")
-            if (fs.exists(src))
-              fs.rename(src, new HPath(s"$stage/_delta/$sub"))
-          }
-        adopt(scratchUp, "upserts")
-        adopt(scratchDel, "deletes")
-        (v, up, del, stage)
-      } finally (scratchUp.toSeq ++ scratchDel.toSeq).foreach(p =>
-        try fs.delete(new HPath(p), true)
-        catch { case _: java.io.IOException => () })
-    onBeforeLock()
-    // ---- LOCKED phase: cheap metadata only (plus the amortized-rare
-    // foldChainAt fold) — re-validate, bind each delta to its FRESH
-    // chain base, adopt, snapshot ----
-    def dropStaged(): Unit = staged.foreach { case (_, _, _, st) =>
-      try fs.delete(new HPath(st), true)
-      catch { case _: java.io.IOException => () }
-    }
-    try ManifestTable.withPublishLock(root) {
-      val snap = currentSnapshot(spark, root).get
-      val base = snapshotMapping(spark, root, snap).toMap
-      val unknown = touched.filterNot(base.contains)
-      require(unknown.isEmpty,
-        "PartitionedManifest: merge-on-read may only touch existing " +
-          s"partitions (new: ${unknown.mkString(",")})")
-      // a schema evolution that landed mid-staging invalidates the
-      // staged frames' shape — fail loudly, never adopt a stale shape
-      val curSchema = snapshotSchema(spark, root, snap)
-      require(curSchema.forall(s => s.map(f => (f.name, f.dataType)) ==
-          schema.map(f => (f.name, f.dataType))),
-        "commitMerge: the table schema evolved while the delta was " +
-          "staging - restage against the current schema")
-      val protectByPart = protectedDirsByKey(spark, root,
-        keepSnapshots)
-      val written: Map[String, String] = Par.map(staged) {
-        case (v, up, del, stage) =>
-          val pr = s"$root/$partCol=$v"
-          val baseDir = ManifestTable.currentVersion(pr).getOrElse(
-            sys.error(s"PartitionedManifest: no MANIFEST under $pr"))
-          // chains must be keyed uniformly: the resolver applies the
-          // TOP layer's keys to every layer, so layering a
-          // differently-keyed delta would silently mis-resolve the
-          // chain below it
-          chainKeys(spark, pr, baseDir).foreach(bk =>
-            require(bk == keyCols,
-              s"commitMerge: partition $v has a delta chain keyed by " +
-                s"(${bk.mkString(",")}) - a merge keyed by " +
-                s"(${keyCols.mkString(",")}) cannot layer on it; " +
-                "compact() first or reuse the chain's keys"))
-          val protect = expandMorProtect(spark, pr,
-            protectByPart.getOrElse(v, Set.empty))
-          val dir =
-            if (foldChainAt > 0 &&
-                morChain(spark, pr, baseDir).length + 1 >= foldChainAt) {
-              // bounded chain: fold instead of layering (see Scaladoc)
-              val current = resolveVersionData(spark, pr, baseDir,
-                Some(schema))
-              val touchedKeys = (up.map(_.select(keyCols.map(col): _*))
-                .toSeq ++ del.toSeq).reduce(_.unionByName(_)).distinct()
-              val merged = current
-                .join(touchedKeys, keyCols, "left_anti")
-                .unionByName(up.getOrElse(current.limit(0)))
-              val d = ManifestTable.publish(spark, pr, merged, protect)
-              fs.delete(new HPath(stage), true)
-              d
-            } else {
-              ManifestTable.writeOnce(stage, MorFile,
-                s"#keys=${keyCols.mkString(",")}\nbase=$baseDir\n")
-              ManifestTable.adoptVersion(pr, stage, protect)
-            }
-          v -> new HPath(dir).getName
-      }.toMap
-      writeSnapshotLocked(spark, root,
-        (base ++ written).toSeq.sortBy(_._1), keepSnapshots, Some(schema),
-        operation = "merge")
-    } catch {
-      case e: Throwable => dropStaged(); throw e
-    }
+    (upserts.keySet ++ deletes.keySet).foreach(checkPartValue)
+    commitMergeCore(spark, root, partLeaf(partCol), Seq(partCol), keyCols,
+      upserts, deletes, keepSnapshots, foldChainAt, onBeforeLock)
   }
 
   /** Commit a snapshot: write ALL touched partitions' new version
@@ -1185,9 +622,8 @@ object PartitionedManifest extends SnapshotLog {
   }
 
   /** The ONE hive-partitioned write of every touched partition's rows
-    * into a fresh scratch dir under `root` ([[SnapshotLog.writeTagged]]),
-    * factored out so [[compact]] can run this expensive job OUTSIDE the
-    * root publish lock. Returns the scratch path (caller deletes). */
+    * into a fresh scratch dir under `root` ([[SnapshotLog.writeTagged]]).
+    * Returns the scratch path (caller deletes). */
   private def writeScratchParts(spark: SparkSession, root: String,
       partCol: String, updates: Map[String, DataFrame]): String = {
     val scratch = s"$root/.commit-${SnapshotLog.uuid8()}"
@@ -1195,120 +631,6 @@ object PartitionedManifest extends SnapshotLog {
       updates.map { case (v, df) => Seq(v) -> df }).get, Seq(partCol),
       scratch)
     scratch
-  }
-
-  /** The clustered-OPTIMIZE scratch write: one range-partitioned,
-    * internally-sorted job per candidate partition (see [[compact]]'s
-    * clusterBy). The scratch layout matches [[writeScratchParts]]'s
-    * (`scratch/partCol=v/`), so adoption is identical. */
-  private def writeClusteredScratch(spark: SparkSession, root: String,
-      partCol: String, candidates: Map[String, String],
-      schema: Option[StructType], clusterBy: Seq[String],
-      clusterFiles: Int, targetBytes: Long,
-      zOrder: Boolean = false): String = {
-    val fs = fsOf(spark, root)
-    val scratch =
-      s"$root/.optimize-${java.util.UUID.randomUUID.toString.take(8)}"
-    // one independent resolve+clustered-write job per candidate
-    // partition — overlap them (guide §2.6)
-    Par.map(candidates.toSeq.sortBy(_._1)) { case (v, dir) =>
-      val df = resolveVersionData(spark, s"$root/$partCol=$v",
-        new HPath(dir).getName, schema)
-      // size-derived file count sums the whole MOR chain's bytes (an
-      // upper bound on the resolved size — safe for sizing)
-      val bytes = morChain(spark, s"$root/$partCol=$v",
-          new HPath(dir).getName)
-        .map(d => fs.getContentSummary(
-          new HPath(s"$root/$partCol=$v/$d")).getLength).sum
-      val nf =
-        if (clusterFiles > 0) clusterFiles
-        else math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      val clustered = clusterFrame(df, clusterBy, nf, zOrder,
-        s"partition $v")
-      clustered.write.mode("error").parquet(s"$scratch/$partCol=$v")
-      // layout marker rides INTO the version dir at adoption: repeated
-      // identical clustered OPTIMIZE calls then select nothing (see
-      // [[compact]]'s candidate gate) — Iceberg's sort-order metadata
-      // in one underscore-prefixed (reader-invisible) file
-      ManifestTable.writeOnce(s"$scratch/$partCol=$v", ClusterMarker,
-        clusterMarkerBody(clusterBy, clusterFiles, zOrder))
-    }
-    scratch
-  }
-
-  /** The layout transform itself — one frame range-partitioned into
-    * `nf` internally-sorted files, lexicographically on `clusterBy` or
-    * Morton-interleaved (`zOrder`). Shared by the single-column
-    * [[compact]] and the composite-spec
-    * [[SpecManifest.rewriteLayout]]. */
-  private[engine] def clusterFrame(df: DataFrame, clusterBy: Seq[String],
-      nf: Int, zOrder: Boolean, what: String): DataFrame =
-    if (!zOrder)
-      df.repartitionByRange(nf, clusterBy.map(col): _*)
-        .sortWithinPartitions(clusterBy.map(col): _*)
-    else {
-      // OPTIMIZE ZORDER: interleave the two dimensions on the
-      // Morton curve so EITHER column's range predicate prunes
-      // files (a lexicographic sort only serves its leading
-      // column). Each dimension min-max scales to the full
-      // 16-bit range per partition first (Delta's range-bounds
-      // pass) — interleaving raw values that only touch the low
-      // bits would leave every row in one Z quadrant.
-      require(clusterBy.length == 2,
-        "zOrder clustering interleaves exactly two columns")
-      val Seq(c1, c2) = clusterBy
-      // try_cast, not cast: under ANSI a non-numeric value would
-      // throw an opaque CAST_INVALID_INPUT mid-job — the guard
-      // below turns the all-null outcome into a clear layout error
-      val r = df.agg(min(expr(s"try_cast(`$c1` as bigint)")),
-        max(expr(s"try_cast(`$c1` as bigint)")),
-        min(expr(s"try_cast(`$c2` as bigint)")),
-        max(expr(s"try_cast(`$c2` as bigint)"))).head()
-      // loud validation instead of an opaque NPE mid-rewrite: an
-      // all-NULL column, a column that does not cast to bigint
-      // (string/date), or an empty partition leaves null agg slots
-      if ((0 to 3).exists(r.isNullAt))
-        throw new LayoutValidationException(
-          s"zOrder: $what needs non-empty data and cluster " +
-            s"columns (${clusterBy.mkString(", ")}) castable to " +
-            "bigint with at least one non-null value each")
-      val (amin, amax) = (r.getLong(0), r.getLong(1))
-      val (bmin, bmax) = (r.getLong(2), r.getLong(3))
-      val spanA = math.max(amax - amin, 1L)
-      val spanB = math.max(bmax - bmin, 1L)
-      // integer `div`, not `/` (Column./ is float division);
-      // try_cast so a stray non-castable value lands in the null
-      // range-partition instead of failing the whole rewrite
-      val a16 = expr(
-        s"((try_cast(`$c1` as bigint) - ${amin}L) * 65535L) div ${spanA}L")
-      val b16 = expr(
-        s"((try_cast(`$c2` as bigint) - ${bmin}L) * 65535L) div ${spanB}L")
-      df.withColumn("_graft_z",
-          graft.operators.Layout.zOrder16(a16, b16))
-        .repartitionByRange(nf, col("_graft_z"))
-        .sortWithinPartitions(col("_graft_z"))
-        .drop("_graft_z")
-    }
-
-  /** Sort-order marker file a clustered rewrite stamps into its version
-    * dirs (underscore-prefixed: readers never see it). */
-  private[engine] val ClusterMarker = "_clustered.tsv"
-
-  private[engine] def clusterMarkerBody(clusterBy: Seq[String],
-      clusterFiles: Int, zOrder: Boolean): String =
-    s"clusterBy=${clusterBy.mkString(",")}\nfiles=$clusterFiles\n" +
-      s"zorder=$zOrder\n"
-
-  /** Is this (pure) version dir already clustered under exactly this
-    * layout spec? Conservative: no marker / different layout → false
-    * (the partition is re-selected). */
-  private[engine] def isClusteredAs(spark: SparkSession, dirPath: String,
-      clusterBy: Seq[String], clusterFiles: Int,
-      zOrder: Boolean): Boolean = {
-    val fs = fsOf(spark, dirPath)
-    val p = new HPath(dirPath, ClusterMarker)
-    fs.exists(p) && SnapshotLog.readUtf8(fs, p) ==
-      clusterMarkerBody(clusterBy, clusterFiles, zOrder)
   }
 
   /** The METADATA half of a snapshot commit, always under the root
@@ -1320,8 +642,7 @@ object PartitionedManifest extends SnapshotLog {
   private def adoptPartsLocked(spark: SparkSession, root: String,
       partCol: String, scratch: Option[String], parts: Seq[String],
       emptyUpdate: String => DataFrame, keepSnapshots: Int,
-      updatesSchema: Option[StructType] = None,
-      operation: String = "commit"): String = {
+      updatesSchema: Option[StructType]): String = {
     val base = baseMappingLocked(spark, root, partLeaf(partCol),
       () => partitionValues(spark, root, partCol))
     // schema evolution check FIRST — a rejected merge (silent column
@@ -1333,13 +654,16 @@ object PartitionedManifest extends SnapshotLog {
     val written = adoptLeavesLocked(spark, root, scratch, parts,
       keepSnapshots, partLeaf(partCol), v => dropCol(emptyUpdate(v), partCol))
     val mapping = (base ++ written).toSeq.sortBy(_._1)
-    // first commit / legacy tables with neither a recorded schema nor
-    // updates derive theirs once from a live version dir's footer
-    val newSchema = mergedSchema.orElse(mapping.headOption.map {
-      case (v, d) => footerSchema(spark, s"$root/$partCol=$v/$d") })
-    writeSnapshotLocked(spark, root, mapping, keepSnapshots, newSchema,
-      operation = operation)
+    writeSnapshotLocked(spark, root, mapping, keepSnapshots,
+      mergedSchema.orElse(firstSchema(spark, root, partCol)(mapping)))
   }
+
+  /** First commit / legacy tables with neither a recorded schema nor
+    * updates derive theirs once from a live version dir's footer. */
+  private def firstSchema(spark: SparkSession, root: String,
+      partCol: String)(mapping: Seq[(String, String)]): Option[StructType] =
+    mapping.headOption.map { case (v, d) =>
+      footerSchema(spark, s"$root/$partCol=$v/$d") }
 
   /** Data files in a table root's LIVE version directory (pointer
     * resolved once; `_`/`.`-prefixed metadata entries excluded). */
@@ -1357,14 +681,14 @@ object PartitionedManifest extends SnapshotLog {
 
   private def dataFiles(spark: SparkSession, tableRoot: String)
       : Seq[org.apache.hadoop.fs.FileStatus] =
-    ManifestTable.currentDataDir(tableRoot) match {
-      case Some(dir) =>
-        fsOf(spark, tableRoot).listStatus(new HPath(dir)).toSeq.filter {
-          st =>
-            st.isFile && !st.getPath.getName.startsWith("_") &&
-              !st.getPath.getName.startsWith(".")
-        }
-      case None => Seq.empty
+    ManifestTable.currentDataDir(tableRoot).toSeq
+      .flatMap(dataFilesIn(spark, _))
+
+  private def dataFilesIn(spark: SparkSession, dir: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    fsOf(spark, dir).listStatus(new HPath(dir)).toSeq.filter { st =>
+      st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith(".")
     }
 
   /** Small-file compaction — the Iceberg `rewrite_data_files` /
@@ -1373,69 +697,46 @@ object PartitionedManifest extends SnapshotLog {
     * `maintenance` packets run VACUUM-ish upkeep through the same
     * run/track machinery; here the upkeep target is file layout).
     * Every partition whose live version holds more than `maxFiles`
-    * SMALL data files (strictly under `smallFileBytes`) is rewritten —
-    * content-preserving by construction: the update is the partition's
-    * OWN live rows, re-written through [[commitSnapshot]]'s one-job
-    * hive-partitioned write (the REBALANCE write lands a small
-    * partition in one file and a partition above the advisory size in
-    * advisory-sized files) and published in ONE atomic snapshot
-    * commit. Convergent by the size gate: a rewritten partition's
-    * files are either one (small partition) or advisory-sized chunks,
-    * so the next run finds no small files and selects nothing. The
+    * SMALL data files (strictly under `smallFileBytes`), and every
+    * merge-on-read partition (its rewrite is the fold-down), is
+    * rewritten — content-preserving by construction: the update is the
+    * partition's OWN resolved rows through one REBALANCE write (a small
+    * partition lands in one file, one above the advisory size in
+    * advisory-sized files), published in ONE atomic snapshot commit.
+    * Convergent by the size gate, so the next run selects nothing. The
     * advisory sizes PRE-ENCODING shuffle bytes, so on-disk parquet
     * lands at advisory/compression-ratio — `smallFileBytes` must stay
     * BELOW that (the 8 MB default tolerates 8x compression under the
     * 64 MB advisory default; raise it only in step with the advisory,
     * or a just-compacted compressible partition re-qualifies forever).
-    * Untouched partitions keep their version dirs byte-for-byte (the
-    * snapshot maps them unchanged), and a run that selects NOTHING
-    * commits NOTHING (no snapshot churn, no keep-N trim — safe to
-    * schedule against a healthy table).
-    *
-    * Scale shape: candidate selection is a driver-side directory
-    * listing (partition-count-bounded metadata, no data read); the
-    * rewrite is one Spark job over exactly the fragmented partitions'
-    * bytes. Concurrency is OPTIMISTIC (the Iceberg
-    * `rewrite_data_files` contract): the read-set (partition → live
-    * version dir) is snapshotted under the root publish lock, the
-    * rewrite job runs entirely OUTSIDE it — so at 100 TB a
-    * minutes-long layout rewrite never stalls a single ingest commit;
-    * commit latency during compaction is bounded by lock acquisition,
-    * not rewrite duration — and the lock is re-acquired only to
-    * VALIDATE that each rewritten partition's live version is
-    * unchanged. Clean partitions commit in one atomic snapshot;
-    * partitions a concurrent commit touched mid-rewrite are NOT
-    * committed (the fresh commit's rows win — nothing is ever lost)
-    * and are retried with a fresh read-set, up to `maxAttempts`
-    * rounds; a partition that keeps invalidating is left for the next
-    * scheduled run (compaction is convergent maintenance, skipping a
-    * hot partition is always safe). A read-set dir GC'd mid-rewrite
-    * (the partition advanced twice concurrently) fails the rewrite
-    * job loudly; the pass re-selects and retries within the same
-    * attempt budget. Pass the table's own `keepSnapshots` horizon: a
+    * Untouched partitions keep their version dirs byte-for-byte, and a
+    * run that selects NOTHING commits NOTHING (safe to schedule against
+    * a healthy table). Pass the table's own `keepSnapshots` horizon: a
     * real compaction IS a commit and trims like any other.
     *
-    * @param onBeforeValidate test seam, called after each rewrite job
-    *        completes and BEFORE the lock is re-acquired for
-    *        validation — the race window a concurrent committer can
-    *        land in (EngineSpec drives a deterministic mid-compaction
-    *        commit through it)
+    * Concurrency is OPTIMISTIC ([[MergeOnRead]]'s rewrite loop): the
+    * rewrite runs with no lock held, pointer identity validates each
+    * partition under the lock, and partitions a concurrent commit
+    * touched mid-rewrite retry against their fresh versions, up to
+    * `maxAttempts` rounds (skipping a hot partition is always safe).
+    *
+    * `clusterBy` turns the rewrite into a CLUSTERED OPTIMIZE (Iceberg's
+    * rewrite_data_files with a sort order / Delta's OPTIMIZE ZORDER
+    * BY): each partition is RANGE-SPLIT on the cluster columns into
+    * `clusterFiles` files (0 = size-derived from `clusterTargetBytes`),
+    * each internally sorted — so the [[analyzeFileStats]] zone maps get
+    * DISJOINT per-file spans and range scans drop whole files (w19 pins
+    * the before/after pruning). It selects every partition not already
+    * carrying this exact layout's marker (plus MOR-live ones), writes
+    * one job per partition, and with an explicit `clusterFiles` is NOT
+    * convergent under the small-file gate by design.
+    *
+    * @param onBeforeValidate test seam, called after each rewrite
+    *        completes and BEFORE the lock is re-acquired for validation
     * @return (snapshot id — the LAST commit this pass made, or the
     *         unchanged current one when nothing qualified; compacted
     *         partition values)
     */
-  /** `clusterBy` turns the rewrite into a CLUSTERED OPTIMIZE (Iceberg's
-    * rewrite_data_files with a sort order / Delta's OPTIMIZE ZORDER
-    * BY): each rewritten partition is RANGE-SPLIT on the cluster
-    * columns into `clusterFiles` files (0 = size-derived from
-    * `clusterTargetBytes`), each internally sorted — so the
-    * [[analyzeFileStats]] zone maps get DISJOINT per-file spans and
-    * range scans drop whole files (w19 pins the before/after pruning).
-    * The clustered path writes one job per candidate partition
-    * (offline maintenance; file-group-shaped work, as Iceberg's
-    * rewrite runs it) and, with an explicit `clusterFiles`, is NOT
-    * convergent under the small-file gate by design — it is an
-    * explicit layout action, not the steady-state dedup of w08. */
   def compact(spark: SparkSession, root: String, partCol: String,
       maxFiles: Int = 1, keepSnapshots: Int = 2,
       smallFileBytes: Long = 8L << 20, maxAttempts: Int = 3,
@@ -1443,117 +744,22 @@ object PartitionedManifest extends SnapshotLog {
       clusterBy: Seq[String] = Nil, clusterFiles: Int = 0,
       clusterTargetBytes: Long = 128L << 20,
       clusterZOrder: Boolean = false): (String, Seq[String]) = {
-    require(keepSnapshots >= 2,
-      "keepSnapshots must be >= 2 (current + previous)")
-    val fs = fsOf(spark, root)
-    // fragmented partitions with their live version dirs, resolved
-    // under the lock so the read-set is a consistent point-in-time view
-    // a merge-on-read live version is ALWAYS a candidate: a delta chain
-    // is deferred merge work, and compaction is its fold-down — the
-    // rewrite below resolves the logical content and publishes a pure
-    // data dir, converging the layout
-    def selectReadSet(among: Option[Set[String]]): Map[String, String] =
-      partitionValues(spark, root, partCol)
-        .filter(v => among.forall(_.contains(v)))
-        .filter { v =>
-          val pr = s"$root/$partCol=$v"
-          val morLive =
-            ManifestTable.currentDataDir(pr).exists(isMorDir(spark, _))
-          // an explicit CLUSTERED rewrite is a layout action: it
-          // selects every partition regardless of file sizes (the
-          // small-file gate is the steady-state dedup heuristic —
-          // at scale the interleaved files it must fix are LARGE).
-          // CONVERGENT, though: a partition whose live version already
-          // carries this exact layout's marker is skipped, so repeated
-          // identical OPTIMIZE calls rewrite nothing (a MOR-live
-          // partition re-selects — its chain is new unclustered data)
-          if (clusterBy.nonEmpty)
-            morLive || !ManifestTable.currentDataDir(pr).exists(d =>
-              isClusteredAs(spark, d, clusterBy, clusterFiles,
-                clusterZOrder))
-          else
-            smallDataFileCount(spark, pr, smallFileBytes) > maxFiles ||
-              morLive
-        }
-        .map { v =>
-          v -> ManifestTable.currentDataDir(s"$root/$partCol=$v")
-            .getOrElse(sys.error(s"no MANIFEST under $root/$partCol=$v"))
-        }.toMap
-    val done = scala.collection.mutable.ListBuffer.empty[String]
-    var lastSnap: Option[String] = None
-    var candidates = ManifestTable.withPublishLock(root)(selectReadSet(None))
-    var attempt = 0
-    while (candidates.nonEmpty && attempt < maxAttempts) {
-      attempt += 1
-      // EXPENSIVE phase, NO lock held: rewrite the read-set's bytes into
-      // scratch. The read-set dirs are immutable once written; if a
-      // concurrent committer advanced a partition far enough for GC to
-      // collect its read-set dir, this job fails — re-select and retry.
-      val scratch =
-        try {
-          // rewrite through the RECORDED schema when the table evolved:
-          // a pre-evolution version dir lacks added columns (read as
-          // NULL), and without the explicit schema the mixed-shape
-          // union across candidates would fail — compaction then
-          // materializes the nulls, converging the layout on the
-          // current shape
-          val curSchema = currentSnapshot(spark, root)
-            .flatMap(sn => snapshotSchema(spark, root, sn))
-          if (clusterBy.nonEmpty)
-            Some(writeClusteredScratch(spark, root, partCol, candidates,
-              curSchema, clusterBy, clusterFiles, clusterTargetBytes,
-              clusterZOrder))
-          else {
-            // resolveVersionData: a merge-on-read candidate's rewrite is
-            // its RESOLVED content — the fold-down that converges the
-            // delta chain back to a pure data dir
-            val updates = candidates.map { case (v, dir) =>
-              v -> resolveVersionData(spark, s"$root/$partCol=$v",
-                new HPath(dir).getName, curSchema)
-            }
-            Some(writeScratchParts(spark, root, partCol, updates))
-          }
-        } catch {
-          case e: LayoutValidationException => throw e
-          case scala.util.control.NonFatal(_) => None
-        }
-      onBeforeValidate()
-      scratch match {
-        case None =>
-          candidates = ManifestTable.withPublishLock(root)(
-            selectReadSet(Some(candidates.keySet)))
-        case Some(s) =>
-          candidates = ManifestTable.withPublishLock(root) {
-            // CHEAP phase, lock held: a candidate is clean iff its live
-            // version is still exactly the read-set dir (every commit
-            // path advances the partition pointer, so pointer identity
-            // IS read-set validity)
-            val (clean, dirty) = candidates.partition { case (v, dir) =>
-              ManifestTable.currentDataDir(s"$root/$partCol=$v")
-                .contains(dir)
-            }
-            if (clean.nonEmpty) {
-              // emptyUpdate reads the (validated, still-live) read-set
-              // dir — only reached for a partition whose rewrite
-              // produced no scratch subdir, i.e. zero resolved rows
-              lastSnap = Some(adoptPartsLocked(spark, root, partCol,
-                Some(s), clean.keys.toSeq.sorted,
-                v => resolveVersionData(spark, s"$root/$partCol=$v",
-                  new HPath(clean(v)).getName, None), keepSnapshots,
-                operation = "compact"))
-              done ++= clean.keys
-            }
-            // retry only the invalidated partitions, against their NEW
-            // live versions — and only if still fragmented
-            selectReadSet(Some(dirty.keySet))
-          }
-          fs.delete(new HPath(s), true)
-      }
-    }
-    (lastSnap.orElse(currentSnapshot(spark, root)).getOrElse(""),
-      done.sorted.toSeq)
+    val clustering =
+      if (clusterBy.isEmpty) None
+      else Some(MergeOnRead.Clustering(clusterBy, clusterFiles,
+        clusterTargetBytes, clusterZOrder))
+    rewriteLeaves(spark, root, partLeaf(partCol),
+      () => partitionValues(spark, root, partCol),
+      _.filter { case (_, dir) =>
+        isMorDir(spark, dir) || (clustering match {
+          case Some(c) => !isClusteredAs(spark, dir, c)
+          case None =>
+            dataFilesIn(spark, dir).count(_.getLen < smallFileBytes) > maxFiles
+        })
+      },
+      None, clustering, keepSnapshots, maxAttempts, "compact",
+      onBeforeValidate, firstSchema(spark, root, partCol))
   }
-
   /** ORPHAN cleanup ([[SnapshotLog]]'s sweep) under the root and every
     * partition root; the partition column is read off the table's own
     * `<col>=<value>` layout. Returns the deleted paths. */

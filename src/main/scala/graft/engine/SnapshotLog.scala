@@ -47,6 +47,12 @@ trait SnapshotLog {
   type HistoryMeta = SnapshotLog.HistoryMeta
   type FileMeta = SnapshotLog.FileMeta
 
+  /** Close a key's protection set under what its version dirs read
+    * through (merge-on-read base chains, [[MergeOnRead]]): protecting a
+    * dir must protect everything below it. */
+  protected def expandMorProtect(spark: SparkSession, partRoot: String,
+      dirs: Set[String]): Set[String]
+
   protected def fsOf(spark: SparkSession, root: String): FileSystem =
     new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -119,7 +125,7 @@ trait SnapshotLog {
   /** The schema a commit records: `prev` evolved ADDITIVELY by the
     * update's (the Iceberg add-column contract) — existing columns arrive
     * unchanged, new ones append. A removal is an explicit metadata-only
-    * [[PartitionedManifest.dropColumn]]; a type change needs a rewrite. */
+    * `dropColumn`; a type change needs a rewrite. */
   protected def evolvedSchema(prev: Option[StructType],
       upd: Option[StructType]): Option[StructType] = (prev, upd) match {
     case (Some(p), Some(u)) =>
@@ -249,8 +255,7 @@ trait SnapshotLog {
       val pr = s"$root/${leafRoot(k)}"
       val dir = ManifestTable.adoptVersion(pr,
         versionSource(spark, root, scratch, k, leafRoot, emptyLeaf),
-        PartitionedManifest.expandMorProtect(spark, pr,
-          protectByKey.getOrElse(k, Set.empty)))
+        expandMorProtect(spark, pr, protectByKey.getOrElse(k, Set.empty)))
       k -> new HPath(dir).getName
     }.toMap
   }
@@ -553,7 +558,7 @@ trait SnapshotLog {
       sweep(new HPath(root))(_.startsWith("."))
       keys.foreach { k =>
         val pr = s"$root/${leafRoot(k)}"
-        val refs = PartitionedManifest.expandMorProtect(spark, pr,
+        val refs = expandMorProtect(spark, pr,
           referenced.getOrElse(k, Set.empty))
         sweep(new HPath(pr))(name => name.startsWith(".") ||
           (name.startsWith("v") && name.drop(1).headOption.exists(_.isDigit)
@@ -655,6 +660,12 @@ object SnapshotLog {
 
   private[engine] def uuid8(): String =
     java.util.UUID.randomUUID.toString.take(8)
+
+  /** First 8 hex digits of the MD5 of `s` — content-hash pin names. */
+  private[engine] def hash8(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString.take(8)
 
   private[engine] def readUtf8(fs: FileSystem, p: HPath): String = {
     val in = fs.open(p)

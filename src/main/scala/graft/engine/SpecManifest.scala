@@ -30,10 +30,11 @@ import org.apache.spark.sql.functions._
   * Reads serve through a content-pinned catalog relation with ALL
   * partition columns (one plan node, PartitionFilters pruning on each
   * level — plan-asserted in w22). On top of the log this layout owns
-  * its seed, merge-on-read commits, reads, hidden pruning, spec
-  * EVOLUTION, leaf fold-down, layout rewrite and zone-map analyze.
+  * its seed, reads, hidden pruning, spec EVOLUTION and zone-map
+  * analyze; merge-on-read commits, leaf fold-down and layout rewrite
+  * are [[MergeOnRead]]'s, keyed per leaf.
   */
-object SpecManifest extends SnapshotLog {
+object SpecManifest extends MergeOnRead {
 
   /** Partition transforms (the Iceberg set, minus the ones the corpus
     * does not exercise). All derived values render as STRINGS — they
@@ -407,11 +408,6 @@ object SpecManifest extends SnapshotLog {
   private def allLeafPaths(spark: SparkSession, root: String): Seq[String] =
     allLeaves(spark, root).map { case (sp, vs) => leafPath(sp, vs) }.distinct
 
-  private def hash8(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(8)
-
   /** Read a snapshot (default: current) through a content-pinned
     * catalog relation carrying ALL spec fields as partition columns —
     * one plan node, PartitionFilters pruning on every level. The pin
@@ -434,7 +430,7 @@ object SpecManifest extends SnapshotLog {
     val mapping = snapshotMapping(spark, root, snap)
     require(mapping.nonEmpty, s"SpecManifest: empty snapshot $snap")
     val (morLs, pureLs) = mapping.partition { case (k, d) =>
-      PartitionedManifest.isMorDir(spark, s"$root/$k/$d") }
+      isMorDir(spark, s"$root/$k/$d") }
     // files spell RENAMED columns by their PHYSICAL (creation-time)
     // names: serve physically, alias to the logical names at the end
     val physDecl = dataSchema.map(graft.sql.GraftSchemas.physicalSchema)
@@ -447,7 +443,7 @@ object SpecManifest extends SnapshotLog {
       // recovered from the leaf directory paths
       val morDf =
         if (morLs.isEmpty) None
-        else Some(alignMaybe(PartitionedManifest.resolveMorGrouped(spark,
+        else Some(alignMaybe(resolveMorGrouped(spark,
           morLs.map { case (k, d) => (s"$root/$k", d) }, spec.names,
           None), physDecl, spec.names))
       (pureDf.toSeq ++ morDf.toSeq).reduce(_.unionByName(_))
@@ -481,7 +477,7 @@ object SpecManifest extends SnapshotLog {
         .groupBy { case (k, _) => specForLeaf(versions, k) }.toSeq
         .sortBy(_._1.names.mkString("/"))
         .map { case (sp, ls) =>
-          val df = alignMaybe(PartitionedManifest.resolveMorGrouped(spark,
+          val df = alignMaybe(resolveMorGrouped(spark,
             ls.map { case (k, d) => (s"$root/$k", d) }, sp.names, None)
             .drop(sp.names: _*), physDecl, Seq.empty)
           spec.fields.foldLeft(df)((x, f) =>
@@ -522,7 +518,7 @@ object SpecManifest extends SnapshotLog {
     * never reuse a pin built for the previous schema. */
   private def pinName(root: String, mapping: Seq[(String, String)],
       declared: Option[org.apache.spark.sql.types.StructType]): String =
-    s"graft_sm_${hash8(root)}_" + hash8(
+    s"graft_sm_${SnapshotLog.hash8(root)}_" + SnapshotLog.hash8(
       mapping.map { case (k, d) => s"$k\t$d" }.mkString("\n") +
         declared.map(s => "\n#schema=" + s.json).getOrElse(""))
 
@@ -538,8 +534,8 @@ object SpecManifest extends SnapshotLog {
       : DataFrame = {
     val table = pinName(root, mapping, declared)
     if (!spark.catalog.tableExists(table)) {
-      val dataSchema = declared.getOrElse(PartitionedManifest
-        .footerSchema(spark, s"$root/${mapping.head._1}/${mapping.head._2}"))
+      val dataSchema = declared.getOrElse(footerSchema(spark,
+        s"$root/${mapping.head._1}/${mapping.head._2}"))
       val cols = dataSchema.map(f => s"`${f.name}` ${f.dataType.sql}")
         .mkString(", ")
       val partCols = spec.names.map(n => s"`$n` string").mkString(", ")
@@ -576,7 +572,7 @@ object SpecManifest extends SnapshotLog {
       // serves through declared-schema pins, so each group is valid
       // under no declaration, the CURRENT schema, and the schema in
       // effect at that snapshot (time travel).
-      val prefix = s"graft_sm_${hash8(root)}_"
+      val prefix = s"graft_sm_${SnapshotLog.hash8(root)}_"
       val versions = specVersions(spark, root)
       val declaredVariants: String => Seq[Option[
           org.apache.spark.sql.types.StructType]] =
@@ -590,7 +586,7 @@ object SpecManifest extends SnapshotLog {
       val valid = snapshots(spark, root).flatMap { sn =>
         val m = snapshotMapping(spark, root, sn)
         val pure = m.filterNot { case (k, d) =>
-          PartitionedManifest.isMorDir(spark, s"$root/$k/$d") }
+          isMorDir(spark, s"$root/$k/$d") }
         val groups = pure.groupBy { case (k, _) =>
           specForLeaf(versions, k) }.values.toSeq
         for {
@@ -660,13 +656,13 @@ object SpecManifest extends SnapshotLog {
         .toSeq.sortBy(_._1.mkString("/"))
         .map { case (names, ls) =>
           val (mor, pure) = ls.partition { case (k, d) =>
-            PartitionedManifest.isMorDir(spark, s"$root/$k/$d") }
+            isMorDir(spark, s"$root/$k/$d") }
           val parts =
             (if (pure.isEmpty) Nil
-             else Seq(PartitionedManifest.readDirsWithFields(spark,
+             else Seq(readDirsWithFields(spark,
                pure.map { case (k, d) => s"$root/$k/$d" }, names))) ++
             (if (mor.isEmpty) Nil
-             else Seq(PartitionedManifest.resolveMorGrouped(spark,
+             else Seq(resolveMorGrouped(spark,
                mor.map { case (k, d) => (s"$root/$k", d) }, names,
                None)))
           val df = parts.reduce(_.unionByName(_))
@@ -684,21 +680,16 @@ object SpecManifest extends SnapshotLog {
       case (f, t) =>
         val fDf = f.orElse(t.map(_.limit(0))).get
         val tDf = t.orElse(f.map(_.limit(0))).get
-        PartitionedManifest.multisetDiff(tDf, fDf, changeCol)
+        multisetDiff(tDf, fDf, changeCol)
     }
   }
 
   // ---------------------------------------------------------------------
-  // MERGE-ON-READ on the composite spec — the same `_mor.tsv` delta-
-  // chain contract as [[PartitionedManifest]] (see its section comment),
-  // keyed per LEAF: a merge commit writes ONLY the delta under each
-  // touched leaf and becomes visible in one root snapshot swap, so
-  // bytes written scale with the DELTA, never the leaf — the posture a
-  // 100 TB table partitioned on (day, bucket(id)) needs for CDC-style
-  // upsert streams into hot (today's) leaves. Readers (read /
-  // changesBetween / readLeaf) resolve chains through the shared
-  // resolver; [[compactLeaves]] is the fold-down that converges MOR
-  // leaves back to pure data dirs.
+  // MERGE-ON-READ ([[MergeOnRead]]) keyed per LEAF: a merge commit writes
+  // ONLY the delta under each touched leaf, so bytes written scale with
+  // the DELTA, never the leaf — the posture a 100 TB table partitioned on
+  // (day, bucket(id)) needs for CDC-style upsert streams into hot
+  // (today's) leaves. [[compactLeaves]] is the fold-down.
 
   /** One leaf's current LOGICAL content (no partition columns) —
     * MOR-resolving; the single-leaf reader merge builders use instead
@@ -708,7 +699,7 @@ object SpecManifest extends SnapshotLog {
     val lp = leafPath(spec, values)
     val dir = ManifestTable.currentVersion(s"$root/$lp").getOrElse(
       sys.error(s"SpecManifest: no MANIFEST under $root/$lp"))
-    PartitionedManifest.resolveVersionData(spark, s"$root/$lp", dir, None)
+    resolveVersionData(spark, s"$root/$lp", dir, None)
   }
 
   /** A leaf's PHYSICAL data schema: its live chain's bottom (pure)
@@ -723,8 +714,8 @@ object SpecManifest extends SnapshotLog {
     val lp = leafPath(spec, values)
     val dir = ManifestTable.currentVersion(s"$root/$lp").getOrElse(
       sys.error(s"SpecManifest: no MANIFEST under $root/$lp"))
-    val bottom = PartitionedManifest.morChain(spark, s"$root/$lp", dir).last
-    PartitionedManifest.footerSchema(spark, s"$root/$lp/$bottom")
+    val bottom = morChain(spark, s"$root/$lp", dir).last
+    footerSchema(spark, s"$root/$lp/$bottom")
   }
 
   /** The key columns of a leaf's LIVE delta chain (None = pure leaf) —
@@ -734,249 +725,36 @@ object SpecManifest extends SnapshotLog {
       spec: PartitionSpec, values: Seq[String]): Option[Seq[String]] = {
     val lp = leafPath(spec, values)
     ManifestTable.currentVersion(s"$root/$lp").flatMap(d =>
-      PartitionedManifest.chainKeys(spark, s"$root/$lp", d))
+      chainKeys(spark, s"$root/$lp", d))
   }
 
   /** MERGE-ON-READ commit over leaf-keyed `upserts` (full-data-schema
     * replacement rows, keyed by `keyCols`) and `deletes` (key rows):
     * each touched leaf gets a new version dir holding only the delta
-    * files and a `_mor.tsv` naming its base; one atomic root snapshot
-    * covers the whole delta, so CDC and time travel see a MOR commit
-    * exactly like any other. Same contract as
-    * [[PartitionedManifest.commitMerge]]: leaves must exist, upsert
-    * schemas must match the data schema, per leaf the upsert and
-    * delete key sets must be disjoint. Returns the snapshot name.
-    *
-    * CONCURRENCY: like the single-column twin, the delta parquet is
-    * staged with NO lock held; under the lock each leaf binds its
-    * delta to the FRESH live version as the chain base, so racing
-    * merge committers both land (newest layer wins per key) and
-    * serialize only on the metadata tail. `onBeforeLock` is the test
-    * seam between the two phases. */
+    * files and a `_mor.tsv` naming its base, and one atomic root
+    * snapshot covers the whole delta ([[MergeOnRead]]'s commit). Leaves
+    * must exist, every touched leaf's chain-bottom schema must agree
+    * and match the upserts, and per leaf the upsert and delete key sets
+    * must be disjoint. `onBeforeLock` is the test seam between the
+    * lock-free staging and the locked re-bind. Returns the snapshot
+    * name. */
   def commitMerge(spark: SparkSession, root: String,
       spec: PartitionSpec, keyCols: Seq[String],
       upserts: Map[Seq[String], DataFrame] = Map.empty,
       deletes: Map[Seq[String], DataFrame] = Map.empty,
       keepSnapshots: Int = 2,
       onBeforeLock: () => Unit = () => ()): String = {
-    require(keepSnapshots >= 2, "keepSnapshots must be >= 2")
     checkSpec(spark, root, spec)
-    require(keyCols.nonEmpty && !keyCols.exists(spec.names.contains),
-      "commitMerge: keyCols must be data columns, not partition fields")
-    val touched = (upserts.keySet ++ deletes.keySet).toSeq
-      .sortBy(_.mkString("/"))
-    require(touched.nonEmpty, "commitMerge needs upserts or deletes")
-    val fs = fsOf(spark, root)
-    // ---- LOCK-FREE phase: validate optimistically, stage the delta --
-    val snap0 = currentSnapshot(spark, root).getOrElse(sys.error(
-      s"SpecManifest: commitMerge needs a committed snapshot under " +
-        s"$root - seed first"))
-    val base0 = snapshotMapping(spark, root, snap0).toMap
-    val touchedPaths = touched.map(vs => vs -> leafPath(spec, vs))
-    val unknown0 = touchedPaths.collect {
-      case (_, lp) if !base0.contains(lp) => lp }
-    require(unknown0.isEmpty,
-      "SpecManifest: merge-on-read may only touch existing leaves " +
-        s"(new: ${unknown0.mkString(",")}) - create leaves through " +
-        "commitSnapshot")
-    // data-schema authority: each touched leaf's chain BOTTOM (a pure
-    // dir by construction — MOR layers hold no data files). EVERY
-    // touched leaf must agree: on a mixed-shape table (partial
-    // copy-on-write rewrites after an ALTER) a delta matching leaf #1
-    // must not layer onto a differently-shaped leaf #2.
-    def bottomSchema(lp: String, live: String) = {
-      val bottom =
-        PartitionedManifest.morChain(spark, s"$root/$lp", live).last
-      PartitionedManifest.footerSchema(spark, s"$root/$lp/$bottom")
-    }
-    val schema = bottomSchema(touchedPaths.head._2,
-      base0(touchedPaths.head._2))
-    // independent per-leaf footer reads (~25 ms each) — overlap them
-    Par.map(touchedPaths.tail) { case (_, lp) =>
-      val sc = bottomSchema(lp, base0(lp))
-      require(sc.map(f => (f.name, f.dataType)) ==
-          schema.map(f => (f.name, f.dataType)),
-        s"commitMerge: leaf $lp file schema " +
-          s"(${sc.fieldNames.mkString(",")}) differs from leaf " +
-          s"${touchedPaths.head._2}'s " +
-          s"(${schema.fieldNames.mkString(",")}) - mixed-shape " +
-          "leaves cannot share one delta; rewrite the stale leaves " +
-          "first (copy-on-write DML does this automatically)")
-    }
-    keyCols.foreach(k => require(schema.fieldNames.contains(k),
-      s"commitMerge: unknown key column '$k'"))
-    def dataOnly(df: DataFrame): DataFrame =
-      spec.names.foldLeft(df)((x, n) =>
-        if (x.columns.contains(n)) x.drop(n) else x)
-    upserts.foreach { case (vs, df) =>
-      val cols = dataOnly(df).schema.map(f => (f.name, f.dataType))
-      require(cols == schema.map(f => (f.name, f.dataType)).toSeq,
-        s"commitMerge: leaf ${vs.mkString("/")} upsert schema " +
-          s"(${cols.map(_._1).mkString(",")}) does not match the " +
-          s"data schema (${schema.fieldNames.mkString(",")})")
-    }
-    deletes.foreach { case (vs, df) =>
-      val cols = dataOnly(df).columns.toSeq.sorted
-      require(cols == keyCols.sorted,
-        s"commitMerge: leaf ${vs.mkString("/")} delete frame must " +
-          s"carry exactly the key columns ${keyCols.mkString(",")} " +
-          s"(got ${cols.mkString(",")})")
-    }
-    // staging: ONE write job for every leaf's upserts and one for all
-    // deletes — each per-leaf frame tagged with its touched-leaf
-    // ordinal, unioned, written `partitionBy` the tag into a root
-    // scratch, then RENAMED into the per-leaf stage dirs (driver fs
-    // ops). A tiny parquet write has ~0.1-0.3 s fixed cost (job
-    // launch, committer, footers), so L per-leaf writes collapsing to
-    // 2 jobs is the dominant saving on multi-leaf merges (guide §2.4:
-    // two operations keyed the same way share one job; measured in
-    // OPTIMIZATION_r19.md). The per-leaf up/del overlap checks batch
-    // into ONE intersect the same way (the tag keeps it per-leaf;
-    // intersect, not an equi-join, so NULL keys still compare).
-    val Tag = "_graft_stage_leaf" // _graft_ prefix reserved repo-wide
-    val idxOf: Map[Seq[String], Int] =
-      touchedPaths.map(_._1).zipWithIndex.toMap
-    // a union of L per-leaf delta frames carries the SUM of their
-    // partitions (union concatenates); for a multi-leaf merge of tiny
-    // deltas that is L× the task count — and L× the files per tag —
-    // that the widest constituent needed. Coalesce back to the SESSION
-    // SHUFFLE PARALLELISM: scale-free (no shuffle, no size guess, a
-    // no-op for any union already narrower), and every later chain
-    // resolution reads fewer footers. A delta wider than the session
-    // conf is deliberately narrowed to it — the session parallelism
-    // is the cluster-sized write bound.
-    def taggedUnion(m: Map[Seq[String], DataFrame],
-        sel: DataFrame => DataFrame): Option[DataFrame] = {
-      val frames = touchedPaths.flatMap { case (vs, _) =>
-        m.get(vs).map(df => sel(dataOnly(df))
-          .withColumn(Tag, lit(idxOf(vs).toString)))
-      }
-      // coalesce to the session's shuffle parallelism: a no-op when
-      // the union is already narrower, and no .rdd probe (which would
-      // eagerly materialize any shuffle stage a caller's frame holds)
-      frames.reduceOption(_.unionByName(_)).map(u =>
-        if (frames.lengthCompare(1) <= 0) u
-        else u.coalesce(spark.sessionState.conf.numShufflePartitions))
-    }
-    val upAll = taggedUnion(upserts,
-      _.select(schema.fieldNames.toSeq.map(col): _*))
-    val delAll = taggedUnion(deletes,
-      _.select(keyCols.map(col): _*)).map(_.distinct())
-    def scratchWrite(df: Option[DataFrame], what: String)
-        : Option[String] = df.map { d =>
-      val p = s"$root/.morstage-$what-" +
-        java.util.UUID.randomUUID.toString.take(8)
-      d.write.partitionBy(Tag).parquet(p)
-      p
-    }
-    // the two staging writes are INDEPENDENT jobs (different frames,
-    // different scratch roots) — submit both so the second's tasks
-    // back-fill cores freed by the first's tail (guide §2.6)
-    val Seq(scratchUp, scratchDel) = Par.map(Seq(
-      (upAll, "up"), (delAll, "del"))) {
-      case (df, what) => scratchWrite(df, what)
-    }
-    // the up/del disjointness contract checks against the WRITTEN
-    // scratches (explicit schema, so an all-empty side still reads):
-    // one cheap scan of materialized delta bytes instead of
-    // re-evaluating both tagged unions a second time
-    for (us <- scratchUp; ds <- scratchDel) {
-      val u = spark.read.schema(upAll.get.schema).parquet(us)
-      val d = spark.read.schema(delAll.get.schema).parquet(ds)
-      val overlap = u.select((keyCols :+ Tag).map(col): _*)
-        .intersect(d.select((keyCols :+ Tag).map(col): _*))
-        .select(col(Tag)).distinct().collect()
-        .map(r => touchedPaths(r.getString(0).toInt)._2)
-      if (overlap.nonEmpty) {
-        (scratchUp.toSeq ++ scratchDel.toSeq).foreach(p =>
-          try fs.delete(new HPath(p), true)
-          catch { case _: java.io.IOException => () })
-        require(overlap.isEmpty,
-          s"commitMerge: leaf(s) ${overlap.sorted.mkString(",")} have " +
-            "keys in BOTH upserts and deletes - an upsert already " +
-            "replaces; a delete already removes")
-      }
-    }
-    val staged: Seq[(String, String)] =
-      try touchedPaths.zipWithIndex.map { case ((vs, lp), i) =>
-        val pr = s"$root/$lp"
-        val stage =
-          s"$pr/.mor-${java.util.UUID.randomUUID.toString.take(8)}"
-        fs.mkdirs(new HPath(s"$stage/_delta"))
-        // a leaf whose frame produced no rows writes no scratch
-        // subdir; the resolver probes each _delta subdir with
-        // fs.exists, so absent == empty (same read semantics)
-        def adopt(scratch: Option[String], sub: String): Unit =
-          scratch.foreach { sc =>
-            val src = new HPath(s"$sc/$Tag=$i")
-            if (fs.exists(src))
-              fs.rename(src, new HPath(s"$stage/_delta/$sub"))
-          }
-        adopt(scratchUp, "upserts")
-        adopt(scratchDel, "deletes")
-        lp -> stage
-      } finally (scratchUp.toSeq ++ scratchDel.toSeq).foreach(p =>
-        try fs.delete(new HPath(p), true)
-        catch { case _: java.io.IOException => () })
-    onBeforeLock()
-    // ---- LOCKED phase: metadata only — bind each delta to its FRESH
-    // chain base, adopt, snapshot ----
-    def dropStaged(): Unit = staged.foreach { case (_, st) =>
-      try fs.delete(new HPath(st), true)
-      catch { case _: java.io.IOException => () }
-    }
-    try ManifestTable.withPublishLock(root) {
-      val snap = currentSnapshot(spark, root).get
-      val base = snapshotMapping(spark, root, snap).toMap
-      val unknown = staged.collect {
-        case (lp, _) if !base.contains(lp) => lp }
-      require(unknown.isEmpty,
-        "SpecManifest: merge-on-read may only touch existing leaves " +
-          s"(new: ${unknown.mkString(",")})")
-      // a schema-changing commit that landed mid-staging invalidates
-      // the staged frames' shape — fail loudly, never adopt a stale
-      // shape (mirrors PartitionedManifest.commitMerge). EVERY staged
-      // leaf's FRESH chain bottom is checked, not just the first: a
-      // racing partial rewrite can reshape any one of them.
-      staged.foreach { case (lp, _) =>
-        val live = ManifestTable.currentVersion(s"$root/$lp").getOrElse(
-          sys.error(s"SpecManifest: no MANIFEST under $root/$lp"))
-        val curSchema = bottomSchema(lp, live)
-        require(curSchema.map(f => (f.name, f.dataType)) ==
-            schema.map(f => (f.name, f.dataType)),
-          s"commitMerge: leaf $lp's schema evolved while the delta " +
-            "was staging - restage against the current schema")
-      }
-      val protectByLeaf = protectedDirsByKey(spark, root, keepSnapshots)
-      val written: Map[String, String] = Par.map(staged) { case (lp, stage) =>
-        val pr = s"$root/$lp"
-        val baseDir = ManifestTable.currentVersion(pr).getOrElse(
-          sys.error(s"SpecManifest: no MANIFEST under $pr"))
-        // uniform chain keys (see PartitionedManifest.commitMerge)
-        PartitionedManifest.chainKeys(spark, pr, baseDir).foreach(bk =>
-          require(bk == keyCols,
-            s"commitMerge: leaf $lp has a delta chain keyed by " +
-              s"(${bk.mkString(",")}) - a merge keyed by " +
-              s"(${keyCols.mkString(",")}) cannot layer on it; " +
-              "compactLeaves() first or reuse the chain's keys"))
-        ManifestTable.writeOnce(stage, PartitionedManifest.MorFile,
-          s"#keys=${keyCols.mkString(",")}\nbase=$baseDir\n")
-        val protect = PartitionedManifest.expandMorProtect(spark, pr,
-          protectByLeaf.getOrElse(lp, Set.empty))
-        lp -> new HPath(ManifestTable.adoptVersion(pr, stage, protect))
-          .getName
-      }.toMap
-      writeSnapshotLocked(spark, root,
-        (base ++ written).toSeq.sortBy(_._1), keepSnapshots,
-        operation = "merge")
-    } catch {
-      case e: Throwable => dropStaged(); throw e
-    }
+    def byLeaf(m: Map[Seq[String], DataFrame]): Map[String, DataFrame] =
+      m.map { case (vs, df) => leafPath(spec, vs) -> df }
+    commitMergeCore(spark, root, identity, spec.names, keyCols,
+      byLeaf(upserts), byLeaf(deletes), keepSnapshots, foldChainAt = 0,
+      onBeforeLock)
   }
 
   /** Collect file-level min/max zone maps for `cols` on every LIVE
-    * leaf version dir — [[PartitionedManifest.analyzeFileStats]] on
-    * the composite layout. The content-pinned read relations already
+    * leaf version dir — the single-column layout's `analyzeFileStats`
+    * on the composite layout. The content-pinned read relations already
     * carry the zone-map property, so after ANALYZE a PLAIN
     * `read(…).where(range)` prunes files below partition pruning with
     * no helper call (the w21 contract on spec tables). Idempotent per
@@ -992,7 +770,7 @@ object SpecManifest extends SnapshotLog {
     allLeafPaths(spark, root).map { lp =>
       val dir = ManifestTable.currentDataDir(s"$root/$lp").getOrElse(
         sys.error(s"SpecManifest: no MANIFEST under $root/$lp"))
-      require(!PartitionedManifest.isMorDir(spark, dir),
+      require(!isMorDir(spark, dir),
         s"SpecManifest: leaf $lp is merge-on-read at $dir - analyze " +
           "after compactLeaves() folds the delta chain down")
       if (FileStats.collect(spark, dir, cols) >= 0) 1 else 0
@@ -1007,111 +785,38 @@ object SpecManifest extends SnapshotLog {
     filesMetadataOf(spark, root, snapshot, identity)
   }
 
-  /** The validated tail of an optimistic leaf rewrite: repoint each
-    * clean leaf at its staged dir and commit the current mapping with
-    * them replaced. Caller holds the root publish lock. */
-  private def commitRepointedLocked(spark: SparkSession, root: String,
-      staged: Map[String, String], keepSnapshots: Int,
-      operation: String): String = {
-    staged.foreach { case (lp, d) =>
-      ManifestTable.repointVersion(s"$root/$lp", d) }
-    val base = snapshotMapping(spark, root, currentSnapshot(spark, root).get)
-    writeSnapshotLocked(spark, root, (base.toMap ++ staged).toSeq.sortBy(_._1),
-      keepSnapshots, operation = operation)
-  }
-
   /** Fold every merge-on-read leaf back down to a pure data dir — the
-    * spec table's compaction pass, OPTIMISTIC like
-    * [[PartitionedManifest.compact]]: the read-set (leaf → live
-    * version dir) snapshots under the root lock, the resolve-and-
-    * rewrite job runs with NO lock held (a minutes-long fold never
-    * stalls an ingest commit), and the lock is re-acquired only to
-    * validate pointer identity per leaf; leaves a concurrent commit
+    * spec table's compaction pass, OPTIMISTIC ([[MergeOnRead]]'s
+    * rewrite loop): the resolve-and-rewrite runs with NO lock held (a
+    * minutes-long fold never stalls an ingest commit), pointer identity
+    * validates each leaf under the lock, and leaves a concurrent commit
     * touched mid-rewrite retry with a fresh read-set up to
     * `maxAttempts`. Returns (last snapshot, folded leaf paths). */
   def compactLeaves(spark: SparkSession, root: String,
       spec: PartitionSpec, keepSnapshots: Int = 2, maxAttempts: Int = 3,
       onBeforeValidate: () => Unit = () => ()): (String, Seq[String]) = {
-    require(keepSnapshots >= 2, "keepSnapshots must be >= 2")
     checkSpec(spark, root, spec)
-    val fs = fsOf(spark, root)
-    def selectReadSet(among: Option[Set[String]]): Map[String, String] = {
-      val snap = currentSnapshot(spark, root).getOrElse(
-        sys.error(s"SpecManifest: no snapshot committed under $root"))
-      snapshotMapping(spark, root, snap)
-        .filter { case (k, _) => among.forall(_.contains(k)) }
-        .filter { case (k, d) =>
-          PartitionedManifest.isMorDir(spark, s"$root/$k/$d") }
-        .toMap
-    }
-    val done = scala.collection.mutable.ListBuffer.empty[String]
-    var lastSnap: Option[String] = None
-    var candidates =
-      ManifestTable.withPublishLock(root)(selectReadSet(None))
-    var attempt = 0
-    while (candidates.nonEmpty && attempt < maxAttempts) {
-      attempt += 1
-      // EXPENSIVE phase, NO lock held: resolve each candidate chain
-      // and write the pure replacement into a staged dir under its
-      // leaf (a GC'd read-set dir fails loudly → re-select and retry)
-      val staged: Option[Map[String, String]] =
-        try Some(Par.map(candidates.toSeq) { case (lp, d) =>
-          val pr = s"$root/$lp"
-          val tmp = s"$pr/.fold-${java.util.UUID.randomUUID.toString.take(8)}"
-          PartitionedManifest.resolveVersionData(spark, pr, d, None)
-            .write.mode("error").parquet(tmp)
-          lp -> new HPath(ManifestTable.stageVersion(pr, tmp)).getName
-        }.toMap)
-        catch { case scala.util.control.NonFatal(_) => None }
-      onBeforeValidate()
-      staged match {
-        case None =>
-          candidates = ManifestTable.withPublishLock(root)(
-            selectReadSet(Some(candidates.keySet)))
-        case Some(st) =>
-          candidates = ManifestTable.withPublishLock(root) {
-            // CHEAP phase, lock held: pointer identity IS validity
-            val (clean, dirty) = candidates.partition { case (lp, d) =>
-              ManifestTable.currentVersion(s"$root/$lp").contains(d)
-            }
-            if (clean.nonEmpty) {
-              lastSnap = Some(commitRepointedLocked(spark, root,
-                clean.keys.map(lp => lp -> st(lp)).toMap, keepSnapshots,
-                "compact"))
-              done ++= clean.keys
-            }
-            // staged dirs for invalidated leaves are orphans: drop them
-            dirty.keys.foreach(lp =>
-              fs.delete(new HPath(s"$root/$lp/${st(lp)}"), true))
-            selectReadSet(Some(dirty.keySet))
-          }
-      }
-    }
-    (lastSnap.orElse(currentSnapshot(spark, root)).getOrElse(""),
-      done.sorted.toSeq)
+    rewriteLeaves(spark, root, identity, () => allLeafPaths(spark, root),
+      _.filter { case (_, dir) => isMorDir(spark, dir) }, None, None,
+      keepSnapshots, maxAttempts, "compact", onBeforeValidate)
   }
 
-  /** CLUSTERED / Z-ORDER `OPTIMIZE` on the composite-spec layout —
-    * [[PartitionedManifest.compact]]'s `clusterBy`/`clusterZOrder`
-    * rewrite carried to spec tables (the declared 100 TB shape): every
-    * live leaf is rewritten into `clusterFiles` (or size-derived)
-    * internally-sorted files, lexicographic on `clusterBy` or
-    * Morton-interleaved (`zOrder=true`, exactly two columns), so
-    * zone-map file skipping gets DISJOINT ranges to prune against.
+  /** CLUSTERED / Z-ORDER `OPTIMIZE` on the composite-spec layout: every
+    * live leaf is rewritten into `clusterFiles` (or size-derived from
+    * `targetBytes`) internally-sorted files, lexicographic on
+    * `clusterBy` or Morton-interleaved (`zOrder=true`, exactly two
+    * columns), so zone-map file skipping gets DISJOINT ranges to prune
+    * against.
     *
     * CONVERGENT: each rewritten version dir is stamped with the layout
-    * marker ([[PartitionedManifest.ClusterMarker]]); a leaf already
-    * carrying exactly this layout is skipped, so repeated identical
-    * calls rewrite nothing. A merge-on-read leaf always re-selects —
-    * its delta chain is new unclustered data, and the rewrite is its
-    * fold-down. `schema` (the catalog's current PHYSICAL schema, when
-    * the table is catalog-managed) converges stale-shaped leaves onto
-    * the current shape as they rewrite.
-    *
-    * Same two-phase optimistic loop as [[compactLeaves]]: the
-    * expensive clustered write runs with NO lock held; under the lock
-    * pointer identity validates the read-set, clean leaves repoint,
-    * dirty ones retry. Returns (snapshot, rewritten leaf paths). */
+    * marker; a leaf already carrying exactly this layout is skipped, so
+    * repeated identical calls rewrite nothing. A merge-on-read leaf
+    * always re-selects — its delta chain is new unclustered data, and
+    * the rewrite is its fold-down. `schema` (the catalog's current
+    * PHYSICAL schema, when the table is catalog-managed) converges
+    * stale-shaped leaves onto the current shape as they rewrite.
+    * Same optimistic loop as [[compactLeaves]]. Returns (snapshot,
+    * rewritten leaf paths). */
   def rewriteLayout(spark: SparkSession, root: String,
       spec: PartitionSpec, clusterBy: Seq[String], clusterFiles: Int = 0,
       targetBytes: Long = 128L << 20, zOrder: Boolean = false,
@@ -1120,7 +825,6 @@ object SpecManifest extends SnapshotLog {
       keepSnapshots: Int = 2,
       maxAttempts: Int = 3,
       onBeforeValidate: () => Unit = () => ()): (String, Seq[String]) = {
-    require(keepSnapshots >= 2, "keepSnapshots must be >= 2")
     require(clusterBy.nonEmpty, "rewriteLayout: empty cluster columns")
     require(!zOrder || clusterBy.length == 2,
       "rewriteLayout: zOrder interleaves exactly two columns")
@@ -1128,7 +832,8 @@ object SpecManifest extends SnapshotLog {
       "rewriteLayout: cluster columns must be data columns, not " +
         "partition fields")
     checkSpec(spark, root, spec)
-    val fs = fsOf(spark, root)
+    val layout = MergeOnRead.Clustering(clusterBy, clusterFiles,
+      targetBytes, zOrder)
     /** Leaves admitted by `leafWhere` — a SQL predicate over the
       * PARTITION FIELD names, evaluated driver-side over the leaf
       * tuples (values are the directory-name STRINGS; leaf-count
@@ -1136,7 +841,7 @@ object SpecManifest extends SnapshotLog {
       * incrementally per partition predicate ("y = '2025'"), never
       * the whole table per call — Iceberg's rewrite_data_files
       * `where`. */
-    def admitted(keys: Iterable[String]): Set[String] = leafWhere match {
+    def admitted(keys: Seq[String]): Set[String] = leafWhere match {
       case None => keys.toSet
       case Some(w) =>
         // a spec-evolved table keeps OLD-layout leaves (fewer
@@ -1145,7 +850,7 @@ object SpecManifest extends SnapshotLog {
         // rather than crash, matching the "old layouts stay
         // mergeable" posture (a call without `where` still rewrites
         // everything)
-        val rows = keys.toSeq
+        val rows = keys
           .filter(_.split("/").length == spec.names.length)
           .map { lp =>
             val vs = lp.split("/").toSeq.map(_.split("=", 2)(1))
@@ -1161,81 +866,12 @@ object SpecManifest extends SnapshotLog {
           sch).filter(expr(w)).collect()
           .map(_.getString(spec.names.length)).toSet
     }
-    def selectReadSet(among: Option[Set[String]]): Map[String, String] = {
-      val snap = currentSnapshot(spark, root).getOrElse(
-        sys.error(s"SpecManifest: no snapshot committed under $root"))
-      val mapping = snapshotMapping(spark, root, snap)
-        .filter { case (k, _) => among.forall(_.contains(k)) }
-      val keep = admitted(mapping.map(_._1))
-      mapping
-        .filter { case (k, _) => keep.contains(k) }
-        .filter { case (k, d) =>
-          PartitionedManifest.isMorDir(spark, s"$root/$k/$d") ||
-            !PartitionedManifest.isClusteredAs(spark, s"$root/$k/$d",
-              clusterBy, clusterFiles, zOrder)
-        }
-        .toMap
-    }
-    val done = scala.collection.mutable.ListBuffer.empty[String]
-    var lastSnap: Option[String] = None
-    var candidates =
-      ManifestTable.withPublishLock(root)(selectReadSet(None))
-    var attempt = 0
-    while (candidates.nonEmpty && attempt < maxAttempts) {
-      attempt += 1
-      // EXPENSIVE phase, NO lock: resolve each candidate (folding any
-      // MOR chain down) and write its clustered replacement staged
-      // under the leaf
-      val staged: Option[Map[String, String]] =
-        try Some(Par.map(candidates.toSeq) { case (lp, d) =>
-          val pr = s"$root/$lp"
-          val df = PartitionedManifest.resolveVersionData(spark, pr, d,
-            schema)
-          val bytes = PartitionedManifest.morChain(spark, pr, d)
-            .map(x => fs.getContentSummary(new HPath(s"$pr/$x"))
-              .getLength).sum
-          val nf =
-            if (clusterFiles > 0) clusterFiles
-            else math.max(1,
-              math.ceil(bytes.toDouble / targetBytes).toInt)
-          val tmp =
-            s"$pr/.optimize-${java.util.UUID.randomUUID.toString.take(8)}"
-          PartitionedManifest.clusterFrame(df, clusterBy, nf, zOrder,
-            s"leaf $lp").write.mode("error").parquet(tmp)
-          // the layout marker rides into the version dir: repeated
-          // identical calls then select nothing
-          ManifestTable.writeOnce(tmp, PartitionedManifest.ClusterMarker,
-            PartitionedManifest.clusterMarkerBody(clusterBy,
-              clusterFiles, zOrder))
-          lp -> new HPath(ManifestTable.stageVersion(pr, tmp)).getName
-        }.toMap)
-        catch {
-          case e: PartitionedManifest.LayoutValidationException => throw e
-          case scala.util.control.NonFatal(_) => None
-        }
-      onBeforeValidate()
-      staged match {
-        case None =>
-          candidates = ManifestTable.withPublishLock(root)(
-            selectReadSet(Some(candidates.keySet)))
-        case Some(st) =>
-          candidates = ManifestTable.withPublishLock(root) {
-            val (clean, dirty) = candidates.partition { case (lp, d) =>
-              ManifestTable.currentVersion(s"$root/$lp").contains(d)
-            }
-            if (clean.nonEmpty) {
-              lastSnap = Some(commitRepointedLocked(spark, root,
-                clean.keys.map(lp => lp -> st(lp)).toMap, keepSnapshots,
-                "rewrite_layout"))
-              done ++= clean.keys
-            }
-            dirty.keys.foreach(lp =>
-              fs.delete(new HPath(s"$root/$lp/${st(lp)}"), true))
-            selectReadSet(Some(dirty.keySet))
-          }
-      }
-    }
-    (lastSnap.orElse(currentSnapshot(spark, root)).getOrElse(""),
-      done.sorted.toSeq)
+    rewriteLeaves(spark, root, identity, () => allLeafPaths(spark, root),
+      { leaves =>
+        val keep = admitted(leaves.map(_._1))
+        leaves.filter { case (lp, dir) => keep(lp) &&
+          (isMorDir(spark, dir) || !isClusteredAs(spark, dir, layout)) }
+      }, schema, Some(layout), keepSnapshots, maxAttempts,
+      "rewrite_layout", onBeforeValidate)
   }
 }

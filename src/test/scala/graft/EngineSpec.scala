@@ -2153,6 +2153,52 @@ class EngineSpec extends AnyFunSuite {
     assert(content() == got, "fold-down must preserve content")
     PartitionedManifest.syncCatalogTable(spark, root, "mor_t", "bk", "int")
     assert(spark.table("mor_t").count() == 99)
+    // the same protection on a SPEC table, whose compaction adopts
+    // through version GC: a tagged pre-compaction snapshot keeps reading
+    // its merge-on-read content after compactLeaves and one more commit,
+    // and the orphan sweep deletes no dir of the tagged chain
+    import graft.engine.SpecManifest
+    import graft.engine.SpecManifest.{Identity, PartField, PartitionSpec}
+    val sroot = Files.createTempDirectory("graft-specmor").toString
+    val spec = PartitionSpec(Seq(PartField("g", "grp", Identity)))
+    SpecManifest.seed(spark, sroot, (0 until 20).map(i =>
+      (i.toLong, i * 1.0, s"g${i % 2}")).toDF("k", "v", "grp"), spec)
+    def specMerge(k: Long, v: Double, del: Seq[Long] = Nil) =
+      SpecManifest.commitMerge(spark, sroot, spec, Seq("k"),
+        upserts = Map(Seq("g0") -> Seq((k, v, "g0")).toDF("k", "v", "grp")),
+        deletes = if (del.isEmpty) Map.empty
+          else Map(Seq("g0") -> del.toDF("k")))
+    specMerge(0L, 100.0, del = Seq(2L))
+    specMerge(4L, 400.0)
+    val pre = SpecManifest.tagSnapshot(spark, sroot, "pre")
+    def specContent(snap: String) = SpecManifest.read(spark, sroot, spec,
+      Some(snap)).select($"k", $"v").as[(Long, Double)].collect().toMap
+    val preContent = specContent(pre)
+    assert(preContent(0L) == 100.0 && preContent(4L) == 400.0 &&
+      !preContent.contains(2L) && preContent.size == 19, preContent)
+    val (_, folded) = SpecManifest.compactLeaves(spark, sroot, spec)
+    assert(folded == Seq("g=g0"), folded)
+    specMerge(6L, 600.0)
+    assert(specContent(pre) == preContent,
+      "the tagged pre-compaction snapshot must still resolve its chain")
+    val leafRoot = s"$sroot/g=g0"
+    def chainOf(d: String): List[String] = {
+      val m = java.nio.file.Paths.get(leafRoot, d, "_mor.tsv")
+      if (!Files.exists(m)) List(d)
+      else d :: chainOf(new String(Files.readAllBytes(m),
+        java.nio.charset.StandardCharsets.UTF_8).linesIterator
+        .find(_.startsWith("base=")).get.stripPrefix("base="))
+    }
+    val chain = chainOf(SpecManifest.snapshotMapping(spark, sroot, pre)
+      .toMap.apply("g=g0"))
+    assert(chain.length == 3, s"two layers over the seed dir: $chain")
+    val swept = SpecManifest.cleanOrphans(spark, sroot, spec, graceMs = 0L)
+    assert(!swept.exists(p => chain.exists(d => p.endsWith(s"/g=g0/$d"))),
+      s"the sweep deleted a dir of the tagged chain: $swept")
+    assert(chain.forall(d => Files.isDirectory(
+      java.nio.file.Paths.get(leafRoot, d))), s"chain dirs gone: $chain")
+    assert(specContent(pre) == preContent,
+      "the tagged snapshot must still read after the sweep")
   }
 
   test("merge-on-read: foldChainAt bounds the delta chain inline — a " +
@@ -2242,6 +2288,31 @@ class EngineSpec extends AnyFunSuite {
     assert(got(999L) == 9.0, "the mid-fold commit's row must survive")
     assert(got.size == 41 && got.values.count(_ == -1.0) == leaves.size,
       s"fold must preserve merged content: size=${got.size}")
+    // the same race through the clustered layout rewrite, the loop's
+    // other spec caller: the mid-rewrite commit wins, and its leaf is
+    // re-clustered from the fresh version, never adopted stale
+    def isClustered(vs: Seq[String]) = fs.exists(new HPath(
+      s"$root/g=${vs(0)}/b=${vs(1)}/" + ManifestTable.currentVersion(
+        s"$root/g=${vs(0)}/b=${vs(1)}").get, "_clustered.tsv"))
+    var fired2 = false
+    val (_, rewritten) = SpecManifest.rewriteLayout(spark, root, spec,
+      Seq("k"), clusterFiles = 1,
+      onBeforeValidate = () => if (!fired2) {
+        fired2 = true
+        SpecManifest.commitMerge(spark, root, spec, Seq("k"),
+          upserts = Map(hot -> Seq((998L, 8.0, hot(0)))
+            .toDF("k", "v", "grp")))
+      })
+    assert(fired2, "race hook never fired")
+    assert(rewritten.toSet ==
+      leaves.map(vs => s"g=${vs(0)}/b=${vs(1)}").toSet,
+      s"every leaf must rewrite (retry included): $rewritten")
+    assert(leaves.forall(vs => !isMor(vs) && isClustered(vs)),
+      "every leaf must end pure and clustered")
+    val got2 = SpecManifest.read(spark, root, spec)
+      .select($"k", $"v").as[(Long, Double)].collect().toMap
+    assert(got2(998L) == 8.0, "the mid-rewrite commit's row must survive")
+    assert(got2 - 998L == got, s"rewrite must preserve content: $got2")
   }
 
   test("spec evolution contracts: reads serve the CURRENT spec only, " +
@@ -2930,6 +3001,34 @@ class EngineSpec extends AnyFunSuite {
     assert(text(r2, "_refs/t2") == specBase + "\n")
     assert(text(root, "_branches/wap") == s"$pmBranch\t$s5\n")
     assert(text(r2, "_branches/wap") == s"$specBranch\t$specBase\n")
+    // ON-DISK FORMAT of a merge-on-read commit with upserts and deletes,
+    // on both layouts: `_mor.tsv` is exactly `#keys=<keys>\nbase=<the
+    // previous version>\n`, the delta under `_delta/{upserts,deletes}`
+    import scala.jdk.CollectionConverters._
+    def pinMor(keyRoot: String, keys: String)(merge: => String): Unit = {
+      val before = graft.engine.ManifestTable.currentVersion(keyRoot).get
+      merge
+      val live = graft.engine.ManifestTable.currentVersion(keyRoot).get
+      assert(before.matches("v\\d{6}-[0-9a-f]{8}"), before)
+      assert(text(keyRoot, s"$live/_mor.tsv") ==
+        s"#keys=$keys\nbase=$before\n", text(keyRoot, s"$live/_mor.tsv"))
+      Seq("upserts", "deletes").foreach { sub =>
+        val d = java.nio.file.Paths.get(keyRoot, live, "_delta", sub)
+        val parquet = Files.list(d).iterator().asScala
+          .count(_.getFileName.toString.endsWith(".parquet"))
+        assert(parquet > 0, s"no delta parquet under $d")
+      }
+    }
+    pinMor(s"$root/bk=1", "k,v")(PartitionedManifest.commitMerge(spark,
+      root, "bk", Seq("k", "v"),
+      upserts = Map("1" -> Seq((1L, 1.5)).toDF("k", "v")),
+      deletes = Map("1" -> Seq((3L, 3.0)).toDF("k", "v")),
+      keepSnapshots = 10))
+    pinMor(s"$r2/g=a", "k,grp")(SpecManifest.commitMerge(spark, r2, spec,
+      Seq("k", "grp"),
+      upserts = Map(Seq("a") -> Seq((300L, "a")).toDF("k", "grp")),
+      deletes = Map(Seq("a") -> Seq((1L, "a")).toDF("k", "grp")),
+      keepSnapshots = 10))
   }
 
   test("a delta chain refuses a differently-keyed merge: resolution " +
