@@ -173,35 +173,11 @@ final class Engine(spark: SparkSession, targets: Seq[Target],
             // fixture scan needed
             Jdbc.registerTables(session, ch)
           case None =>
-            // register only what the packet's SQL references: each fixture
-            // registration costs a parquet-footer read and each catalog
-            // view an analysis pass — a 2-table packet should not pay for
-            // all 25. The reference scan runs on PLACEHOLDER-SUBSTITUTED,
-            // lower-cased text (SQL identifiers are case-insensitive and a
-            // table name may arrive via DBC_PL_*); generator fields or
-            // leftover placeholders could still smuggle a name in, so any
-            // unresolved token falls back to registering everything.
-            val rawText = Option(new java.io.File(s"$packetsRoot/${spec.packetName}")
-                .listFiles()).getOrElse(Array.empty)
-              .filter(f => f.getName.endsWith(".sql") || f.getName.endsWith(".py"))
-              .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath)))
-              .mkString("\n")
-            val sqlText = Placeholders.applyUser(rawText, spec.placeholders).toLowerCase
-            val referenced = Tables.all.filter(sqlText.contains)
-            // python-step callbacks can touch any table, an unresolved
-            // DBC_PL_* may hide a table name, and a generator field in
-            // table position (FROM GEN_OBJ_FLD_1) names tables at fan-out
-            // time — all three fall back to registering everything
-            val conservative = rawText.isEmpty ||
-              sqlText.contains("dbc_pl_") ||
-              "(?i)(from|join|table)\\s+gen_(obj|nsp)_fld".r
-                .findFirstIn(sqlText).isDefined ||
-              new java.io.File(s"$packetsRoot/${spec.packetName}")
-                .listFiles().exists(_.getName.endsWith(".py"))
-            if (conservative) Tables.registerAll(session, t.dataDir)
-            else Tables.registerSome(session, t.dataDir, referenced)
-            if (conservative || sqlText.contains("pg_"))
-              graft.sources.PgCatalog.registerAll(session)
+            val (tables, pg) = Engine.fixtureTables(
+              s"$packetsRoot/${spec.packetName}", spec.placeholders)
+            tables.fold(Tables.registerAll(session, t.dataDir))(
+              Tables.registerSome(session, t.dataDir, _))
+            if (pg) graft.sources.PgCatalog.registerAll(session)
         }
         // packet SQL may call the PG scalar surface (pg_size_pretty,
         // quote_ident, pg_sleep) — session-scoped, so register per run
@@ -258,6 +234,40 @@ final class Engine(spark: SparkSession, targets: Seq[Target],
         acc.notices ++ r.notices,
         acc.resultData ++ r.resultData)
     }
+  }
+}
+
+object Engine {
+
+  /** The fixture tables a packet's text names (None: every table) and
+    * whether it reads the synthesized pg_ catalog. Each fixture
+    * registration costs a parquet-footer read and each catalog view an
+    * analysis pass — a 2-table packet should not pay for all 25. The
+    * reference scan runs on PLACEHOLDER-SUBSTITUTED, lower-cased text
+    * (SQL identifiers are case-insensitive and a table name may arrive
+    * via DBC_PL_*) and matches whole words ("PARTITIONED" names no
+    * `part`). Python-step callbacks can touch any table, an unresolved
+    * DBC_PL_* may hide a table name, and a generator field in table
+    * position (FROM GEN_OBJ_FLD_1) names tables at fan-out time — all
+    * three fall back to every table. */
+  private[graft] def fixtureTables(packetDir: String,
+      placeholders: Map[String, String]): (Option[Seq[String]], Boolean) = {
+    val files = Option(new java.io.File(packetDir).listFiles())
+      .getOrElse(Array.empty)
+      .filter(f => f.getName.endsWith(".sql") || f.getName.endsWith(".py"))
+    val rawText = files
+      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath)))
+      .mkString("\n")
+    val sqlText = Placeholders.applyUser(rawText, placeholders).toLowerCase
+    val conservative = rawText.isEmpty ||
+      sqlText.contains("dbc_pl_") ||
+      "(?i)(from|join|table)\\s+gen_(obj|nsp)_fld".r
+        .findFirstIn(sqlText).isDefined ||
+      files.exists(_.getName.endsWith(".py"))
+    (if (conservative) None
+     else Some(Tables.all.filter(t =>
+       s"\\b$t\\b".r.findFirstIn(sqlText).isDefined)),
+      conservative || sqlText.contains("pg_"))
   }
 }
 

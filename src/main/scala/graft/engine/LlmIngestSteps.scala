@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Packing, TextAnalysis}
+import graft.sources.FooterSchema
 
 /** The e02_llm_ingest packet's step callbacks: the flagship
   * training-data pipeline — TRAIN a tokenizer (batched BPE, the t23
@@ -28,6 +29,10 @@ object LlmIngestSteps {
   private def ph(ctx: StepContext, key: String): String =
     ctx.placeholders.getOrElse(key,
       sys.error(s"$Packet: missing placeholder $key"))
+
+  /** Artifact dirs are overwritten in place: their schema is re-read. */
+  private def load(ctx: StepContext, p: String) =
+    ctx.spark.read.schema(FooterSchema.of(ctx.spark, Seq(p))).parquet(p)
 
   /** The ingest corpus: run_once's view when present, else the raw
     * documents table — a FRESH session resuming mid-packet never
@@ -63,7 +68,7 @@ object LlmIngestSteps {
       // the tokenizer comes BACK FROM THE ARTIFACT (rank order), not
       // from the trainer's in-memory state — a fresh engine resuming at
       // this step encodes identically
-      val merges = spark.read.parquet(art).orderBy(col("rank"))
+      val merges = load(ctx, art).orderBy(col("rank"))
         .select(col("a"), col("b")).as[(String, String)].collect().toSeq
       TextAnalysis.bpeEncodeIds(corpus(spark),
           "doc_id", "text", merges)
@@ -77,7 +82,7 @@ object LlmIngestSteps {
       val spark = ctx.spark
       val enc = ph(ctx, "e02_enc")
       val pack = ph(ctx, "e02_pack")
-      val counts = spark.read.parquet(enc)
+      val counts = load(ctx, enc)
         .select(col("doc_id").cast("long").as("id"),
           size(col("token_ids")).cast("long").as("n_tokens"))
       Packing.sequenceChunksFromCounts(counts, "doc_id", window = 512)
@@ -93,13 +98,13 @@ object LlmIngestSteps {
       val pub = ph(ctx, "e02_pub")
       val counted = corpus(spark)
         .select(col("doc_id"), col("source"))
-        .join(spark.read.parquet(enc)
+        .join(load(ctx, enc)
           .select(col("doc_id"),
             size(col("token_ids")).cast("long").as("n_toks")),
           "doc_id")
       val cur = TextAnalysis.curriculumInterleaveFromCounts(
         counted, "doc_id", "source")
-      val packed = spark.read.parquet(pack)
+      val packed = load(ctx, pack)
         .select(col("doc_id"), col("n_tokens"), col("chunk_first"))
       val fin = cur.join(packed, "doc_id")
         .select(col("pos"), col("doc_id"), col("source"),

@@ -6,6 +6,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.FooterSchema
+
 /** Atomic table publication by MANIFEST-pointer indirection — the
   * copy-on-write publish the w-family's plain-parquet DROP+RENAME swap
   * could not make atomic (SURVEY §7 risk 1; the reference closes the
@@ -132,7 +134,7 @@ object ManifestTable {
   /** Resolve the pointer once, read that version (cross-session reader
     * path; in-session readers use the published view instead). */
   def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(currentDataDir(root).getOrElse(
+    FooterSchema.read(spark, currentDataDir(root).getOrElse(
       sys.error(s"ManifestTable: no MANIFEST under $root")))
 
   /** Publish `df` as the next version: writer lock → full write →

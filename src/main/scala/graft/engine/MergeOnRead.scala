@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.FooterSchema
+
 /** MERGE-ON-READ, the write mode copy-on-write cannot afford at 100 TB
   * with hot keys — a stream of small upsert batches into a 1 TB
   * partition must NOT rewrite the terabyte per batch (write
@@ -48,20 +50,14 @@ import org.apache.spark.sql.types.StructType
 trait MergeOnRead extends SnapshotLog {
   import MergeOnRead._
 
-  /** Parquet footer schema of an IMMUTABLE version directory,
-    * memoized process-wide. Version dirs are write-once: uuid-named,
-    * adopted by a single rename, never mutated afterwards (the
-    * underscore sidecars later writes add are reader-invisible), so
-    * the footer can never change and repeated commits / reads /
-    * DML-eligibility gates stop re-paying the ~25-90 ms listing +
-    * footer job each inspection costs. Bounded: cleared wholesale past
-    * 8192 entries (schemas are tiny; the bound is paranoia, not need). */
+  /** Parquet footer schema of an IMMUTABLE version directory. Version
+    * dirs are write-once: uuid-named, adopted by a single rename, never
+    * mutated afterwards (the underscore sidecars later writes add are
+    * reader-invisible), so the schema is read once per process on the
+    * driver ([[FooterSchema.memo]]) — commits, reads and DML-eligibility
+    * gates never pay an inference job for it. */
   private[graft] def footerSchema(spark: SparkSession, dir: String)
-      : StructType = {
-    if (footerSchemaCache.size > 8192) footerSchemaCache.clear()
-    footerSchemaCache.computeIfAbsent(dir,
-      d => spark.read.parquet(d).schema)
-  }
+      : StructType = FooterSchema.memo(spark, dir)
 
   // ---------------------------------------------------------------------
   // THE CHAIN FORMAT
@@ -137,9 +133,8 @@ trait MergeOnRead extends SnapshotLog {
   private[engine] def readDirsWithFields(spark: SparkSession,
       paths: Seq[String], fields: Seq[String],
       schema: Option[StructType] = None): DataFrame =
-    attachFieldsFromPath(
-      schema.map(sc => spark.read.schema(sc).parquet(paths: _*))
-        .getOrElse(spark.read.parquet(paths: _*)), fields)
+    attachFieldsFromPath(spark.read.schema(schema.getOrElse(
+      FooterSchema.memo(spark, paths: _*))).parquet(paths: _*), fields)
 
   /** One key's LOGICAL content (no partition columns) at version
     * `dirName`: a pure dir reads directly, a MOR dir resolves its chain
@@ -150,8 +145,11 @@ trait MergeOnRead extends SnapshotLog {
       schema: Option[StructType]): DataFrame =
     if (isMorDir(spark, s"$partRoot/$dirName"))
       resolveMorGrouped(spark, Seq(partRoot -> dirName), Nil, schema)
-    else schema.map(s => spark.read.schema(s).parquet(s"$partRoot/$dirName"))
-      .getOrElse(spark.read.parquet(s"$partRoot/$dirName"))
+    else {
+      val dir = s"$partRoot/$dirName"
+      spark.read.schema(schema.getOrElse(footerSchema(spark, dir)))
+        .parquet(dir)
+    }
 
   /** Resolve MANY merge-on-read chains in ONE bounded-width plan — the
     * serving path for a CDC-heavy table with K hot keys between folds.
@@ -298,7 +296,7 @@ trait MergeOnRead extends SnapshotLog {
       leafRoot: String => String)(
       mismatch: (String, StructType, StructType) => String): StructType =
     snapshotSchema(spark, root, snap).getOrElse {
-      // independent per-key footer reads (~25 ms each) — overlap them
+      // independent per-key footer reads — overlap them
       val bottoms = Par.map(keys) { k =>
         val pr = s"$root/${leafRoot(k)}"
         footerSchema(spark, s"$pr/${morChain(spark, pr, dirOf(k)).last}")
@@ -797,7 +795,4 @@ object MergeOnRead {
   /** Sort-order marker file a clustered rewrite stamps into its version
     * dirs (underscore-prefixed: readers never see it). */
   private val ClusterMarker = "_clustered.tsv"
-
-  private val footerSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 }

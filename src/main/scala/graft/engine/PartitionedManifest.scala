@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
+import graft.sources.FooterSchema
+
 /** The SINGLE-COLUMN table layout: partition-scoped atomic
   * publication, where every partition of a table is its own
   * [[ManifestTable]] root —
@@ -894,8 +896,8 @@ object PartitionedManifest extends MergeOnRead {
   private def readDirsWithPartCol(spark: SparkSession, paths: Seq[String],
       partCol: String, partType: String,
       schema: Option[StructType] = None): DataFrame = {
-    val df = schema.map(sc => spark.read.schema(sc).parquet(paths: _*))
-      .getOrElse(spark.read.parquet(paths: _*))
+    val df = spark.read.schema(schema.getOrElse(
+      FooterSchema.memo(spark, paths: _*))).parquet(paths: _*)
     df.withColumn(partCol,
       regexp_extract(col("_metadata.file_path"),
         java.util.regex.Pattern.quote(s"/$partCol=") + "([^/]+)/", 1)

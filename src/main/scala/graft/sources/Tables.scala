@@ -26,17 +26,6 @@ object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  /** Inferred parquet schema per fixture path, memoized process-wide.
-    * Fixture tables are immutable, and schema INFERENCE is an eager
-    * footer-listing job (~20-30 ms) that registerAll used to pay 10x
-    * at the top of nearly every query — metadata caching only (the
-    * catalog posture: Iceberg/HMS serve table schemas from metadata);
-    * the scan itself re-lists and re-reads the files at every action,
-    * so results always come from the parquet inputs. */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = path(dir, name)
     if (name == "events")
@@ -44,9 +33,9 @@ object Tables {
       // which Spark's vectorized reader rejects; read the raw int64 and
       // truncate to micros below. Harmless for non-nanos encodings.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = schemaMemo.computeIfAbsent(p,
-      _ => spark.read.parquet(p).schema)
-    val df = spark.read.schema(schema).parquet(p)
+    // fixture tables are immutable: the schema is read once per process
+    // from one footer on the driver, with no Spark job
+    val df = FooterSchema.read(spark, p)
     if (name == "events") normalizeTs(spark, normalizeNtz(spark, df))
     else normalizeNtz(spark, df)
   }

@@ -65,6 +65,11 @@ object ColumnBridge {
       isStreaming = false)
   }
 
+  /** Every field (nested ones too) nullable — what Spark's file sources
+    * make of each data schema they read (`asNullable` is private[spark]). */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** A registered catalog plugin by name (catalogManager is
     * private[sql]) — lets the streaming sink resolve a catalog-NAMED
     * graft table (`g.db.t`) to its root. */

@@ -547,8 +547,18 @@ class EngineSpec extends AnyFunSuite {
         "mrg_src" -> src,
         "mrg_delta" -> Files.createTempDirectory("graft-mrg-delta").toString,
         "mrg_stage" -> Files.createTempDirectory("graft-mrg-stage").toString))
-    val res = new PacketRunner(spark, conf).run("packets/test_merge")
+    val (res, freshJobs) = JobCount.of(spark)(
+      new PacketRunner(spark, conf).run("packets/test_merge"))
     assert(res.resultCode("spark") == "success", res.notices.mkString("; "))
+    // job-count gate: a resumed run skips every action, so what is left
+    // is generator and tracker work. Schema reads are driver-side and
+    // the two identical generators are collected once per run.
+    val (resumed, resumeJobs) = JobCount.of(spark)(
+      new PacketRunner(spark, conf).run("packets/test_merge"))
+    assert(resumed.resultCode("spark") == "success",
+      resumed.notices.mkString("; "))
+    assert((freshJobs, resumeJobs) == ((22, 4)),
+      s"test_merge jobs: fresh $freshJobs, resumed $resumeJobs")
     // every Spark write job stamps its part files with one job UUID
     // (part-00000-<uuid>…): untouched partitions must still carry the SEED
     // job's uuid in their CURRENT manifest version, while delta partitions
@@ -580,6 +590,18 @@ class EngineSpec extends AnyFunSuite {
     assert(t.filter(col("c_custkey") > 1000000).count() > 0)
     // every updated key exists exactly once (no dup from union)
     assert(t.groupBy("c_custkey").count().filter(col("count") > 1).count() == 0)
+  }
+
+  test("fixture registration matches table names as whole words: the " +
+      "migration packet registers only orders") {
+    val pl = Map("bk_grain" -> "100", "mig_src" -> "/tmp/s",
+      "mig_dst" -> "/tmp/d", "mig_catch" -> "/tmp/c")
+    // its text says PARTITIONED and partition, never the table `part`
+    assert(Engine.fixtureTables("packets/test_int4_to_int8", pl) ==
+      ((Some(Seq("orders")), false)))
+    // an unresolved placeholder may hide a table name: register all
+    assert(Engine.fixtureTables("packets/test_int4_to_int8", Map.empty)._1
+      .isEmpty)
   }
 
   test("read_only packet rejects writes and tracks nothing") {

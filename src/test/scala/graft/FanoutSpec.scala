@@ -278,4 +278,110 @@ class FanoutSpec extends AnyFunSuite {
     assert(firstSelectOutsideLiterals(
       "INSERT INTO t VALUES ('select')").isEmpty)
   }
+
+  // ---- generator memo: one collect per distinct deterministic query ----
+
+  /** Runs a packet of generators 01/02 with one inserting step each;
+    * returns the result and how many rows `gen_probe` evaluated (each
+    * generator's collect evaluates it once per row). */
+  private def runGens(name: String, g1: String, g2: String,
+      extra: Map[String, String] = Map.empty): (RunResult, Long) = {
+    spark.udf.register("gen_probe",
+      (x: Long) => { GenProbe.calls.incrementAndGet(); x })
+    GenProbe.calls.set(0)
+    def step(n: String) =
+      s"INSERT INTO DBC_PL_tbl VALUES ('$n', GEN_OBJ_FLD_1, 'GEN_OBJ_FLD_2');"
+    val dir = mkPacket(name, Map(
+      "run_once.sql" ->
+        """DROP TABLE IF EXISTS DBC_PL_tbl;
+          |CREATE TABLE DBC_PL_tbl (step STRING, k BIGINT, t STRING)
+          |USING parquet LOCATION 'DBC_PL_loc';""".stripMargin,
+      "01_gen_obj.sql" -> g1, "01_step.sql" -> step("01"),
+      "02_gen_obj.sql" -> g2, "02_step.sql" -> step("02"),
+      "meta_data.json" -> """{"description": "generator memo"}""") ++ extra)
+    Tables.registerAll(spark, fixtures)
+    val res = new PacketRunner(spark, RunnerConf(
+      stateDir = Files.createTempDirectory("graft-fanout-state").toString,
+      connExceptionSleepMs = 10,
+      placeholders = Map("tbl" -> s"gm_$name",
+        "loc" -> Files.createTempDirectory("graft-fanout-out").toString)))
+      .run(dir)
+    assert(res.resultCode("spark") == "success", res.notices.mkString("; "))
+    (res, GenProbe.calls.get)
+  }
+
+  private def rowsOf(tbl: String): Seq[(String, Long, String)] =
+    spark.table(tbl).collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted
+
+  test("generators differing only in comments and whitespace share ONE " +
+      "collect; a '--' inside a literal is not a comment") {
+    val (_, shared) = runGens("memo_comments",
+      "-- first\nSELECT NULL AS maint, gen_probe(id) AS k, 'x' FROM range(3)",
+      "/* second */ SELECT NULL AS maint,\n  gen_probe(id) " +
+        "AS k, -- trailing\n 'x' FROM range(3) -- end")
+    assert(shared == 3, s"$shared probe rows: expected one collect of 3")
+    assert(rowsOf("gm_memo_comments") == (for {
+      s <- Seq("01", "02"); k <- 0L to 2L } yield (s, k, "x")))
+
+    val (_, literal) = runGens("memo_literal",
+      "SELECT NULL AS maint, gen_probe(id) AS k, '--a' FROM range(3)",
+      "SELECT NULL AS maint, gen_probe(id) AS k, '--b' FROM range(3)")
+    assert(literal == 6, s"$literal probe rows: expected two collects")
+    assert(rowsOf("gm_memo_literal").map(r => (r._1, r._3)).distinct ==
+      Seq(("01", "--a"), ("02", "--b")))
+  }
+
+  test("genKey drops comments and whitespace, never literal text or hints") {
+    import PacketRunner.genKey
+    assert(genKey("SELECT a,\n  b -- x\nFROM t /* y\n z */ ;") ==
+      "SELECT a, b FROM t ;")
+    // the same '--' / '/*' inside literals and identifiers is text
+    Seq("'--a'", "\"--a\"", "`--a`", "'it''s --a'", "'a\\' --a'")
+      .foreach { lit =>
+        assert(genKey(s"SELECT $lit") == s"SELECT $lit", lit)
+        val other = lit.replace("a", "b")
+        assert(genKey(s"SELECT $lit") != genKey(s"SELECT $other"))
+      }
+    assert(genKey("SELECT /*+ REPARTITION(2) */ a") ==
+      "SELECT /*+ REPARTITION(2) */ a")
+  }
+
+  test("nondeterministic generators are each collected") {
+    val g = "SELECT NULL AS maint, gen_probe(id) AS k, rand() FROM range(3)"
+    val (_, calls) = runGens("memo_rand", g, "-- same text\n" + g)
+    assert(calls == 6, s"$calls probe rows: expected two collects")
+  }
+
+  test("a reconnect attempt re-evaluates generators against the data as " +
+      "it is now") {
+    val attempts = new java.util.concurrent.atomic.AtomicInteger
+    ScalaSteps.register("memo_retry", "00_step.py") { ctx =>
+      if (attempts.incrementAndGet() == 1) {
+        ctx.spark.sql("CREATE OR REPLACE TEMPORARY VIEW gm_memo_retry_src " +
+          "AS SELECT * FROM VALUES (1L), (7L) AS t(k)")
+        throw new java.sql.SQLNonTransientConnectionException(
+          "connection reset", "08006")
+      }
+    }
+    val g = "SELECT NULL AS maint, gen_probe(k) AS k, 'y' FROM gm_memo_retry_src"
+    val (_, calls) = runGens("memo_retry", g, g, Map(
+      "00_step.py" -> "# fails once with a connection error",
+      "run_once.sql" ->
+        """DROP TABLE IF EXISTS DBC_PL_tbl;
+          |CREATE TABLE DBC_PL_tbl (step STRING, k BIGINT, t STRING)
+          |USING parquet LOCATION 'DBC_PL_loc';
+          |CREATE OR REPLACE TEMPORARY VIEW gm_memo_retry_src AS
+          |SELECT 1L AS k;""".stripMargin))
+    assert(attempts.get == 2)
+    // attempt 1 collects {1} once; attempt 2 collects {1, 7} once more
+    assert(calls == 3, s"$calls probe rows")
+    assert(rowsOf("gm_memo_retry").map(_._2).distinct == Seq(1L, 7L))
+  }
+}
+
+/** Rows evaluated by the `gen_probe` UDF (a static counter: task
+  * closures are serialized, so a captured local would be a copy). */
+object GenProbe {
+  val calls = new java.util.concurrent.atomic.AtomicLong
 }

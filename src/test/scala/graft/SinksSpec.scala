@@ -109,6 +109,33 @@ class SinksSpec extends AnyFunSuite {
     assert(md.contains("| r_name |") && md.contains("| AFRICA |"))
   }
 
+  test("stm_result hook posts each statement's keyword and row count, " +
+      "with no extra Spark job") {
+    Tables.registerAll(spark, fixtures)
+    def run(verbosity: String) = {
+      val posts = scala.collection.mutable.Buffer.empty[(String, String, String)]
+      val loc = Files.createTempDirectory("graft-stm").toString
+      val dir = mkPacket(s"test_hook_stm_$verbosity", Map(
+        "01_step.sql" ->
+          s"""DROP TABLE IF EXISTS stm_t;
+             |CREATE TABLE stm_t (k BIGINT) USING parquet LOCATION '$loc';
+             |INSERT INTO stm_t SELECT r_regionkey FROM region;
+             |SELECT k FROM stm_t ORDER BY k LIMIT 3;""".stripMargin,
+        "meta_data.json" ->
+          s"""{"hook": {"channel": "c", "verbosity": ["$verbosity"]}}"""))
+      val (res, jobs) = JobCount.of(spark)(new PacketRunner(spark, RunnerConf(
+        stateDir = Files.createTempDirectory("graft-st").toString,
+        hookSink = Some(HookSink.buffering(posts)))).run(dir))
+      assert(res.resultCode("spark") == "success", res.notices.mkString("; "))
+      (posts.map(_._3).toSeq, jobs)
+    }
+    val (posts, jobs) = run("stm_result")
+    assert(posts == Seq("DROP", "CREATE", "INSERT (5 rows)", "SELECT (3 rows)")
+      .map("**01_step.sql** " + _), posts)
+    val (none, quietJobs) = run("raise")
+    assert(none.isEmpty && jobs == quietJobs, s"$jobs vs $quietJobs jobs")
+  }
+
   test("hook type slack posts the slack payload shape, same verbosity filter") {
     // reference dbccore.py:632-648,696-697: hook.type selects the dialect —
     // slack gets *single-asterisk* emphasis + code-fenced tables, and the

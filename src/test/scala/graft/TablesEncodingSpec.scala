@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.Tables
+import graft.sources.{FooterSchema, Tables}
 
 /** Fixture-encoding contract: `Tables.load` must yield the SAME logical
   * `events.ts` — `TimestampType`, identical epoch micros — no matter which
@@ -112,5 +112,105 @@ class TablesEncodingSpec extends AnyFunSuite {
       col("id").cast(StringType).as("ts"))
     val e = intercept[IllegalStateException](Tables.normalizeTs(spark, df))
     assert(e.getMessage.contains("unsupported physical type"))
+  }
+
+  // ---- driver-side schema reader: parity with Spark's inference ----
+
+  private def tmp(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toFile
+    d.deleteOnExit()
+    d.getAbsolutePath
+  }
+
+  /** The reader's data schema and the final read's schema equal what
+    * Spark's own inference gives (`partCols`: hive columns inference
+    * appends after the data columns). */
+  private def assertParity(paths: Seq[String],
+      partCols: Set[String] = Set.empty): StructType = {
+    val inferred = spark.read.parquet(paths: _*).schema
+    val mine = FooterSchema.of(spark, paths)
+    assert(mine == StructType(inferred.filterNot(f => partCols(f.name))),
+      s"reader schema $mine vs inferred $inferred for $paths")
+    val df = spark.read.schema(mine).parquet(paths: _*)
+    assert(df.schema == inferred, s"read schema ${df.schema} vs $inferred")
+    mine
+  }
+
+  private def withNanosAsLong[T](on: Boolean)(body: => T): T = {
+    val k = "spark.sql.legacy.parquet.nanosAsLong"
+    val prior = spark.conf.getOption(k)
+    spark.conf.set(k, on.toString)
+    try body finally prior.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  test("schema reader matches Spark's inference on every fixture table") {
+    val dir = "/root/testdata/sf0.001"
+    withNanosAsLong(on = true) {
+      Tables.all.foreach(t => assertParity(Seq(Tables.path(dir, t))))
+    }
+    // events.ts: the reader sees the nanos encoding exactly as Spark does
+    withNanosAsLong(on = false) {
+      val p = Tables.path(dir, "events")
+      val inferred = scala.util.Try(spark.read.parquet(p).schema)
+      val mine = scala.util.Try(FooterSchema.of(spark, Seq(p)))
+      assert(inferred.isSuccess == mine.isSuccess, s"$inferred vs $mine")
+      inferred.foreach(sc => assert(mine.get == sc))
+    }
+  }
+
+  test("schema reader matches inference on a nanos-as-long column and a " +
+      "hive-partitioned dir") {
+    val rows = epochMicros.zipWithIndex.map { case (us, i) => Row(i.toLong, us) }
+    val base = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(Seq(StructField("event_id", LongType),
+        StructField("ts", LongType))))
+    val ev = tmp("events_nanos_") + "/events.parquet"
+    base.write.parquet(ev)
+    withNanosAsLong(on = true)(assertParity(Seq(ev)))
+    val hive = tmp("hive_") + "/t"
+    base.withColumn("p", col("event_id") % 2).withColumn("s", lit("x"))
+      .write.partitionBy("p", "s").parquet(hive)
+    assertParity(Seq(hive), Set("p", "s"))
+  }
+
+  test("schema reader: two dirs with different columns take the first " +
+      "leaf in PATH order, and sidecars are skipped") {
+    val root = tmp("two_dirs_")
+    spark.range(3).selectExpr("id", "CAST(id AS STRING) AS b")
+      .write.parquet(s"$root/a")
+    spark.range(3).selectExpr("id", "id * 2.0 AS c").write.parquet(s"$root/z")
+    // argument order z, a: path order still picks a's first part file
+    val sc = assertParity(Seq(s"$root/z", s"$root/a"))
+    assert(sc.fieldNames.toSeq == Seq("id", "b"), sc)
+    // Spark's writer left _SUCCESS and .crc sidecars; add unreadable
+    // ones that sort first — the reader must never open them
+    val side = s"$root/a"
+    Seq("_SUCCESS", "._SUCCESS.crc", "_0_junk", ".0_junk").foreach(n =>
+      Files.writeString(java.nio.file.Paths.get(side, n), "not parquet"))
+    assert(new java.io.File(side).list().exists(_.endsWith(".crc")))
+    assertParity(Seq(side))
+  }
+
+  test("schema reader: an empty dir fails with Spark's own error class") {
+    val empty = tmp("empty_")
+    val spark0 = intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(empty).schema)
+    val mine = intercept[org.apache.spark.sql.AnalysisException](
+      FooterSchema.of(spark, Seq(empty)))
+    assert(mine.getCondition == spark0.getCondition, s"$mine vs $spark0")
+    val missing = s"$empty/nope"
+    assert(intercept[org.apache.spark.sql.AnalysisException](
+      FooterSchema.of(spark, Seq(missing))).getCondition ==
+      intercept[org.apache.spark.sql.AnalysisException](
+        spark.read.parquet(missing)).getCondition)
+  }
+
+  test("a cold Tables.load submits no Spark job") {
+    val dir = tmp("cold_load_")
+    spark.range(5).selectExpr("id AS o_orderkey", "'x' AS o_comment")
+      .write.parquet(Tables.path(dir, "orders"))
+    val (df, jobs) = JobCount.of(spark)(Tables.load(spark, dir, "orders"))
+    assert(jobs == 0, s"cold Tables.load ran $jobs jobs")
+    assert(df.count() == 5)
   }
 }
