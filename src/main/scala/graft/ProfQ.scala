@@ -27,7 +27,6 @@ object ProfQ {
     @volatile var taskTimeMs = 0L
     @volatile var shuffleReadB = 0L
     @volatile var shuffleWriteB = 0L
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val jobDone = new java.util.concurrent.ConcurrentLinkedQueue[(Double, Double, String, String)]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -69,14 +68,12 @@ object ProfQ {
       for (i <- 1 to 2) {
         jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0
         shuffleReadB = 0; shuffleWriteB = 0
-        jobStart.clear(); jobDone.clear()
+        jobDone.clear()
         val t0 = System.nanoTime()
         val rows = SparkEntry.queries(n)(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        // drain listener events before reading the counters
-        // (listenerBus.waitUntilEmpty is private[spark]; a short sleep
-        // suffices for a diagnostic tool)
-        Thread.sleep(400)
+        // every event of the run reaches the counters before they print
+        org.apache.spark.sql.graft.ListenerBus.drain(spark)
         println(f"[profq] $n run$i wall=$wall%.3f s rows=$rows " +
           f"jobs=$jobs stages=$stages tasks=$tasks " +
           f"taskTime=${taskTimeMs / 1e3}%.2f s " +

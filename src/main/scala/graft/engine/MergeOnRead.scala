@@ -118,13 +118,17 @@ trait MergeOnRead extends SnapshotLog {
 
   /** Recover hive-style `field=value` path segments as STRING columns
     * appended after the data columns, via the deterministic hidden
-    * file-metadata column. */
+    * file-metadata column. Its `file_path` is a URI, so each segment is
+    * percent-decoded once to the directory name (a `+` is a literal plus
+    * in a URI path, while `url_decode` would read it as a space). */
   private[engine] def attachFieldsFromPath(df: DataFrame,
       fields: Seq[String]): DataFrame = {
     val dataCols = df.columns.toSeq
     val withF = fields.foldLeft(df)((x, f) =>
-      x.withColumn(f, regexp_extract(col("_metadata.file_path"),
-        java.util.regex.Pattern.quote(s"/$f=") + "([^/]+)/", 1)))
+      x.withColumn(f, url_decode(regexp_replace(regexp_extract(
+        col("_metadata.file_path"),
+        java.util.regex.Pattern.quote(s"/$f=") + "([^/]+)/", 1),
+        "\\+", "%2B"))))
     withF.select((dataCols.map(col) ++ fields.map(col)): _*)
   }
 
@@ -163,10 +167,12 @@ trait MergeOnRead extends SnapshotLog {
     *     cadence, typically ≤ 3);
     *   - resolution runs GLOBALLY, keyed on (partition fields ++ key
     *     columns): one anti-join of the combined base against the
-    *     combined (delta-sized, broadcastable) key set, one
-    *     newest-layer-wins window over the DELTA union only — per-key
-    *     semantics, because the partition fields keep different keys'
-    *     rows apart and layer numbering is per-chain.
+    *     combined (delta-sized, broadcastable) key set and, in a group
+    *     holding a chain deeper than one layer, one newest-layer-wins
+    *     window over the DELTA union only — per-key semantics, because
+    *     the partition fields keep different keys' rows apart and layer
+    *     numbering is per-chain. An all-depth-1 group unions its upserts
+    *     as they are: one layer holds at most one upsert per key.
     *
     * `entries` are (key root, live MOR version dir name); `fields` the
     * hive field names (in path order) to recover as STRING partition
@@ -232,15 +238,19 @@ trait MergeOnRead extends SnapshotLog {
         else {
           val all = events.reduce(_.unionByName(_))
           val grpKeys = fields ++ keys
-          val w = Window.partitionBy(grpKeys.map(col): _*)
-            .orderBy(col("_graft_layer").desc)
-          val latest = all
-            .withColumn("_graft_rn", row_number().over(w))
-            .filter(col("_graft_rn") === 1)
-          // re-select the base order: a using-columns join moves the
-          // join keys to the FRONT of the output
-          base.join(all.select(grpKeys.map(col): _*).distinct(),
-              grpKeys, "left_anti")
+          // one layer holds at most one upsert per key and upserts no
+          // key it deletes (commitMerge's contract), so in an all-
+          // depth-1 group the newest-layer window keeps every upsert
+          val latest =
+            if (maxDepth == 1) all
+            else all.withColumn("_graft_rn", row_number().over(
+                Window.partitionBy(grpKeys.map(col): _*)
+                  .orderBy(col("_graft_layer").desc)))
+              .filter(col("_graft_rn") === 1)
+          // a left-anti join ignores duplicates on its right side, so
+          // the key set needs no distinct; re-select the base order: a
+          // using-columns join moves the join keys to the FRONT
+          base.join(all.select(grpKeys.map(col): _*), grpKeys, "left_anti")
             .select(base.columns.toSeq.map(col): _*)
             .unionByName(latest.filter(col("_graft_op") === "u")
               .drop("_graft_op", "_graft_layer", "_graft_rn"))

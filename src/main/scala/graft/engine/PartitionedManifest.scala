@@ -5,8 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.sources.FooterSchema
-
 /** The SINGLE-COLUMN table layout: partition-scoped atomic
   * publication, where every partition of a table is its own
   * [[ManifestTable]] root —
@@ -504,9 +502,10 @@ object PartitionedManifest extends MergeOnRead {
           isMorDir(spark, s"$root/$partCol=$v/$d") }
         val pureDf =
           if (pure.isEmpty) None
-          else Some(readDirsWithPartCol(spark,
+          else Some(readDirsWithFields(spark,
             pure.map { case (v, d) => s"$root/$partCol=$v/$d" },
-            partCol, partType, schema))
+            Seq(partCol), schema)
+            .withColumn(partCol, col(partCol).cast(partType)))
         val morDf =
           if (mor.isEmpty) None
           else Some(resolveMorGrouped(spark,
@@ -885,24 +884,9 @@ object PartitionedManifest extends MergeOnRead {
     val df =
       if (keptFiles.isEmpty)
         read(spark, root, partCol, partType).limit(0)
-      else readDirsWithPartCol(spark, keptFiles, partCol, partType)
+      else readDirsWithFields(spark, keptFiles, Seq(partCol))
+        .withColumn(partCol, col(partCol).cast(partType))
     (applyFilter(df), keptFiles.length, total)
-  }
-
-  /** Read a set of paths as ONE relation, recovering the partition
-    * value from the `partCol=value` path segment via the DETERMINISTIC
-    * hidden file-metadata column (shared by [[changesBetween]] and
-    * [[scanWithFileSkipping]]). */
-  private def readDirsWithPartCol(spark: SparkSession, paths: Seq[String],
-      partCol: String, partType: String,
-      schema: Option[StructType] = None): DataFrame = {
-    val df = spark.read.schema(schema.getOrElse(
-      FooterSchema.memo(spark, paths: _*))).parquet(paths: _*)
-    df.withColumn(partCol,
-      regexp_extract(col("_metadata.file_path"),
-        java.util.regex.Pattern.quote(s"/$partCol=") + "([^/]+)/", 1)
-        .cast(partType))
-      .select((df.columns.map(col) :+ col(partCol)): _*)
   }
 
   /** Read a COMMITTED snapshot — every partition at one commit, the

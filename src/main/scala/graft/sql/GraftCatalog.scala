@@ -7,18 +7,20 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsDynamicOverwrite, SupportsTruncate, V1Write, WriteBuilder}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.engine.{ManifestTable, SpecManifest}
-import graft.engine.SpecManifest.{Bucket, Day, Identity, Month, PartField, PartitionSpec, Transform => GTransform, Truncate, Year}
+import graft.engine.SpecManifest.{Bucket, Day, Identity, Month, PartField, PartitionSpec, Truncate, Year}
 
 /** The SQL front door of the graft table format — a DataSource V2
   * `TableCatalog` over [[SpecManifest]] roots, so the format's
@@ -770,20 +772,28 @@ object GraftSqlWrites {
     * racing committer moved the table first, the whole body re-runs
     * against the fresh base (bounded attempts, then loud). Merge-on-
     * read commits need no guard — commitMerge re-binds deltas to the
-    * fresh base under the lock by design. */
-  def withConflictRetry[A](what: String, attempts: Int = 5)(f: => A): A = {
-    var i = 0
-    while (true) {
-      try return f
-      catch {
-        case e: SpecManifest.ConcurrentCommitException =>
-          i += 1
-          if (i >= attempts) throw new IllegalStateException(
-            s"graft $what: lost the commit race $attempts times - " +
-              "giving up", e)
+    * fresh base under the lock by design. Every Spark job of the body
+    * carries the job description `graft <what>` (Spark's stage and
+    * broadcast threads inherit it), the previous one restored after. */
+  def withConflictRetry[A](spark: SparkSession, what: String,
+      attempts: Int = 5)(f: => A): A = {
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft $what")
+    try {
+      var i = 0
+      while (true) {
+        try return f
+        catch {
+          case e: SpecManifest.ConcurrentCommitException =>
+            i += 1
+            if (i >= attempts) throw new IllegalStateException(
+              s"graft $what: lost the commit race $attempts times - " +
+                "giving up", e)
+        }
       }
-    }
-    throw new IllegalStateException("unreachable")
+      throw new IllegalStateException("unreachable")
+    } finally sc.setJobDescription(prior)
   }
 
   /** Align `df` to the table's data schema: column order, names and
@@ -817,25 +827,35 @@ object GraftSqlWrites {
       col(f.name).as(GraftSchemas.physicalName(f))): _*)
 
   /** Distinct derived leaf tuples of `rows` (leaf-count-bounded
-    * driver collect — the SpecTableSink posture). */
-  private def leavesOf(rows: DataFrame,
+    * driver collect — the SpecTableSink posture). Rows that optimize to
+    * a LocalRelation derive their leaves on the driver, with no job. */
+  private[sql] def leavesOfRows(rows: DataFrame,
       spec: PartitionSpec): Seq[Seq[String]] = {
-    val tagged = spec.fields.foldLeft(rows)((d, f) =>
-      d.withColumn(f.name, f.derived))
-    tagged.select(spec.names.map(col): _*).distinct().collect()
-      .map(r => spec.names.indices.map(i => r.getString(i)))
+    val leaves = tagDerivedLogical(rows, spec).select(spec.names.map(col): _*)
+    (if (leaves.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      leaves.collect().distinct
+    else leaves.distinct().collect())
+      .map(r => spec.names.indices.map(i => r.getString(i))).toSeq
   }
 
-  /** [[leavesOf]] fused with an any-row-satisfies probe: ONE
+  /** `df` frozen once, so that every later use reads the same rows: a
+    * frame that optimizes to a LocalRelation (VALUES, a local Seq)
+    * becomes that relation, whose rows already sit on the driver;
+    * anything else is checkpointed (one job). */
+  private[sql] def frozen(spark: SparkSession, df: DataFrame): DataFrame =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => ColumnBridge.ofRows(spark, l)
+      case _ => df.localCheckpoint()
+    }
+
+  /** [[leavesOfRows]] fused with an any-row-satisfies probe: ONE
     * aggregation job serves both the distinct leaf tuples and whether
     * `flag` holds anywhere (the mg.touched fusion — a separate isEmpty
     * probe over the same frame would be a second full job). */
   private[sql] def leavesAndFlag(rows: DataFrame, spec: PartitionSpec,
       flag: org.apache.spark.sql.Column)
       : (Seq[Seq[String]], Boolean) = {
-    val tagged = spec.fields.foldLeft(rows)((d, f) =>
-      d.withColumn(f.name, f.derived))
-    val agg = tagged.groupBy(spec.names.map(col): _*)
+    val agg = tagDerivedLogical(rows, spec).groupBy(spec.names.map(col): _*)
       .agg(org.apache.spark.sql.functions.max(flag).as("_graft_flag"))
       .collect()
     (agg.toSeq.map(r => spec.names.indices.map(r.getString)),
@@ -843,13 +863,11 @@ object GraftSqlWrites {
         r.getBoolean(spec.names.length)))
   }
 
-  private def leafRows(rows: DataFrame, spec: PartitionSpec,
+  private[sql] def rowsOfLeaf(rows: DataFrame, spec: PartitionSpec,
       vs: Seq[String]): DataFrame = {
     val dataCols = rows.columns.toSeq
-    val tagged = spec.fields.foldLeft(rows)((d, f) =>
-      d.withColumn(f.name, f.derived))
-    spec.names.zip(vs).foldLeft(tagged) { case (d, (n, v)) =>
-      d.where(col(n) === v)
+    spec.names.zip(vs).foldLeft(tagDerivedLogical(rows, spec)) {
+      case (d, (n, v)) => d.where(col(n) === v)
     }.select(dataCols.map(col): _*)
   }
 
@@ -866,9 +884,10 @@ object GraftSqlWrites {
     * ONE atomic snapshot commit. */
   def insert(spark: SparkSession, table: GraftSqlTable, data: DataFrame,
       mode: String): Unit = {
-    val spec = table.spec
-    val aligned = alignData(data, table.dataSchema).localCheckpoint()
-    withConflictRetry(s"INSERT into ${table.name()}") {
+    // frozen on the first attempt: a conflict retry and each attempt's
+    // leaf derivation and staging write read the same rows
+    lazy val aligned = frozen(spark, alignData(data, table.dataSchema))
+    withConflictRetry(spark, s"INSERT into ${table.name()}") {
       insertOnce(spark, table, aligned, mode)
     }
   }
@@ -877,7 +896,7 @@ object GraftSqlWrites {
       aligned: DataFrame, mode: String): Unit = {
     val spec = table.spec
     val base = SpecManifest.currentSnapshot(spark, table.root)
-    val incomingLeaves = leavesOf(aligned, spec)
+    val incomingLeaves = leavesOfRows(aligned, spec)
     val existing: Set[Seq[String]] =
       if (base.isEmpty) Set.empty
       else SpecManifest.leafKeys(spark, table.root, spec).toSet
@@ -896,7 +915,7 @@ object GraftSqlWrites {
         // existing content aligns to the CURRENT schema first: a leaf
         // written before an ADD COLUMN / type widening unions cleanly
         val olds = incomingLeaves.filter(existing.contains).map { vs =>
-          tagLiterals(toPhysical(alignData(
+          tagLiteralsOf(toPhysical(alignData(
             SpecManifest.readLeaf(spark, table.root, spec, vs),
             table.dataSchema, fromFiles = true), table.dataSchema),
             spec, vs)
@@ -923,15 +942,6 @@ object GraftSqlWrites {
       d.withColumn(f.name,
         f.derive(col(physOf.getOrElse(f.source, f.source))).as(f.name)))
   }
-
-  /** `df` (data columns only) with the spec partition columns attached
-    * as LITERALS — the one-pass staging tag for rows pinned to the
-    * physical leaf they were read from. */
-  private def tagLiterals(df: DataFrame, spec: PartitionSpec,
-      vs: Seq[String]): DataFrame =
-    spec.names.zip(vs).foldLeft(df) { case (d, (n, v)) =>
-      d.withColumn(n, org.apache.spark.sql.functions.lit(v))
-    }
 
   /** The table's rows restricted to `leaves` — an OR-of-conjunctions
     * predicate over the PARTITION columns, so the pin prunes to
@@ -964,51 +974,57 @@ object GraftSqlWrites {
         keepSnapshots = table.keepSnapshots,
         expectedBase = expectedBase)
 
-  /** One-pass variant of [[replaceLeaves]]: `data` carries the LOGICAL
-    * data columns plus the spec partition columns as STRING tags
-    * (derived for value-routed rows, literal for rows pinned to the
-    * physical leaf they were read from). The per-leaf-Map spelling
-    * evaluates each leaf's frame as its own union arm, so a shared
-    * source (a checkpointed affected/removed frame) is re-scanned once
-    * per leaf; here every source is scanned once. Alignment + physical
-    * renames apply to the data columns only, tags pass through. */
-  def replaceLeavesTagged(spark: SparkSession, table: GraftSqlTable,
-      data: DataFrame, touched: Seq[Seq[String]],
-      expectedBase: Option[Option[String]] = None): Unit =
-    if (touched.nonEmpty) {
-      val alignedTagged = data.select(
-        table.dataSchema.fields.toSeq.map { f =>
-          val c =
-            if (!data.columns.contains(f.name))
-              org.apache.spark.sql.functions.lit(null).cast(f.dataType)
-            else if (data.schema(f.name).dataType == f.dataType)
-              col(f.name)
-            else col(f.name).cast(f.dataType)
-          c.as(GraftSchemas.physicalName(f))
-        } ++ table.spec.names.map(col): _*)
-      SpecManifest.commitSnapshotTagged(spark, table.root, table.spec,
-        Some(alignedTagged), touched,
-        keepSnapshots = table.keepSnapshots,
-        expectedBase = expectedBase)
-    }
+  /** Copy-on-write rewrite of `touched` in ONE tagged pass, committed
+    * against `base`: each `existing` touched leaf's content, pinned to
+    * its physical leaf by LITERAL tags, minus `removed`, plus `added`
+    * (both logical data rows, tagged by their DERIVED leaf). Removal is
+    * an exact multiset subtraction within each leaf (the tags are
+    * disjoint), never a key anti-join: a key anti-join would also drop
+    * rows that merely share an affected row's key (NULL keys, key
+    * duplicates). Every source is scanned once, where a per-leaf Map
+    * would re-scan a shared checkpoint once per leaf. A touched leaf
+    * left with no rows publishes an empty version. */
+  def rewriteLeavesTagged(spark: SparkSession, table: GraftSqlTable,
+      touched: Seq[Seq[String]], existing: Set[Seq[String]],
+      removed: Option[DataFrame], added: Option[DataFrame],
+      base: Option[String]): Unit = {
+    val spec = table.spec
+    val dataCols = table.dataSchema.fieldNames.toSeq
+    val outCols = (dataCols ++ spec.names).map(col)
+    def derived(df: DataFrame): DataFrame = tagDerivedLogical(
+      df.select(dataCols.map(col): _*), spec).select(outCols: _*)
+    val content = touched.filter(existing.contains).map { vs =>
+      tagLiteralsOf(alignData(
+        SpecManifest.readLeaf(spark, table.root, spec, vs),
+        table.dataSchema, fromFiles = true), spec, vs).select(outCols: _*)
+    }.reduceOption(_.unionByName(_))
+    val minus = removed.fold(content)(r =>
+      content.map(_.exceptAll(derived(r))))
+    val data = (minus.toSeq ++ added.map(derived))
+      .reduceOption(_.unionByName(_)).getOrElse(spark.createDataFrame(
+        new java.util.ArrayList[Row](), StructType(table.dataSchema.fields
+          .toSeq ++ spec.names.map(StructField(_, StringType)))))
+    // alignment + physical renames apply to the data columns only
+    val physical = data.select(table.dataSchema.fields.toSeq.map { f =>
+      (if (data.schema(f.name).dataType == f.dataType) col(f.name)
+      else col(f.name).cast(f.dataType)).as(GraftSchemas.physicalName(f))
+    } ++ spec.names.map(col): _*)
+    SpecManifest.commitSnapshotTagged(spark, table.root, spec,
+      Some(physical), touched, keepSnapshots = table.keepSnapshots,
+      expectedBase = Some(base))
+  }
 
   /** The spec partition columns DERIVED from `df`'s (logical) data
-    * columns — the value-routing tag for [[replaceLeavesTagged]]. */
+    * columns — the value-routing tag for [[rewriteLeavesTagged]]. */
   private[sql] def tagDerivedLogical(df: DataFrame,
       spec: PartitionSpec): DataFrame =
     spec.fields.foldLeft(df)((d, f) => d.withColumn(f.name, f.derived))
 
   /** The spec partition columns attached as LITERALS — the
-    * physical-leaf pin for [[replaceLeavesTagged]]. */
+    * physical-leaf pin for [[rewriteLeavesTagged]]. */
   private[sql] def tagLiteralsOf(df: DataFrame, spec: PartitionSpec,
       vs: Seq[String]): DataFrame =
     spec.names.zip(vs).foldLeft(df) { case (d, (n, v)) =>
       d.withColumn(n, org.apache.spark.sql.functions.lit(v))
     }
-
-  private[sql] def leavesOfRows(rows: DataFrame,
-      spec: PartitionSpec): Seq[Seq[String]] = leavesOf(rows, spec)
-
-  private[sql] def rowsOfLeaf(rows: DataFrame, spec: PartitionSpec,
-      vs: Seq[String]): DataFrame = leafRows(rows, spec, vs)
 }

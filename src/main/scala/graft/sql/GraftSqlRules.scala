@@ -216,7 +216,7 @@ case class GraftDeleteCommand(table: GraftSqlTable, cond: Expression,
     relOutput: Seq[Attribute])
     extends LeafRunnableCommand with SupportsSubquery {
   override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlWrites.withConflictRetry(s"DELETE on ${table.name()}")(
+    GraftSqlWrites.withConflictRetry(spark, s"DELETE on ${table.name()}")(
       runOnce(spark))
   private def runOnce(spark: SparkSession): Seq[Row] = {
     val base = SpecManifest.currentSnapshot(spark, table.root)
@@ -261,25 +261,10 @@ case class GraftDeleteCommand(table: GraftSqlTable, cond: Expression,
             table.dataSchema)).toMap,
         keepSnapshots = table.keepSnapshots)
     } else if (correlated) {
-      // A correlated condition cannot re-evaluate per leaf — subtract
-      // the (planned-once) affected rows as an exact multiset. ONE
-      // tagged pass: content pinned to its physical leaf by literal
-      // tags, the removed checkpoint tagged by its DERIVED leaf — the
-      // exceptAll subtracts within each leaf (disjoint tags), and the
-      // checkpoint is scanned once instead of once per leaf.
-      val spec = table.spec
-      val outCols = (dataCols ++ spec.names).map(col)
-      val content = touched.map { vs =>
-        GraftSqlWrites.tagLiteralsOf(GraftSqlWrites.alignData(
-          SpecManifest.readLeaf(spark, table.root, spec, vs),
-          table.dataSchema, fromFiles = true), spec, vs)
-          .select(outCols: _*)
-      }.reduce(_.unionByName(_))
-      GraftSqlWrites.replaceLeavesTagged(spark, table,
-        content.exceptAll(GraftSqlWrites.tagDerivedLogical(
-          removed.select(dataCols.map(col): _*), spec)
-          .select(outCols: _*)),
-        touched, Some(base))
+      // a correlated condition cannot re-evaluate per leaf: subtract
+      // the (planned-once) affected rows as an exact multiset
+      GraftSqlWrites.rewriteLeavesTagged(spark, table, touched,
+        touched.toSet, Some(removed), None, base)
     } else {
       // SQL DELETE removes only rows where the condition IS TRUE: a
       // NULL-valued condition keeps its row (not(NULL) is NULL and
@@ -310,7 +295,7 @@ case class GraftUpdateCommand(table: GraftSqlTable,
     relOutput: Seq[Attribute])
     extends LeafRunnableCommand with SupportsSubquery {
   override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlWrites.withConflictRetry(s"UPDATE on ${table.name()}")(
+    GraftSqlWrites.withConflictRetry(spark, s"UPDATE on ${table.name()}")(
       runOnce(spark))
   private def runOnce(spark: SparkSession): Seq[Row] = {
     val base = SpecManifest.currentSnapshot(spark, table.root)
@@ -332,11 +317,11 @@ case class GraftUpdateCommand(table: GraftSqlTable,
     // union mechanism (the leaf-moving branch) instead of re-filtering
     val correlated = cond.exists(GraftDml.isCorrelated)
     val tgt = table.buildRead(spark)
-    val affected = (if (correlated)
-      GraftDml.affectedFrame(spark, tgt, relOutput, cond.get)
-    else tgt.filter(condOn(tgt))).localCheckpoint()
     val dataCols = table.dataSchema.fieldNames.toSeq
     if (movers.nonEmpty || correlated) {
+      val affected = (if (correlated)
+        GraftDml.affectedFrame(spark, tgt, relOutput, cond.get)
+      else tgt.filter(condOn(tgt))).localCheckpoint()
       // LEAF-MOVING update: the affected old rows leave their leaves,
       // the transformed rows land in their newly-derived ones — one
       // atomic copy-on-write snapshot over both sides, multiset-exact
@@ -353,33 +338,15 @@ case class GraftUpdateCommand(table: GraftSqlTable,
       val touched = graft.engine.Par.map(Seq(affected, moved))(
         GraftSqlWrites.leavesOfRows(_, spec)).flatten.distinct
       if (touched.isEmpty) return Seq.empty
-      val existing =
-        SpecManifest.leafKeys(spark, table.root, spec).toSet
-      // ONE tagged pass (the MERGE-COW shape): existing content pinned
-      // to its physical leaf by literal tags, the affected/moved
-      // checkpoints tagged by their DERIVED leaf — the exceptAll
-      // subtracts within each leaf exactly as the per-leaf Map did
-      // (disjoint tags), but each checkpoint is scanned ONCE instead
-      // of once per touched leaf
-      val outCols = (dataCols ++ spec.names).map(col)
-      val content = touched.filter(existing.contains).map { vs =>
-        GraftSqlWrites.tagLiteralsOf(GraftSqlWrites.alignData(
-          SpecManifest.readLeaf(spark, table.root, spec, vs),
-          table.dataSchema, fromFiles = true), spec, vs)
-          .select(outCols: _*)
-      }.reduceOption(_.unionByName(_))
-      val minus = content.map(_.exceptAll(
-        GraftSqlWrites.tagDerivedLogical(
-          affected.select(dataCols.map(col): _*), spec)
-          .select(outCols: _*)))
-      val plus = GraftSqlWrites.tagDerivedLogical(
-        moved.select(dataCols.map(col): _*), spec).select(outCols: _*)
-      GraftSqlWrites.replaceLeavesTagged(spark, table,
-        (minus.toSeq :+ plus).reduce(_.unionByName(_)), touched,
-        Some(base))
+      GraftSqlWrites.rewriteLeavesTagged(spark, table, touched,
+        SpecManifest.leafKeys(spark, table.root, spec).toSet,
+        Some(affected), Some(moved), base)
       return Seq.empty
     }
-    val touched = GraftSqlWrites.leavesOfRows(affected, table.spec)
+    // an in-place update reads the affected rows once, for their
+    // leaves: the rewrite below re-filters each leaf's own files
+    val touched = GraftSqlWrites.leavesOfRows(tgt.filter(condOn(tgt)),
+      table.spec)
     val updates = touched.map { vs =>
       val leaf = GraftSqlWrites.alignData(
         SpecManifest.readLeaf(spark, table.root, table.spec, vs),
@@ -435,14 +402,15 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
   private val ClauseCol = "_graft_merge_clause"
 
   override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlWrites.withConflictRetry(s"MERGE into ${table.name()}")(
+    GraftSqlWrites.withConflictRetry(spark, s"MERGE into ${table.name()}")(
       runOnce(spark))
 
   private def runOnce(spark: SparkSession): Seq[Row] = {
     import GraftDml._
     import graft.engine.Par
     val base0 = SpecManifest.currentSnapshot(spark, table.root)
-    val srcDf = ColumnBridge.ofRows(spark, source).localCheckpoint()
+    val srcDf = GraftSqlWrites.frozen(spark, ColumnBridge.ofRows(spark,
+      source))
     val srcMap = attrMap(source.output, srcDf)
     val targetIds = targetOutput.map(_.exprId).toSet
     val sourceIds = source.output.map(_.exprId).toSet
@@ -523,8 +491,8 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
     val oldCols = targetOutput.map(x => tgt(x.name).as(x.name))
 
     /** Tag each row with the index of the FIRST clause whose condition
-      * holds (a NULL condition skips to the next clause, per SQL), and
-      * keep only rows some clause claims. */
+      * holds (a NULL condition skips to the next clause, per SQL); rows
+      * no clause claims carry a NULL tag. */
     def tagClauses(df: DataFrame, acts: Seq[MergeAction],
         m: Map[ExprId, Expression]): DataFrame = {
       def condOf(a: MergeAction) =
@@ -533,8 +501,9 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
         org.apache.spark.sql.functions.when(condOf(acts.head), lit(0))) {
         case (c, (a, i)) => c.when(condOf(a), lit(i))
       }
-      df.withColumn(ClauseCol, chain).filter(col(ClauseCol).isNotNull)
+      df.withColumn(ClauseCol, chain)
     }
+    val claimed = col(ClauseCol).isNotNull
 
     def assignMap(assigns: Seq[Assignment]): Map[String, Expression] =
       assigns.map(x => (x.key match {
@@ -549,7 +518,7 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
     def applyClauses(tagged: DataFrame, acts: Seq[MergeAction],
         m: Map[ExprId, Expression])
         : (DataFrame, Option[DataFrame], Seq[DataFrame]) = {
-      val removed = tagged.select(oldCols: _*)
+      val removed = tagged.filter(claimed).select(oldCols: _*)
       val delIdx = acts.zipWithIndex.collect {
         case (DeleteAction(_), i) => i }
       val deleted =
@@ -586,8 +555,9 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
       tgt(tk) === srcKey(srcDf, tk, sk) }.reduce(_ && _)
     val onCond = resCol.map(keysCond && _).getOrElse(keysCond)
     // broadcast a provably small source (guide §3.1, the Delta
-    // low-shuffle-merge posture): the checkpointed source's row count
-    // is exact and cheap; bytes estimate with Spark's own
+    // low-shuffle-merge posture): the frozen source's row count is
+    // exact — a LocalRelation's without a job, a checkpoint's with
+    // one cheap count; bytes estimate with Spark's own
     // defaultSize-based stats arithmetic, gated by the session's
     // autoBroadcastJoinThreshold - a big-delta MERGE keeps the
     // shuffled joins (broadcasting gigabytes would be worse). Build
@@ -597,7 +567,10 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
     lazy val srcIsSmall: Boolean = {
       val thr = spark.sessionState.conf.autoBroadcastJoinThreshold
       thr > 0 && {
-        val rows = srcDf.count()
+        val rows = srcDf.queryExecution.optimizedPlan match {
+          case l: LocalRelation => l.data.size.toLong
+          case _ => srcDf.count()
+        }
         rows * srcDf.schema.defaultSize <= thr
       }
     }
@@ -609,7 +582,9 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
     // ---- WHEN MATCHED / WHEN NOT MATCHED BY SOURCE ----
     // the matched inner join and the by-source anti-join materialize
     // INDEPENDENT tagged frames off the same (tgt, srcDf) inputs —
-    // overlap the two checkpoint jobs (guide §2.6)
+    // overlap the two checkpoint jobs (guide §2.6). The matched
+    // checkpoint keeps EVERY pair, claimed or not: the duplicate-key
+    // probe below counts a key's pairs before any clause filters them.
     val Seq(taggedMOpt, taggedNOpt) = Par.map(Seq[() => Option[DataFrame]](
       () =>
         if (matched.isEmpty) None
@@ -630,7 +605,7 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
               else srcKeys, antiCond, "left_anti")
             } else tgt.join(srcMaybeB, onCond, "left_anti")
           Some(tagClauses(anti, notMatchedBySource, tgtMap)
-            .localCheckpoint())
+            .filter(claimed).localCheckpoint())
         }))(_.apply())
     val (remM, delM, updM):
         (Option[DataFrame], Option[DataFrame], Seq[DataFrame]) =
@@ -732,21 +707,6 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
       affectedAll.map(_.filter(col(SideCol) === "a").drop(SideCol)))
     val deletedOld = (delM.toSeq ++ delN.toSeq)
       .reduceOption(_.unionByName(_))
-    val someKeyNull = tKeys.map(col(_).isNull)
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val (touched: Seq[Seq[String]], anyNullKey: Boolean) =
-      affectedAll match {
-        case None => (Seq.empty[Seq[String]], false)
-        case Some(df) =>
-          val tagged = spec.fields.foldLeft(df)((d, f) =>
-            d.withColumn(f.name, f.derived))
-          val agg = tagged.groupBy(spec.names.map(col): _*)
-            .agg(org.apache.spark.sql.functions.max(someKeyNull)
-              .as("_graft_nullkey")).collect()
-          (agg.toSeq.map(r => spec.names.indices.map(r.getString)),
-            agg.exists(_.getBoolean(spec.names.length)))
-      }
-    if (touched.isEmpty) return Seq.empty
     // ---- MERGE-ON-READ fast path: the whole MERGE lands as key-
     // merged DELTAS in one atomic commitMerge — bytes written scale
     // with the delta, never the touched leaves. Eligible when:
@@ -758,7 +718,9 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
     //     delete deltas;
     //   - every touched leaf exists (inserts into new leaves need a
     //     leaf-creating snapshot commit);
-    //   - existing chains are keyed by the same merge keys.
+    //   - existing chains are keyed by the same merge keys;
+    //   - no affected row has a NULL merge key, and no merge key
+    //     repeats within a leaf (the probe below).
     // Clause exclusivity (first-match-wins) keeps each leaf's upsert
     // and delete key sets disjoint, commitMerge's contract.
     // per-assignment safety: alignment/star expansion assigns EVERY
@@ -786,6 +748,16 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
       case _ => false
     }
     val matchedSafe = (matched ++ notMatchedBySource).forall(actionSafe)
+    // a RESIDUAL makes "not matched" weaker than "key absent": an
+    // insert may carry a key that EXISTS in the target (pair failed
+    // the residual) — a keyed upsert delta would silently REPLACE that
+    // row; only the copy-on-write route adds alongside it
+    val insertsKeySafe = residual.isEmpty || inserted.isEmpty
+    // ONE two-level aggregation over the materialized frames answers
+    // the data gates: the touched leaves (the derived leaves of the
+    // affected rows), any NULL merge key among the affected rows, and —
+    // when the clause shape admits merge-on-read — any merge key
+    // repeated within a leaf.
     // NULL merge keys never equi-join: a key-only delete delta or a
     // keyed upsert carrying a NULL key would silently no-op (or
     // duplicate) at chain resolution. Such rows can only come from NOT
@@ -794,12 +766,61 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
     // the copy-on-write fallback, whose removal handles NULL keys by
     // exact multiset subtraction. (GraftDeleteCommand's noNulls gate,
     // extended to MERGE.)
-    val noNullKeys = !anyNullKey
-    // a RESIDUAL makes "not matched" weaker than "key absent": an
-    // insert may carry a key that EXISTS in the target (pair failed
-    // the residual) — a keyed upsert delta would silently REPLACE that
-    // row; only the copy-on-write route adds alongside it
-    val insertsKeySafe = residual.isEmpty || inserted.isEmpty
+    // DUPLICATE keys break merge-on-read resolution, which is keyed per
+    // (leaf, merge key): base-row removal is a key anti-join and one
+    // layer keeps ONE delta row per key. Duplicate target keys are
+    // legal (a residual-ON insert creates them), so copy-on-write, whose
+    // exact-multiset removal handles them, takes over when within one
+    // leaf a claimed target row's key has more than one target row ("t"
+    // rows) or the replacement rows repeat a key ("a" rows; inserted
+    // keys are absent from the target). With no residual and no NOT
+    // MATCHED BY SOURCE clause the "t" rows are the matched pairs,
+    // counted before the clauses filter them — a clause claiming one
+    // copy of a duplicated key still sees both; otherwise the target
+    // read is semi-joined with the removed keys.
+    val someKeyNull = tKeys.map(col(_).isNull)
+      .reduceOption(_ || _).getOrElse(lit(false))
+    val (claimCol, nullCol, nCol) =
+      ("_graft_claimed", "_graft_nullkey", "_graft_keyn")
+    def probeRows(df: DataFrame, side: org.apache.spark.sql.Column,
+        claim: org.apache.spark.sql.Column): DataFrame =
+      GraftSqlWrites.tagDerivedLogical(df, spec).select(
+        (spec.names.map(col) :+ side.as(SideCol)) ++ tKeys.map(col) ++
+          Seq(claim.as(claimCol), someKeyNull.as(nullCol)): _*)
+    // the clause shape admits merge-on-read
+    val morShape = matchedSafe && insertsKeySafe
+    val targetRows: Option[DataFrame] =
+      if (!morShape) None
+      else if (residual.isEmpty && notMatchedBySource.isEmpty)
+        taggedMOpt.map(p => probeRows(
+          p.select(oldCols :+ claimed.as(claimCol): _*), lit("t"),
+          col(claimCol)))
+      else removed.map(r => probeRows(
+        tgt.select(dataCols.map(tgt(_)): _*).join(
+          r.select(tKeys.map(col): _*).distinct(), tKeys, "left_semi"),
+        lit("t"), lit(true)))
+    val (touched: Seq[Seq[String]], anyNullKey: Boolean,
+        anyDupKey: Boolean) = affectedAll match {
+      case None => (Seq.empty[Seq[String]], false, false)
+      case Some(df) =>
+        val rows = (probeRows(df, col(SideCol), lit(true)) +: targetRows.toSeq)
+          .reduce(_.unionByName(_))
+        val fn = org.apache.spark.sql.functions
+        val perKey =
+          if (!morShape) rows.withColumn(nCol, lit(1L))
+          else rows.groupBy(((spec.names :+ SideCol) ++ tKeys).map(col): _*)
+            .agg(fn.count(lit(1)).as(nCol), fn.max(claimCol).as(claimCol),
+              fn.max(nullCol).as(nullCol))
+        val agg = perKey.groupBy(spec.names.map(col): _*).agg(
+          fn.max(col(SideCol) =!= "t"), fn.max(nullCol),
+          fn.max(col(nCol) > 1L && col(claimCol) && col(SideCol) =!= "r"))
+          .collect()
+        val n = spec.names.length
+        (agg.toSeq.filter(_.getBoolean(n))
+          .map(r => spec.names.indices.map(r.getString)),
+          agg.exists(_.getBoolean(n + 1)), agg.exists(_.getBoolean(n + 2)))
+    }
+    if (touched.isEmpty) return Seq.empty
     val existing = SpecManifest.leafKeys(spark, table.root, spec).toSet
     // files (and so delta chains) spell RENAMED columns physically
     val physSchema = GraftSchemas.physicalSchema(table.dataSchema)
@@ -819,46 +840,8 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
           .map(f => (f.name, f.dataType)) ==
           physSchema.map(f => (f.name, f.dataType)).toSeq)
       .forall(identity)
-    // DUPLICATE keys break merge-on-read resolution, which is keyed:
-    // base-row removal is a key anti-join (it would drop EVERY row
-    // sharing an affected key, affected or not) and chain resolution
-    // keeps ONE delta row per key per layer (two updates or two
-    // inserts of the same key silently collapse to one). Duplicate
-    // target keys are legal (plain INSERT enforces nothing; a
-    // residual-ON insert creates them deliberately) — route any MERGE
-    // whose affected keys are non-unique in the target, or whose
-    // replacement rows repeat a key, through the copy-on-write
-    // fallback, whose exact-multiset removal and plain union handle
-    // duplicates exactly. Delta-scale: one count over the affected-
-    // key-semi-joined target read, evaluated only when every other
-    // MOR gate already passed.
-    def noDupKeys: Boolean = {
-      val cnt = org.apache.spark.sql.functions.count(lit(1))
-      // both dup tests (affected keys non-unique in the TARGET; keys
-      // repeated within the REPLACEMENT rows) ride one job: tag the
-      // side, group by (keys, side), any group >1 fails the gate.
-      // The target side only needs the keys of REMOVED rows: update
-      // replacements are key-preserving (matchedSafe), so their keys
-      // are removed keys; insert keys cannot pre-exist in the target
-      // (the no-residual anti-join guarantees it, and residual inserts
-      // are already COW-routed by insertsKeySafe) — an insert-only
-      // merge therefore skips the target scan entirely and only
-      // checks its own rows for repeated keys.
-      val tgtKeys = removed.map(r =>
-        tgt.select(tKeys.map(tgt(_)): _*)
-          .join(r.select(tKeys.map(col): _*).distinct(),
-            tKeys.toSeq, "left_semi")
-          .withColumn("_graft_side", lit("t")))
-      val addKeys = added.map(_.select(tKeys.map(col): _*)
-        .withColumn("_graft_side", lit("a")))
-      (tgtKeys.toSeq ++ addKeys.toSeq).reduceOption(_.unionByName(_))
-        .forall(_.groupBy((tKeys :+ "_graft_side").map(col): _*)
-          .agg(cnt.as("_graft_keyn"))
-          .filter(col("_graft_keyn") > 1L).isEmpty)
-    }
-    if (matchedSafe && chainsOk && schemasOk && noNullKeys &&
-        insertsKeySafe && touched.forall(existing.contains) &&
-        noDupKeys) {
+    if (morShape && !anyNullKey && !anyDupKey && chainsOk && schemasOk &&
+        touched.forall(existing.contains)) {
       val ups = added.map(a2 => touched.map(vs =>
         vs -> GraftSqlWrites.toPhysical(
           GraftSqlWrites.rowsOfLeaf(a2, spec, vs), table.dataSchema))
@@ -874,50 +857,13 @@ case class GraftMergeCommand(table: GraftSqlTable, source: LogicalPlan,
           keepSnapshots = table.keepSnapshots)
       return Seq.empty
     }
-    // ---- copy-on-write fallback: rebuild the touched leaves in ONE
-    // tagged pass (a NEW leaf — an insert deriving a fresh partition
-    // tuple — has no content arm; its rows come from the added side).
-    // Per-leaf structure rides the STRING TAGS: existing content is
-    // pinned to its physical leaf by literals, the removed/added
-    // checkpoint filters carry their DERIVED leaf — so the exceptAll
-    // subtracts within each leaf exactly as the per-leaf-Map spelling
-    // did (multiset subtraction distributes over disjoint tags), but
-    // every source is scanned ONCE instead of once per leaf (the
-    // O(L·N) checkpoint re-scan this replaces; guide §1.2).
-    // Removal is an EXACT MULTISET subtraction (the leaf-moving
-    // UPDATE mechanism), never a key anti-join: a key anti-join
-    // would also remove rows that merely SHARE an affected row's
-    // key without being affected themselves — NULL-keyed rows
-    // (which never equi-join at all), and key-duplicate rows a
-    // residual-ON insert legitimately created.
-    val outCols = (dataCols ++ spec.names).map(col)
-    val content = touched.filter(existing.contains).map { vs =>
-      GraftSqlWrites.tagLiteralsOf(GraftSqlWrites.alignData(
-        SpecManifest.readLeaf(spark, table.root, table.spec, vs),
-        table.dataSchema, fromFiles = true), spec, vs)
-        .select(outCols: _*)
-    }.reduceOption(_.unionByName(_))
-    val minus = (content, removed) match {
-      case (Some(c), Some(r)) => Some(c.exceptAll(
-        GraftSqlWrites.tagDerivedLogical(
-          r.select(dataCols.map(col): _*), spec).select(outCols: _*)))
-      case (c, None) => c
-      case (None, _) => None
-    }
-    val plus = added.map(a2 => GraftSqlWrites.tagDerivedLogical(
-      a2.select(dataCols.map(col): _*), spec).select(outCols: _*))
-    // no content and no added side still commits: every touched leaf
-    // publishes an empty version (the per-leaf-Map behavior)
-    val data = (minus.toSeq ++ plus.toSeq)
-      .reduceOption(_.unionByName(_)).getOrElse {
-        val sc = org.apache.spark.sql.types.StructType(
-          table.dataSchema.fields.toSeq ++ spec.names.map(n =>
-            org.apache.spark.sql.types.StructField(n,
-              org.apache.spark.sql.types.StringType)))
-        spark.createDataFrame(new java.util.ArrayList[Row](), sc)
-      }
-    GraftSqlWrites.replaceLeavesTagged(spark, table, data, touched,
-      Some(base0))
+    // ---- copy-on-write fallback: rebuild the touched leaves (a NEW
+    // leaf — an insert deriving a fresh partition tuple — has no
+    // content; its rows come from the added side), removing `removed`
+    // as an exact multiset: NULL-keyed rows and the key duplicates a
+    // residual-ON insert creates stay unless affected themselves
+    GraftSqlWrites.rewriteLeavesTagged(spark, table, touched, existing,
+      removed, added, base0)
     Seq.empty
   }
 }

@@ -80,6 +80,14 @@ object ColumnBridge {
 
 }
 
+/** Drain the SparkContext's listener bus (`listenerBus` is
+  * private[spark]; same package-tree technique as [[ColumnBridge]]):
+  * returns once every event posted so far has reached every listener. */
+object ListenerBus {
+  def drain(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+}
+
 /** V2 partition-transform bridge: the connector transform case classes
   * (IdentityTransform, YearsTransform, BucketTransform, …) are
   * private[sql], so the graft catalog decodes them here — same

@@ -2110,6 +2110,40 @@ class EngineSpec extends AnyFunSuite {
     assert(mainDiff == 3, s"main consumer diff rows: $mainDiff")
   }
 
+  test("escaped partition values serve the same before and after a " +
+      "merge-on-read commit and compaction") {
+    import spark.implicits._
+    import graft.engine.PartitionedManifest
+    val root = Files.createTempDirectory("graft-escaped").toString
+    try {
+      // Spark escapes ':' and '%' in the directory names the seed adopts
+      PartitionedManifest.seed(spark, root, Seq((1L, 1.0, "a:b"),
+        (2L, 2.0, "a:b"), (3L, 3.0, "x%y")).toDF("k", "v", "bk"), "bk")
+      PartitionedManifest.commitSnapshot(spark, root, "bk", Map.empty)
+      def content(): Seq[(Long, Double, String)] =
+        PartitionedManifest.read(spark, root, "bk", "string")
+          .select($"k", $"v", $"bk").as[(Long, Double, String)]
+          .collect().toSeq.sorted
+      val seeded = content()
+      val stored = seeded.map(_._3).distinct
+      assert(stored.size == 2, s"served values: $stored")
+      // both partitions turn merge-on-read (keys 1 and 3 update); the
+      // values they serve must not change
+      val merged = seeded.map(r => if (r._1 == 2L) r else r.copy(_2 = r._2 * 10))
+      PartitionedManifest.commitMerge(spark, root, "bk", Seq("k"),
+        upserts = merged.filter(_._1 != 2L).groupBy(_._3).map { case (v, rs) =>
+          v -> rs.map(r => (r._1, r._2)).toDF("k", "v") })
+      assert(content() == merged, "merge-on-read read")
+      PartitionedManifest.compact(spark, root, "bk")
+      assert(content() == merged, "compacted read")
+    } finally {
+      val s = Files.walk(java.nio.file.Paths.get(root))
+      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally s.close()
+    }
+  }
+
   test("merge-on-read: delta chains survive keep-2 trims (base dirs are " +
       "chain-protected from GC), readers resolve layered upserts and " +
       "deletes, and compaction folds the chain to a pure dir") {

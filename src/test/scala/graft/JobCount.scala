@@ -1,7 +1,8 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -12,15 +13,24 @@ import org.apache.spark.sql.SparkSession
   * no sleep, no missed or stray events. */
 object JobCount {
   def of[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val (out, descriptions) = described(spark)(body)
+    (out, descriptions.size)
+  }
+
+  /** The block's jobs, as their `spark.job.description` ("" where
+    * unset), in start order. */
+  def described[T](spark: SparkSession)(body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
     val tag = s"graft-jobcount-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[String]
     @volatile var gate = new CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(
-            _.getProperty("spark.job.description") == tag)) gate.countDown()
-        else jobs.incrementAndGet()
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val d = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        if (d == tag) gate.countDown() else jobs.add(d)
+      }
     }
     def sentinel(): Unit = {
       val prior = sc.getLocalProperty("spark.job.description")
@@ -32,11 +42,11 @@ object JobCount {
     sc.addSparkListener(listener)
     try {
       sentinel()
-      jobs.set(0)
+      jobs.clear()
       gate = new CountDownLatch(1)
       val out = body
       sentinel()
-      (out, jobs.get())
+      (out, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }
