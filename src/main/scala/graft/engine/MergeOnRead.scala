@@ -42,10 +42,15 @@ import graft.sources.FooterSchema
   * `_mor.tsv` base chains, so a base dir can never be collected while a
   * kept snapshot (or the live pointer) names a layer above it.
   *
-  * Both table layouts mix this in over [[SnapshotLog]] and differ only
-  * in where key `k` lives (`root/<leafRoot(k)>`): `partCol=v` for the
-  * single-column layout, `y=…/b=…` for a partition spec. The hive field
-  * names of a key are read off that path.
+  * This trait is also THE TABLE ENGINE of both layouts: on top of
+  * [[SnapshotLog]]'s commit protocol it holds the one implementation of
+  * serving (content pins, the merge-on-read/pure split, catalog
+  * relation registration), snapshot commit, CDC and zone-map analyze.
+  * [[SpecManifest]] and [[PartitionedManifest]] are adapters that pass
+  * their differences as data: where key `k` lives (`root/<leafRoot(k)>`,
+  * `partCol=v` or `y=…/b=…`; the hive field names are read off that
+  * path), each field's served type, and whether snapshots record the
+  * data schema.
   */
 trait MergeOnRead extends SnapshotLog {
   import MergeOnRead._
@@ -120,15 +125,20 @@ trait MergeOnRead extends SnapshotLog {
     * appended after the data columns, via the deterministic hidden
     * file-metadata column. Its `file_path` is a URI, so each segment is
     * percent-decoded once to the directory name (a `+` is a literal plus
-    * in a URI path, while `url_decode` would read it as a space). */
+    * in a URI path, while `url_decode` would read it as a space), then
+    * path-unescaped to the value (the leaf-key rule, [[escapeValue]]):
+    * the escapes Spark writes for the characters `checkPartValue`
+    * admits, `%25` last so a decoded `%` never starts another escape. */
   private[engine] def attachFieldsFromPath(df: DataFrame,
       fields: Seq[String]): DataFrame = {
     val dataCols = df.columns.toSeq
+    val escapes = "#*:=?{[]^".map(c => (f"%%${c.toInt}%02X", c.toString)) :+
+      ("%25" -> "%")
     val withF = fields.foldLeft(df)((x, f) =>
-      x.withColumn(f, url_decode(regexp_replace(regexp_extract(
-        col("_metadata.file_path"),
-        java.util.regex.Pattern.quote(s"/$f=") + "([^/]+)/", 1),
-        "\\+", "%2B"))))
+      x.withColumn(f, escapes.foldLeft(url_decode(regexp_replace(
+        regexp_extract(col("_metadata.file_path"),
+          java.util.regex.Pattern.quote(s"/$f=") + "([^/]+)/", 1),
+        "\\+", "%2B"))) { case (v, (e, c)) => replace(v, lit(e), lit(c)) }))
     withF.select((dataCols.map(col) ++ fields.map(col)): _*)
   }
 
@@ -287,6 +297,332 @@ trait MergeOnRead extends SnapshotLog {
         when(col(W) > 0, lit("insert")).otherwise(lit("delete"))
           .as(changeCol): _*)
   }
+
+  // ---------------------------------------------------------------------
+  // THE TABLE ENGINE: serving, relation registration, snapshot commit,
+  // CDC and analyze, one implementation for both layouts. A layout is
+  // data here: `leafRoot` places key k at `root/<leafRoot(k)>`, `fields`
+  // pairs each hive field with the SQL type it serves as (the
+  // single-column layout's typed partition column; `string` on spec
+  // tables), and a table records its data schema in its snapshots
+  // (`#schema`, the single-column layout) or not.
+
+  /** The hive field names of a leaf path, in path order. */
+  protected def fieldNames(leaf: String): Seq[String] =
+    leaf.split("/").toSeq.map(_.takeWhile(_ != '='))
+
+  private def typed(df: DataFrame, fields: Seq[(String, String)])
+      : DataFrame =
+    fields.foldLeft(df) { case (x, (n, t)) =>
+      if (t == "string") x else x.withColumn(n, col(n).cast(t)) }
+
+  /** Make catalog `table` an external partitioned parquet relation over
+    * `root` serving exactly `leaves` (leaf path → absolute dir). It is
+    * created when absent, and recreated (catalog-only) when its data
+    * columns differ from `dataSchema`; then the catalog is diffed: one
+    * batched ADD for new leaves, a SET LOCATION only where a pointer
+    * moved, one batched DROP for leaves not wanted (a table re-pinned to
+    * an older snapshot must not keep later partitions). A content pin is
+    * a new table whose diff is all ADDs. Each partition value is the
+    * unescaped directory value. */
+  protected def syncRelation(spark: SparkSession, root: String,
+      table: String, fields: Seq[(String, String)],
+      leaves: Seq[(String, String)], dataSchema: StructType,
+      props: Seq[(String, String)]): Unit = {
+    val names = fields.map(_._1)
+    def shape(s: StructType) = s.filterNot(f => names.contains(f.name))
+      .map(f => (f.name, f.dataType))
+    val existed = spark.catalog.tableExists(table)
+    if (existed && shape(spark.table(table).schema) != shape(dataSchema))
+      spark.sql(s"DROP TABLE `$table`")
+    if (!spark.catalog.tableExists(table)) {
+      val cols = (dataSchema.map(f => s"`${f.name}` ${f.dataType.sql}") ++
+        fields.map { case (n, t) => s"`$n` $t" }).mkString(", ")
+      // a content-named pin a racing reader created is the identical
+      // table: losing the create race is benign
+      try spark.sql(s"CREATE TABLE `$table` ($cols) USING parquet " +
+        s"PARTITIONED BY (${names.map(n => s"`$n`").mkString(", ")}) " +
+        s"LOCATION '$root' TBLPROPERTIES (" +
+        props.map { case (k, v) => s"'$k'='$v'" }.mkString(", ") + ")")
+      catch {
+        case _: org.apache.spark.sql.catalyst.analysis
+          .TableAlreadyExistsException => ()
+      }
+    }
+    def spec(vs: Seq[String]): String = names.zip(vs)
+      .map { case (n, v) => s"`$n`='$v'" }.mkString("PARTITION (", ", ", ")")
+    val existing: Map[Seq[String], String] = spark.sharedState
+      .externalCatalog.listPartitions(spark.catalog.currentDatabase, table)
+      .map(p => names.map(p.spec) -> p.location.toString).toMap
+    def norm(s: String) = s.stripPrefix("file:").stripSuffix("/")
+    val wanted = leaves.map { case (lp, d) => leafFields(lp).map(_._2) -> d }
+    val extra = existing.keySet.diff(wanted.map(_._1).toSet).toSeq
+      .sortBy(_.mkString("/"))
+    // DROP takes COMMA-separated partition specs, ADD space-separated
+    // spec LOCATION pairs
+    if (extra.nonEmpty)
+      spark.sql(s"ALTER TABLE `$table` DROP IF EXISTS " +
+        extra.map(spec).mkString(", "))
+    val added = wanted.filterNot { case (vs, _) => existing.contains(vs) }
+    if (added.nonEmpty)
+      spark.sql(s"ALTER TABLE `$table` ADD IF NOT EXISTS " +
+        added.map { case (vs, d) => s"${spec(vs)} LOCATION '$d'" }
+          .mkString(" "))
+    wanted.foreach { case (vs, d) =>
+      if (existing.get(vs).exists(loc => norm(loc) != norm(d)))
+        spark.sql(s"ALTER TABLE `$table` ${spec(vs)} SET LOCATION '$d'")
+    }
+    if (existed) spark.sql(s"REFRESH TABLE `$table`")
+    graft.plans.ZoneMaps.install(spark)
+  }
+
+  private def pinPrefix(root: String): String =
+    s"graft_pin_${SnapshotLog.hash8(root)}_"
+
+  /** A pin's name hashes its content, the (key, version dir) mapping
+    * plus the served schema: the same dirs under an evolved schema serve
+    * through a different pin. */
+  private def pinName(root: String, mapping: Seq[(String, String)],
+      schema: Option[StructType]): String =
+    pinPrefix(root) + SnapshotLog.hash8(
+      mapping.sortBy(_._1).map { case (k, d) => s"$k\t$d" }.mkString("\n") +
+        schema.map(s => "\n#schema=" + s.json).getOrElse(""))
+
+  /** The pins that serve `mapping` under each of `schemas`: the whole
+    * mapping's, its pure subset's (merge-on-read keys compose on top of
+    * the pin) and each field layout's (spec generation's) pure subset. */
+  protected def pinsOf(spark: SparkSession, root: String,
+      leafRoot: String => String, mapping: Seq[(String, String)],
+      schemas: Seq[Option[StructType]]): Seq[String] = {
+    val pure = mapping.filterNot { case (k, d) =>
+      isMorDir(spark, s"$root/${leafRoot(k)}/$d") }
+    val groups = pure.groupBy { case (k, _) => fieldNames(leafRoot(k)) }
+    for {
+      m <- (Seq(mapping, pure) ++ groups.values).distinct if m.nonEmpty
+      s <- schemas.distinct
+    } yield pinName(root, m, s)
+  }
+
+  /** Serve pure version dirs through one CONTENT-PINNED partitioned
+    * catalog relation: any key count plans ONE relation node with real
+    * PartitionFilters pruning, re-reading a mapping reuses its
+    * registration (zero catalog writes), and the pin is immutable, so a
+    * DataFrame captured before a later commit keeps reading the versions
+    * it resolved. Registering a new pin drops this root's pins that
+    * `valid()` no longer names, so catalog metadata keeps the keep-N
+    * reader horizon of the version dirs (a reader holding a DataFrame
+    * past it fails loudly on the missing files, never silently:
+    * `spark.sql.files.ignoreMissingFiles` must stay false). `spec`, the
+    * hidden-partition spec, lets its rule derive partition filters from
+    * source-column equalities. */
+  protected def servePinned(spark: SparkSession, root: String,
+      leafRoot: String => String, fields: Seq[(String, String)],
+      mapping: Seq[(String, String)], schema: Option[StructType],
+      spec: Option[String], valid: () => Seq[String]): DataFrame = {
+    val table = pinName(root, mapping, schema)
+    if (!spark.catalog.tableExists(table)) {
+      val leaves = mapping.map { case (k, d) =>
+        leafRoot(k) -> s"$root/${leafRoot(k)}/$d" }
+      syncRelation(spark, root, table, fields, leaves,
+        schema.getOrElse(footerSchema(spark, leaves.head._2)),
+        (graft.plans.ZoneMaps.Prop -> "true") +:
+          spec.map(graft.plans.HiddenPartitions.Prop -> _).toSeq)
+      val keep = valid().toSet + table
+      spark.sharedState.externalCatalog
+        .listTables(spark.catalog.currentDatabase)
+        .filter(t => t.startsWith(pinPrefix(root)) && !keep(t))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+    // a pin reused from an earlier session still needs the session-local
+    // optimizer rules
+    graft.plans.ZoneMaps.install(spark)
+    if (spec.isDefined) graft.plans.HiddenPartitions.install(spark)
+    spark.table(table)
+  }
+
+  /** Serve a resolved (key, version dir) mapping with the data columns
+    * of `schema` (recorded or declared; else the footers) and `fields`:
+    * pure dirs through [[servePinned]], merge-on-read dirs through one
+    * grouped resolution unioned on top (plan width scales with chain
+    * depth, never the count of merge-on-read keys). */
+  protected def serveMapping(spark: SparkSession, root: String,
+      leafRoot: String => String, fields: Seq[(String, String)],
+      mapping: Seq[(String, String)], schema: Option[StructType],
+      spec: Option[String], valid: () => Seq[String]): DataFrame = {
+    require(mapping.nonEmpty, s"$logName: no $keysNoun to serve under $root")
+    val (mor, pure) = mapping.partition { case (k, d) =>
+      isMorDir(spark, s"$root/${leafRoot(k)}/$d") }
+    val pinned =
+      if (pure.isEmpty) Nil
+      else Seq(servePinned(spark, root, leafRoot, fields, pure, schema,
+        spec, valid))
+    val resolved =
+      if (mor.isEmpty) Nil
+      else Seq(typed(resolveMorGrouped(spark,
+        mor.map { case (k, d) => (s"$root/${leafRoot(k)}", d) },
+        fields.map(_._1), schema), fields))
+    (pinned ++ resolved).reduce(_.unionByName(_))
+  }
+
+  /** (key, version dir) entries of ONE field layout as one frame: pure
+    * dirs as one relation, merge-on-read chains through one grouped
+    * resolution, fields recovered from the paths. */
+  private def readEntries(spark: SparkSession, root: String,
+      leafRoot: String => String, entries: Seq[(String, String)],
+      names: Seq[String], schema: Option[StructType]): DataFrame = {
+    val (mor, pure) = entries.partition { case (k, d) =>
+      isMorDir(spark, s"$root/${leafRoot(k)}/$d") }
+    ((if (pure.isEmpty) Nil
+      else Seq(readDirsWithFields(spark,
+        pure.map { case (k, d) => s"$root/${leafRoot(k)}/$d" }, names,
+        schema))) ++
+     (if (mor.isEmpty) Nil
+      else Seq(resolveMorGrouped(spark,
+        mor.map { case (k, d) => (s"$root/${leafRoot(k)}", d) }, names,
+        schema)))).reduce(_.unionByName(_))
+  }
+
+  /** One key's current LOGICAL content (no partition columns),
+    * merge-on-read resolving. */
+  protected def readLive(spark: SparkSession, keyRoot: String,
+      schema: Option[StructType]): DataFrame =
+    resolveVersionData(spark, keyRoot, ManifestTable.currentVersion(keyRoot)
+      .getOrElse(sys.error(s"$logName: no MANIFEST under $keyRoot")), schema)
+
+  /** The footer schema of a mapping's first version dir: the schema a
+    * table that records one starts from when nothing else gives it. */
+  protected def firstFooter(spark: SparkSession, root: String,
+      leafRoot: String => String)(
+      mapping: Seq[(String, String)]): Option[StructType] =
+    mapping.headOption.map { case (k, d) =>
+      footerSchema(spark, s"$root/${leafRoot(k)}/$d") }
+
+  /** The SNAPSHOT COMMIT, under the root publish lock: `validate(base)`
+    * first (conflict guards, key rules), then ONE hive-partitioned write
+    * of `data` (data columns + `fields`, string values) whose leaf
+    * subdirs are adopted as the `touched` keys' next versions (a touched
+    * key with no rows publishes an empty version), then one snapshot
+    * over base ++ written: the whole delta becomes visible in a single
+    * atomic rename. Version GC keeps the pinned snapshots' dirs and is
+    * delta-scoped. A table that records its schema evolves it
+    * additively by `data`'s, checked before any pointer moves (see
+    * [[evolvedSchema]]); a commit without data records the current one,
+    * or the first leaf's footer. Returns the snapshot name. */
+  protected def commitTagged(spark: SparkSession, root: String,
+      leafRoot: String => String, fields: Seq[String],
+      data: Option[DataFrame], touched: Seq[String], keepSnapshots: Int,
+      liveKeys: () => Seq[String], recordSchema: Boolean,
+      validate: Map[String, String] => Unit = _ => ()): String = {
+    require(keepSnapshots >= 2,
+      "keepSnapshots must be >= 2 (current + previous)")
+    ManifestTable.withPublishLock(root) {
+      val base = baseMappingLocked(spark, root, leafRoot, liveKeys)
+      validate(base)
+      val dataCols = data.map(_.columns.toSeq.filterNot(fields.contains))
+      val schema =
+        if (!recordSchema) None
+        else evolvedSchema(currentSnapshot(spark, root)
+          .flatMap(snapshotSchema(spark, root, _)),
+          data.map(df => StructType(df.schema.filterNot(f =>
+            fields.contains(f.name)))))
+      val written: Map[String, String] = data match {
+        case Some(df) if touched.nonEmpty =>
+          val scratch = s"$root/.commit-${SnapshotLog.uuid8()}"
+          writeTagged(df, fields, scratch)
+          try adoptLeavesLocked(spark, root, Some(scratch),
+            touched.distinct.sorted, keepSnapshots, leafRoot,
+            _ => df.select(dataCols.get.map(col): _*).limit(0))
+          finally fsOf(spark, root).delete(new HPath(scratch), true)
+        case _ => Map.empty
+      }
+      val mapping = (base ++ written).toSeq.sortBy(_._1)
+      require(mapping.nonEmpty, s"$logName: nothing to commit")
+      writeSnapshotLocked(spark, root, mapping, keepSnapshots,
+        if (recordSchema) schema.orElse(firstFooter(spark, root, leafRoot)(
+          mapping)) else None)
+    }
+  }
+
+  /** Row-level CDC between two kept snapshots, METADATA-FIRST: a key
+    * contributes rows only when its version dir differs between them,
+    * so an untouched key is never listed, planned or read (the Iceberg
+    * incremental-scan contract). Each side reads its changed keys
+    * through its own snapshot's recorded schema, one relation per field
+    * layout for pure dirs plus one grouped merge-on-read resolution,
+    * with the partition values recovered from the paths (fields a
+    * layout lacks, across spec evolutions, read as NULL). Where the
+    * to-snapshot records a schema both sides align to it (a column added
+    * between the commits reads as NULL on the from side; a type change
+    * fails loudly). The multiset diff ([[multisetDiff]]) tags
+    * `changeCol` 'insert' / 'delete' (an update is its delete + its
+    * insert, the Delta CDF shape, derived from the immutable version
+    * dirs at no ingest cost). `empty` gives the shape when nothing
+    * changed. */
+  protected def diffSnapshots(spark: SparkSession, root: String,
+      leafRoot: String => String, fields: Seq[(String, String)],
+      fromSnap: String, toSnap: String, changeCol: String,
+      empty: => DataFrame): DataFrame = {
+    val from = snapshotMapping(spark, root, fromSnap).toMap
+    val to = snapshotMapping(spark, root, toSnap).toMap
+    val changed = (from.keySet ++ to.keySet)
+      .filter(k => from.get(k) != to.get(k)).toSeq.sorted
+    val allNames = changed.flatMap(k => fieldNames(leafRoot(k))).distinct
+    def side(m: Map[String, String], snap: String): Option[DataFrame] = {
+      val schema = snapshotSchema(spark, root, snap)
+      val leaves = changed.flatMap(k => m.get(k).map(k -> _))
+      if (leaves.isEmpty) None
+      else Some(typed(leaves
+        .groupBy { case (k, _) => fieldNames(leafRoot(k)) }
+        .toSeq.sortBy(_._1.mkString("/"))
+        .map { case (names, ls) =>
+          val df = readEntries(spark, root, leafRoot, ls, names, schema)
+          val dataCols = df.columns.toSeq.filterNot(names.contains)
+          allNames.filterNot(names.contains)
+            .foldLeft(df)((x, n) => x.withColumn(n, lit(null).cast("string")))
+            .select((dataCols ++ allNames).map(col): _*)
+        }.reduce(_.unionByName(_)), fields))
+    }
+    (side(from, fromSnap), side(to, toSnap)) match {
+      case (None, None) => empty.limit(0).withColumn(changeCol, lit(""))
+      case (f, t) =>
+        val fDf = f.orElse(t.map(_.limit(0))).get
+        val tDf = t.orElse(f.map(_.limit(0))).get
+        snapshotSchema(spark, root, toSnap) match {
+          case None => multisetDiff(tDf, fDf, changeCol)
+          case Some(s) =>
+            val target = s.fields.toSeq ++ allNames.map(tDf.schema(_))
+            def align(df: DataFrame): DataFrame = df.select(target.map { fld =>
+              if (df.columns.contains(fld.name)) {
+                val dt = df.schema(fld.name).dataType
+                require(dt == fld.dataType,
+                  s"changesBetween: column '${fld.name}' changes type " +
+                    s"between snapshots (${dt.simpleString} vs " +
+                    s"${fld.dataType.simpleString}) - type changes are " +
+                    "not diffable")
+                col(fld.name)
+              } else lit(null).cast(fld.dataType).as(fld.name)
+            }: _*)
+            multisetDiff(align(tDf), align(fDf), changeCol)
+        }
+    }
+  }
+
+  /** Collect file-level min/max zone maps ([[FileStats]]) for `cols` on
+    * each key root's LIVE version dir. Idempotent per version dir (they
+    * are immutable), so running it after every commit costs one footer
+    * sweep of the delta's files. A merge-on-read dir is refused: its
+    * (empty) sidecar would make a skip-scan silently drop its content.
+    * Returns the number of version dirs newly analyzed. */
+  protected def analyzeLive(spark: SparkSession, keyRoots: Seq[String],
+      cols: Seq[String]): Int =
+    keyRoots.map { pr =>
+      val dir = ManifestTable.currentDataDir(pr).getOrElse(
+        sys.error(s"$logName: no MANIFEST under $pr"))
+      require(!isMorDir(spark, dir),
+        s"$logName: $dir is merge-on-read - analyze after compaction " +
+          "folds the delta chain down")
+      if (FileStats.collect(spark, dir, cols) >= 0) 1 else 0
+    }.sum
 
   // ---------------------------------------------------------------------
   // COMMIT: the merge-on-read commit and the optimistic rewrite
@@ -721,24 +1057,14 @@ trait MergeOnRead extends SnapshotLog {
             // no schema to read through, per chain-bottom shape: each
             // group is one bounded-width read and one tagged write
             val groups = candidates.toSeq.sorted.groupBy { case (k, d) =>
-              (leafRoot(k).split("/").toSeq.map(_.takeWhile(_ != '=')),
+              (fieldNames(leafRoot(k)),
                 readSchema.getOrElse(footerSchema(spark,
                   s"${keyRoot(k)}/${morChain(spark, keyRoot(k), d).last}")))
             }
             Par.map(groups.toSeq.map(_ -> newScratch())) {
               case (((fields, sc), ents), scratch) =>
-                val (mor, pure) = ents.partition { case (k, d) =>
-                  isMorDir(spark, s"${keyRoot(k)}/$d") }
-                val df = (
-                  (if (pure.isEmpty) Nil
-                   else Seq(readDirsWithFields(spark,
-                     pure.map { case (k, d) => s"${keyRoot(k)}/$d" }, fields,
-                     Some(sc)))) ++
-                  (if (mor.isEmpty) Nil
-                   else Seq(resolveMorGrouped(spark,
-                     mor.map { case (k, d) => (keyRoot(k), d) }, fields,
-                     Some(sc))))).reduce(_.unionByName(_))
-                writeTagged(df, fields, scratch)
+                writeTagged(readEntries(spark, root, leafRoot, ents, fields,
+                  Some(sc)), fields, scratch)
                 ents.map(_._1 -> scratch)
             }.flatten.toMap
         }) catch {

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -33,7 +34,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * for [[SpecManifest]] (keys are leaf paths `y=…/b=…`). Operations
   * that touch key directories take that as `leafRoot` (key → directory
   * relative to the root); `liveKeys` lists the keys present on disk.
-  * Each engine keeps its `partCol`/`spec` signatures as thin wrappers.
+  * The table engine built on this log is [[MergeOnRead]]'s.
   */
 trait SnapshotLog {
   import SnapshotLog._
@@ -71,9 +72,33 @@ trait SnapshotLog {
     v
   }
 
+  /** THE LEAF-KEY RULE: a partition value is spelled in directory names
+    * and snapshot keys the way a `partitionBy` write spells it, Spark's
+    * path escaping (`a:b` → `a%3Ab`); values passed into the API and
+    * served out are the unescaped ones. */
+  protected def escapeValue(v: String): String =
+    ExternalCatalogUtils.escapePathName(checkPartValue(v))
+
+  protected def unescapeValue(s: String): String =
+    ExternalCatalogUtils.unescapePathName(s)
+
+  /** A leaf path's hive fields as (name, unescaped value). */
+  protected def leafFields(leaf: String): Seq[(String, String)] =
+    leaf.split("/").toSeq.map { seg =>
+      val Array(n, v) = seg.split("=", 2)
+      n -> checkPartValue(unescapeValue(v))
+    }
+
   private def snapshotText(spark: SparkSession, root: String,
       snap: String): String =
     readUtf8(fsOf(spark, root), new HPath(s"$root/$SnapDir/$snap"))
+
+  /** `snapshot`, else the current one; fails loudly when none is
+    * committed. */
+  protected def snapOf(spark: SparkSession, root: String,
+      snapshot: Option[String]): String =
+    snapshot.orElse(currentSnapshot(spark, root)).getOrElse(
+      sys.error(s"$logName: no snapshot committed under $root"))
 
   /** The current snapshot name (root MANIFEST content), if committed. */
   def currentSnapshot(spark: SparkSession, root: String): Option[String] = {
@@ -109,7 +134,8 @@ trait SnapshotLog {
         catch { case _: java.io.IOException => None })
 
   /** The data schema RECORDED at a snapshot commit (single-column layout
-    * only; None = an older layout, readers use a version dir footer). */
+    * only; None = a spec table or an older layout, readers use a version
+    * dir footer). */
   def snapshotSchema(spark: SparkSession, root: String,
       snap: String): Option[StructType] =
     header(snapshotText(spark, root, snap), "schema")
@@ -325,8 +351,7 @@ trait SnapshotLog {
     checkRefName(name)
     // locked: a concurrent trim must not expire the snapshot mid-way
     ManifestTable.withPublishLock(root) {
-      val snap = snapshot.orElse(currentSnapshot(spark, root)).getOrElse(
-        sys.error(s"$logName: no snapshot committed under $root"))
+      val snap = snapOf(spark, root, snapshot)
       require(snapshots(spark, root).contains(snap),
         s"$logName: cannot tag unknown/expired snapshot $snap")
       // create-once: two racing taggers of one name cannot both win
@@ -394,9 +419,8 @@ trait SnapshotLog {
       from: Option[String] = None): String = {
     checkRefName(name)
     ManifestTable.withPublishLock(root) {
-      val snap = from.flatMap(r => resolveRef(spark, root, Some(r)))
-        .orElse(currentSnapshot(spark, root)).getOrElse(sys.error(
-          s"$logName: no snapshot committed under $root"))
+      val snap = snapOf(spark, root,
+        from.flatMap(r => resolveRef(spark, root, Some(r))))
       require(snapshots(spark, root).contains(snap),
         s"$logName: cannot branch from unknown/expired snapshot $snap")
       require(!branches(spark, root).contains(name),
@@ -421,15 +445,19 @@ trait SnapshotLog {
   /** Commit to a BRANCH: the touched keys' version dirs are STAGED, the
     * snapshot lands in the shared history, and only the branch pointer
     * advances. EXISTING keys only: a branch-created key directory would
-    * show up in live listings with no pointer. `writeScratch` returns a
-    * fresh dir with one `leafRoot(k)` subdir per non-empty key;
-    * `updSchema` evolves the branch head's recorded schema. */
+    * show up in live listings with no pointer. `updates` maps each key
+    * to its `fields` values and rows, written in ONE [[writeTagged]]
+    * job; where the table records its schema (`recordSchema`), they
+    * evolve the branch head's. */
   protected def commitToBranch(spark: SparkSession, root: String,
-      branch: String, keys: Seq[String], keepSnapshots: Int,
-      leafRoot: String => String, updSchema: Option[StructType],
-      writeScratch: () => String, emptyLeaf: String => DataFrame): String = {
+      branch: String, keepSnapshots: Int, leafRoot: String => String,
+      fields: Seq[String], updates: Map[String, (Seq[String], DataFrame)],
+      recordSchema: Boolean): String = {
     require(keepSnapshots >= 2, "keepSnapshots must be >= 2")
-    require(keys.nonEmpty, "branch commit needs updates")
+    require(updates.nonEmpty, "branch commit needs updates")
+    val keys = updates.keys.toSeq
+    val data = unionTagged(fields, updates.values.toMap).get
+    val dataCols = data.columns.toSeq.filterNot(fields.contains)
     ManifestTable.withPublishLock(root) {
       val (head, base) = branches(spark, root).getOrElse(branch,
         sys.error(s"$logName: no branch '$branch'"))
@@ -438,12 +466,17 @@ trait SnapshotLog {
       require(unknown.isEmpty,
         s"$logName: branch commit may only touch existing $keysNoun " +
           s"(new: ${unknown.mkString(",")}) - create $keysNoun on main first")
-      val schema = evolvedSchema(snapshotSchema(spark, root, head), updSchema)
-      val scratch = writeScratch()
+      val schema =
+        if (!recordSchema) None
+        else evolvedSchema(snapshotSchema(spark, root, head),
+          Some(StructType(data.schema.filter(f => dataCols.contains(f.name)))))
+      val scratch = s"$root/.commit-${uuid8()}"
+      writeTagged(data, fields, scratch)
       try {
         val staged = keys.sorted.map(k => k -> new HPath(
           ManifestTable.stageVersion(s"$root/${leafRoot(k)}", versionSource(
-            spark, root, Some(scratch), k, leafRoot, emptyLeaf))).getName)
+            spark, root, Some(scratch), k, leafRoot,
+            _ => data.select(dataCols.map(col): _*).limit(0)))).getName)
         val snap = writeSnapshotLocked(spark, root,
           (baseMapping ++ staged).toSeq.sortBy(_._1), keepSnapshots, schema,
           advanceRoot = false, operation = "branch-commit")
@@ -589,9 +622,7 @@ trait SnapshotLog {
   protected def filesMetadataOf(spark: SparkSession, root: String,
       snapshot: Option[String], leafRoot: String => String): DataFrame = {
     import spark.implicits._
-    val snap = snapshot.orElse(currentSnapshot(spark, root)).getOrElse(
-      sys.error(s"$logName: no snapshot committed under $root"))
-    snapshotMapping(spark, root, snap).flatMap { case (k, d) =>
+    snapshotMapping(spark, root, snapOf(spark, root, snapshot)).flatMap { case (k, d) =>
       filesOfVersion(spark, s"$root/${leafRoot(k)}/$d", k, d)
     }.toDF()
   }

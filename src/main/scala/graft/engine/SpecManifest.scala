@@ -21,18 +21,15 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * The root `MANIFEST`, `_snapshots/`, `_refs/` and `_branches/` are
-  * owned by [[SnapshotLog]], shared with the single-column
-  * [[PartitionedManifest]]; here a snapshot key is a leaf path
-  * `y=…/b=…`. A leaf flips old→new in one pointer swap, a multi-leaf
-  * delta becomes visible in ONE root snapshot rename, and tags,
-  * branches, rollback, expiry and the orphan sweep are the shared
-  * ones. CDC diffs only the leaves whose version directory moved.
-  * Reads serve through a content-pinned catalog relation with ALL
-  * partition columns (one plan node, PartitionFilters pruning on each
-  * level — plan-asserted in w22). On top of the log this layout owns
-  * its seed, reads, hidden pruning, spec EVOLUTION and zone-map
-  * analyze; merge-on-read commits, leaf fold-down and layout rewrite
-  * are [[MergeOnRead]]'s, keyed per leaf.
+  * [[SnapshotLog]]'s; here a snapshot key is a leaf path `y=…/b=…`. A
+  * leaf flips old→new in one pointer swap and a multi-leaf delta
+  * becomes visible in ONE root snapshot rename. Serving, snapshot
+  * commit, CDC, analyze, merge-on-read commits, fold-down and layout
+  * rewrites are the ONE table engine of [[MergeOnRead]], which serves
+  * the single-column [[PartitionedManifest]] too (as a one-field
+  * `identity(partCol)` table); this layout owns the partition spec, its
+  * seed, hidden pruning and spec EVOLUTION, and serves every field as a
+  * string with no recorded schema (a SQL table declares its own).
   */
 object SpecManifest extends MergeOnRead {
 
@@ -117,12 +114,13 @@ object SpecManifest extends MergeOnRead {
   private val SpecsDir = "_specs"
 
   /** `y=1994/b=2` — the snapshot-file key AND the leaf's relative
-    * path. */
-  private def leafPath(spec: PartitionSpec, values: Seq[String]): String = {
+    * path, values escaped as a `partitionBy` write escapes them. */
+  private[graft] def leafPath(spec: PartitionSpec,
+      values: Seq[String]): String = {
     require(values.length == spec.fields.length,
       s"SpecManifest: expected ${spec.fields.length} values, got $values")
     spec.fields.zip(values).map { case (f, v) =>
-      s"${f.name}=${checkPartValue(v)}" }.mkString("/")
+      s"${f.name}=${escapeValue(v)}" }.mkString("/")
   }
 
   /** The stored spec (readers' authority — a caller-supplied spec must
@@ -204,25 +202,25 @@ object SpecManifest extends MergeOnRead {
     * bounded metadata listing). */
   def leafKeys(spark: SparkSession, root: String,
       spec: PartitionSpec): Seq[Seq[String]] =
-    leafDirs(spark, root, spec).map(_._2).sortBy(_.mkString("/"))
+    leafDirs(spark, root, spec).map(l => leafFields(l._2).map(_._2))
+      .sortBy(_.mkString("/"))
 
   /** Every `f1=v1/…/fn=vn` directory of `spec`'s shape under `dir`, with
-    * its values. */
+    * its path relative to `dir` as the directory names spell it (none
+    * under a root not created yet). */
   private def leafDirs(spark: SparkSession, dir: String,
-      spec: PartitionSpec): Seq[(HPath, Seq[String])] = {
+      spec: PartitionSpec): Seq[(HPath, String)] = {
     val fs = fsOf(spark, dir)
-    def walk(d: HPath, depth: Int): Seq[(HPath, Seq[String])] = {
-      val want = s"${spec.fields(depth).name}="
-      fs.listStatus(d)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(want))
+    def walk(d: HPath, depth: Int): Seq[(HPath, String)] =
+      fs.listStatus(d).filter(s => s.isDirectory &&
+          s.getPath.getName.startsWith(s"${spec.fields(depth).name}="))
         .toSeq.flatMap { s =>
-          val v = s.getPath.getName.stripPrefix(want)
-          if (depth == spec.fields.length - 1) Seq((s.getPath, Seq(v)))
-          else walk(s.getPath, depth + 1).map { case (p, vs) =>
-            (p, v +: vs) }
+          val seg = s.getPath.getName
+          if (depth == spec.fields.length - 1) Seq((s.getPath, seg))
+          else walk(s.getPath, depth + 1).map { case (p, rel) =>
+            (p, s"$seg/$rel") }
         }
-    }
-    walk(new HPath(dir), 0)
+    if (fs.exists(new HPath(dir))) walk(new HPath(dir), 0) else Nil
   }
 
   /** Leaf keys across EVERY spec generation, each with its OWNING spec
@@ -239,6 +237,11 @@ object SpecManifest extends MergeOnRead {
       leafKeys(spark, root, sp).map(vs => (sp, vs))
     }
 
+  /** The leaf paths of [[allLeaves]], as the directories spell them. */
+  private def allLeafPaths(spark: SparkSession, root: String): Seq[String] =
+    specVersions(spark, root).flatMap(sp => leafDirs(spark, root, sp)
+      .map(_._2)).distinct.sorted
+
   /** SEED: derive the partition columns, write the whole frame
     * hive-partitioned by ALL spec fields in ONE rebalanced job, adopt
     * each leaf directory as version 1 of its own pointer root (renames,
@@ -251,9 +254,8 @@ object SpecManifest extends MergeOnRead {
     // adopt every scratch leaf in place
     val found = leafDirs(spark, scratch, spec)
     require(found.nonEmpty, "SpecManifest: seed produced no partitions")
-    found.foreach { case (src, values) =>
-      ManifestTable.adoptVersion(s"$root/${leafPath(spec, values)}",
-        src.toString)
+    found.foreach { case (src, lp) =>
+      ManifestTable.adoptVersion(s"$root/$lp", src.toString)
     }
     fsOf(spark, root).delete(new HPath(scratch), true)
     ManifestTable.writeOnce(root, SpecFile, spec.render + "\n")
@@ -301,57 +303,38 @@ object SpecManifest extends MergeOnRead {
       spec: PartitionSpec, data: Option[DataFrame],
       touched: Seq[Seq[String]],
       keepSnapshots: Int = 2,
-      expectedBase: Option[Option[String]] = None): String = {
-    require(keepSnapshots >= 2, "keepSnapshots must be >= 2")
-    ManifestTable.withPublishLock(root) {
-      // CONFLICT GUARD, first thing under the lock: the caller states
-      // which snapshot its replacement frames were computed from
-      expectedBase.foreach { expected =>
-        val cur = currentSnapshot(spark, root)
-        if (cur != expected)
-          throw new ConcurrentCommitException(
-            s"SpecManifest: a concurrent commit moved $root from " +
-              s"$expected to $cur - recompute against the new base " +
-              "and retry")
-      }
-      val fs = fsOf(spark, root)
-      // create-table-on-first-commit: a fresh root adopts the writer's
-      // spec as v1 (the streaming sink's bootstrap path); an existing
-      // root validates the spec against the stored versions as always
-      if (!fs.exists(new HPath(root, SpecFile)))
-        ManifestTable.writeOnce(root, SpecFile, spec.render + "\n")
-      checkSpec(spark, root, spec)
-      val base = baseMappingLocked(spark, root, identity,
-        () => leafKeys(spark, root, spec).map(leafPath(spec, _)))
-      // spec evolution: creating a NEW leaf is reserved to the CURRENT
-      // spec (old layouts stay mergeable but never grow new leaves)
-      val versions = specVersions(spark, root)
-      if (spec != versions.last) {
-        val fresh = touched.map(vs => leafPath(spec, vs))
-          .filterNot(lp => base.contains(lp) ||
-            ManifestTable.currentVersion(s"$root/$lp").isDefined)
-        require(fresh.isEmpty,
-          s"SpecManifest: new leaves (${fresh.mkString(",")}) must use " +
-            "the CURRENT spec version")
-      }
-      val written: Map[String, String] =
-        if (data.isEmpty || touched.isEmpty) Map.empty
-        else {
-          val df = data.get
-          val scratch = s"$root/.commit-${SnapshotLog.uuid8()}"
-          writeTagged(df, spec.names, scratch)
-          try adoptLeavesLocked(spark, root, Some(scratch),
-            touched.map(leafPath(spec, _)).distinct.sorted, keepSnapshots,
-            identity,
-            _ => df.select(df.columns.filterNot(spec.names.contains)
-              .map(col): _*).limit(0))
-          finally fs.delete(new HPath(scratch), true)
+      expectedBase: Option[Option[String]] = None): String =
+    commitTagged(spark, root, identity, spec.names, data,
+      touched.map(leafPath(spec, _)), keepSnapshots,
+      () => leafDirs(spark, root, spec).map(_._2), recordSchema = false,
+      { base =>
+        // CONFLICT GUARD, first thing under the lock: the caller states
+        // which snapshot its replacement frames were computed from
+        expectedBase.foreach { expected =>
+          val cur = currentSnapshot(spark, root)
+          if (cur != expected)
+            throw new ConcurrentCommitException(
+              s"SpecManifest: a concurrent commit moved $root from " +
+                s"$expected to $cur - recompute against the new base " +
+                "and retry")
         }
-      val mapping = (base ++ written).toSeq.sortBy(_._1)
-      require(mapping.nonEmpty, "SpecManifest: nothing to commit")
-      writeSnapshotLocked(spark, root, mapping, keepSnapshots)
-    }
-  }
+        // create-table-on-first-commit: a fresh root adopts the writer's
+        // spec as v1 (the streaming sink's bootstrap path); an existing
+        // root validates the spec against the stored versions as always
+        if (!fsOf(spark, root).exists(new HPath(root, SpecFile)))
+          ManifestTable.writeOnce(root, SpecFile, spec.render + "\n")
+        checkSpec(spark, root, spec)
+        // spec evolution: creating a NEW leaf is reserved to the CURRENT
+        // spec (old layouts stay mergeable but never grow new leaves)
+        if (spec != specVersions(spark, root).last) {
+          val fresh = touched.map(vs => leafPath(spec, vs))
+            .filterNot(lp => base.contains(lp) ||
+              ManifestTable.currentVersion(s"$root/$lp").isDefined)
+          require(fresh.isEmpty,
+            s"SpecManifest: new leaves (${fresh.mkString(",")}) must use " +
+              "the CURRENT spec version")
+        }
+      })
 
   /** Commit to a BRANCH ([[SnapshotLog]]'s write-audit-publish): leaf
     * version dirs are STAGED (leaf pointers never move — live readers
@@ -361,17 +344,9 @@ object SpecManifest extends MergeOnRead {
       spec: PartitionSpec, updates: Map[Seq[String], DataFrame],
       branch: String, keepSnapshots: Int = 2): String = {
     checkSpec(spark, root, spec)
-    val valuesOf = updates.keys.map(vs => leafPath(spec, vs) -> vs).toMap
-    commitToBranch(spark, root, branch, valuesOf.keys.toSeq, keepSnapshots,
-      identity, None,
-      () => {
-        val scratch = s"$root/.branch-${SnapshotLog.uuid8()}"
-        writeTagged(unionTagged(spec.names, updates).get, spec.names,
-          scratch)
-        scratch
-      },
-      lp => updates(valuesOf(lp)).select(updates.head._2.columns
-        .filterNot(spec.names.contains).map(col): _*).limit(0))
+    commitToBranch(spark, root, branch, keepSnapshots, identity, spec.names,
+      updates.map { case (vs, df) => leafPath(spec, vs) -> (vs, df) },
+      recordSchema = false)
   }
 
   /** PUBLISH a branch: fast-forward main to its head in one metadata
@@ -405,18 +380,17 @@ object SpecManifest extends MergeOnRead {
       () => allLeafPaths(spark, root))
   }
 
-  private def allLeafPaths(spark: SparkSession, root: String): Seq[String] =
-    allLeaves(spark, root).map { case (sp, vs) => leafPath(sp, vs) }.distinct
-
-  /** Read a snapshot (default: current) through a content-pinned
-    * catalog relation carrying ALL spec fields as partition columns —
-    * one plan node, PartitionFilters pruning on every level. The pin
-    * carries the zone-map property, so file skipping composes below
-    * partition pruning here too.
-    *
-    * Merge-on-read leaves (bounded by [[compactLeaves]] cadence) each
-    * resolve their delta chain and union on top of the pinned pure
-    * subset — the common all-pure case keeps its ONE plan node. */
+  /** Read a snapshot (default: current) through the engine's serving
+    * path ([[serveMapping]]): the pure leaves through one content-pinned
+    * relation carrying ALL spec fields as partition columns (one plan
+    * node, PartitionFilters pruning on every level, zone-map file
+    * skipping below, and the hidden-partition rule deriving partition
+    * filters from source-column equalities), merge-on-read leaves
+    * resolved on top. `dataSchema`, a SQL table's declared schema, is
+    * the served schema: the Spark 4 parquet reader null-fills missing
+    * columns and widens int8/16/32→int64/float64, float32→float64
+    * (SPARK-40876), so schema evolution stays metadata-only down to the
+    * scan. */
   def read(spark: SparkSession, root: String, spec: PartitionSpec,
       snapshot: Option[String] = None,
       dataSchema: Option[org.apache.spark.sql.types.StructType] = None)
@@ -425,29 +399,18 @@ object SpecManifest extends MergeOnRead {
     require(versions.contains(spec) && spec == versions.last,
       s"SpecManifest: read serves the CURRENT spec under $root - " +
         s"current is [${versions.last.render.replace("\n", "; ")}]")
-    val snap = snapshot.orElse(currentSnapshot(spark, root)).getOrElse(
-      sys.error(s"SpecManifest: no snapshot committed under $root"))
+    val snap = snapOf(spark, root, snapshot)
     val mapping = snapshotMapping(spark, root, snap)
     require(mapping.nonEmpty, s"SpecManifest: empty snapshot $snap")
-    val (morLs, pureLs) = mapping.partition { case (k, d) =>
-      isMorDir(spark, s"$root/$k/$d") }
     // files spell RENAMED columns by their PHYSICAL (creation-time)
     // names: serve physically, alias to the logical names at the end
     val physDecl = dataSchema.map(graft.sql.GraftSchemas.physicalSchema)
-    val served = if (versions.size == 1) {
-      val pureDf =
-        if (pureLs.isEmpty) None
-        else Some(servePin(spark, root, spec, pureLs, physDecl))
-      // K hot MOR leaves serve through ONE grouped resolution (plan
-      // width scales with chain depth, never K) with the spec fields
-      // recovered from the leaf directory paths
-      val morDf =
-        if (morLs.isEmpty) None
-        else Some(alignMaybe(resolveMorGrouped(spark,
-          morLs.map { case (k, d) => (s"$root/$k", d) }, spec.names,
-          None), physDecl, spec.names))
-      (pureDf.toSeq ++ morDf.toSeq).reduce(_.unionByName(_))
-    } else {
+    def strings(sp: PartitionSpec) = sp.names.map(_ -> "string")
+    val valid = () => validPins(spark, root)
+    val served = if (versions.size == 1)
+      serveMapping(spark, root, identity, strings(spec), mapping, physDecl,
+        Some(spec.renderCompact), valid)
+    else {
       // EVOLVED table: each layout generation serves through its OWN
       // pin (so the hidden-partition rule prunes each through its own
       // spec); the output shape is data columns + the CURRENT spec's
@@ -457,32 +420,28 @@ object SpecManifest extends MergeOnRead {
       // source column (row-level only there — the hidden rule prunes
       // it through the source predicate instead). Partition values
       // are layout, never data, so readers get one stable shape.
-      val pins = pureLs
+      // Merge-on-read leaves group per generation the same way (one
+      // grouped resolution each, arms = generations × depth).
+      val (morLs, pureLs) = mapping.partition { case (k, d) =>
+        isMorDir(spark, s"$root/$k/$d") }
+      def generations(ls: Seq[(String, String)]) = ls
         .groupBy { case (k, _) => specForLeaf(versions, k) }.toSeq
         .sortBy(_._1.names.mkString("/"))
-        .map { case (sp, ls) =>
-          val df = servePin(spark, root, sp, ls, physDecl)
-          val missing = spec.fields.filterNot(sp.fields.contains)
-          val dropNames = sp.names
-            .filterNot(n => spec.fields.exists(f =>
-              f.name == n && sp.fields.contains(f)))
-          missing.foldLeft(df.drop(dropNames: _*))((d, f) =>
-            d.withColumn(f.name, f.derived))
-        }
-      // MOR leaves group per GENERATION (one grouped resolution per
-      // spec version with chains, arms = generations × depth); the
-      // stored partition fields drop and the CURRENT spec's fields
-      // re-derive from source columns, like the pure pins above
-      val mors = morLs
-        .groupBy { case (k, _) => specForLeaf(versions, k) }.toSeq
-        .sortBy(_._1.names.mkString("/"))
-        .map { case (sp, ls) =>
-          val df = alignMaybe(resolveMorGrouped(spark,
-            ls.map { case (k, d) => (s"$root/$k", d) }, sp.names, None)
-            .drop(sp.names: _*), physDecl, Seq.empty)
-          spec.fields.foldLeft(df)((x, f) =>
-            x.withColumn(f.name, f.derived))
-        }
+      val pins = generations(pureLs).map { case (sp, ls) =>
+        val df = servePinned(spark, root, identity, strings(sp), ls,
+          physDecl, Some(sp.renderCompact), valid)
+        val missing = spec.fields.filterNot(sp.fields.contains)
+        val dropNames = sp.names
+          .filterNot(n => spec.fields.exists(f =>
+            f.name == n && sp.fields.contains(f)))
+        missing.foldLeft(df.drop(dropNames: _*))((d, f) =>
+          d.withColumn(f.name, f.derived))
+      }
+      val mors = generations(morLs).map { case (sp, ls) =>
+        spec.fields.foldLeft(resolveMorGrouped(spark,
+          ls.map { case (k, d) => (s"$root/$k", d) }, sp.names, physDecl)
+          .drop(sp.names: _*))((x, f) => x.withColumn(f.name, f.derived))
+      }
       (pins ++ mors).reduce(_.unionByName(_))
     }
     dataSchema match {
@@ -494,114 +453,22 @@ object SpecManifest extends MergeOnRead {
     }
   }
 
-  /** Align a frame to a DECLARED data schema when one is given (the
-    * SQL catalog's evolved-schema reads): missing columns serve as
-    * typed NULLs, physically narrower columns widen — the row-level
-    * twin of the declared-schema parquet pin, for the MOR-resolved
-    * subsets that don't serve through a pin. `keep` columns (partition
-    * fields) pass through untouched. */
-  private def alignMaybe(df: DataFrame,
-      declared: Option[org.apache.spark.sql.types.StructType],
-      keep: Seq[String]): DataFrame = declared match {
-    case None => df
-    case Some(schema) =>
-      df.select(schema.fields.toSeq.map { f =>
-        if (!df.columns.contains(f.name))
-          lit(null).cast(f.dataType).as(f.name)
-        else if (df.schema(f.name).dataType == f.dataType) col(f.name)
-        else col(f.name).cast(f.dataType).as(f.name)
-      } ++ keep.map(col): _*)
-  }
-
-  /** The pin's name: content hash of the leaf mapping plus (when the
-    * caller declares one) the served schema — an ALTER TABLE must
-    * never reuse a pin built for the previous schema. */
-  private def pinName(root: String, mapping: Seq[(String, String)],
-      declared: Option[org.apache.spark.sql.types.StructType]): String =
-    s"graft_sm_${SnapshotLog.hash8(root)}_" + SnapshotLog.hash8(
-      mapping.map { case (k, d) => s"$k\t$d" }.mkString("\n") +
-        declared.map(s => "\n#schema=" + s.json).getOrElse(""))
-
-  /** The PURE subset of a snapshot's leaves served through one
-    * content-pinned partitioned relation (see [[read]]). With a
-    * DECLARED schema the pin serves it directly: the Spark 4 parquet
-    * reader null-fills missing columns and widens
-    * int8/16/32→int64/float64, float32→float64 (SPARK-40876), so
-    * schema evolution stays metadata-only down to the scan. */
-  private def servePin(spark: SparkSession, root: String,
-      spec: PartitionSpec, mapping: Seq[(String, String)],
-      declared: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    val table = pinName(root, mapping, declared)
-    if (!spark.catalog.tableExists(table)) {
-      val dataSchema = declared.getOrElse(footerSchema(spark,
-        s"$root/${mapping.head._1}/${mapping.head._2}"))
-      val cols = dataSchema.map(f => s"`${f.name}` ${f.dataType.sql}")
-        .mkString(", ")
-      val partCols = spec.names.map(n => s"`$n` string").mkString(", ")
-      // graft.spec: HiddenPartitionRule derives partition filters from
-      // bare source-column equalities over this relation (transparent
-      // hidden partitioning); graft.zonemaps: file skipping below.
-      // Pin names are content-derived, so a RACING reader creating the
-      // same pin built the identical table — losing the create race is
-      // benign (the partition adds below are idempotent either way)
-      try spark.sql(s"CREATE TABLE `$table` ($cols, $partCols) " +
-        s"USING parquet PARTITIONED BY (${spec.names.map(n => s"`$n`")
-          .mkString(", ")}) LOCATION '$root' " +
-        s"TBLPROPERTIES ('${graft.plans.ZoneMaps.Prop}'='true', " +
-        s"'${graft.plans.HiddenPartitions.Prop}'=" +
-        s"'${spec.renderCompact}')")
-      catch {
-        case _: org.apache.spark.sql.catalyst.analysis
-          .TableAlreadyExistsException => ()
+  /** The pins a reader may still hold: each kept snapshot's ([[pinsOf]])
+    * under no declared schema and, on a SQL table, under the CURRENT
+    * declared schema and the one in effect at that snapshot (time
+    * travel). */
+  private def validPins(spark: SparkSession, root: String): Seq[String] = {
+    val declared: String => Seq[Option[
+        org.apache.spark.sql.types.StructType]] =
+      if (!graft.sql.GraftSchemas.hasVersions(spark, root)) _ => Seq(None)
+      else { sn => Seq(None,
+        Some(graft.sql.GraftSchemas.physicalSchema(
+          graft.sql.GraftSchemas.current(spark, root))),
+        Some(graft.sql.GraftSchemas.physicalSchema(
+          graft.sql.GraftSchemas.forSnapshot(spark, root, sn))))
       }
-      val adds = mapping.map { case (k, d) =>
-        val specClause = k.split("/").map { seg =>
-          val Array(n, v) = seg.split("=", 2)
-          s"`$n`='$v'"
-        }.mkString(", ")
-        s"PARTITION ($specClause) LOCATION '$root/$k/$d'"
-      }
-      spark.sql(s"ALTER TABLE `$table` ADD IF NOT EXISTS " +
-        adds.mkString(" "))
-      // drop pins of expired snapshots for this root (keep-N bounded).
-      // A snapshot with merge-on-read leaves serves its PURE SUBSET
-      // through the pin, so that subset's pin counts as valid too —
-      // an EVOLVED table serves one pin per spec generation, so each
-      // generation's pure group is valid as well — and a SQL table
-      // serves through declared-schema pins, so each group is valid
-      // under no declaration, the CURRENT schema, and the schema in
-      // effect at that snapshot (time travel).
-      val prefix = s"graft_sm_${SnapshotLog.hash8(root)}_"
-      val versions = specVersions(spark, root)
-      val declaredVariants: String => Seq[Option[
-          org.apache.spark.sql.types.StructType]] =
-        if (!graft.sql.GraftSchemas.hasVersions(spark, root)) _ => Seq(None)
-        else { sn => Seq(None,
-          Some(graft.sql.GraftSchemas.physicalSchema(
-            graft.sql.GraftSchemas.current(spark, root))),
-          Some(graft.sql.GraftSchemas.physicalSchema(
-            graft.sql.GraftSchemas.forSnapshot(spark, root, sn))))
-        }
-      val valid = snapshots(spark, root).flatMap { sn =>
-        val m = snapshotMapping(spark, root, sn)
-        val pure = m.filterNot { case (k, d) =>
-          isMorDir(spark, s"$root/$k/$d") }
-        val groups = pure.groupBy { case (k, _) =>
-          specForLeaf(versions, k) }.values.toSeq
-        for {
-          x <- Seq(m, pure) ++ groups if x.nonEmpty
-          dv <- declaredVariants(sn)
-        } yield pinName(root, x, dv)
-      }.toSet + table
-      val db = spark.catalog.currentDatabase
-      spark.sharedState.externalCatalog.listTables(db)
-        .filter(t => t.startsWith(prefix) && !valid.contains(t))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    }
-    graft.plans.ZoneMaps.install(spark)
-    graft.plans.HiddenPartitions.install(spark)
-    spark.table(table)
+    snapshots(spark, root).flatMap(sn => pinsOf(spark, root, identity,
+      snapshotMapping(spark, root, sn), declared(sn)))
   }
 
   /** HIDDEN partitioning's read-side half: given source-column
@@ -625,63 +492,15 @@ object SpecManifest extends MergeOnRead {
     }
   }
 
-  /** Row-level CDC between two kept snapshots: leaf-dir diff first
-    * (untouched leaves are never listed, planned, or read), then an
-    * exceptAll multiset diff over only the changed leaves, with every
-    * partition value recovered from the directory path. */
+  /** Row-level CDC between two kept snapshots ([[diffSnapshots]]); the
+    * leaves' partition values are recovered from the paths, and across
+    * spec evolutions a field a leaf lacks reads as NULL. */
   def changesBetween(spark: SparkSession, root: String,
       spec: PartitionSpec, fromSnap: String, toSnap: String,
       changeCol: String = "_change_type"): DataFrame = {
     checkSpec(spark, root, spec)
-    val from = snapshotMapping(spark, root, fromSnap).toMap
-    val to = snapshotMapping(spark, root, toSnap).toMap
-    val changed = (from.keySet ++ to.keySet)
-      .filter(k => from.get(k) != to.get(k)).toSeq.sorted
-    // per-leaf MOR-resolving reads (a changed leaf may be a delta
-    // chain on either side); partition values come from the leaf key.
-    // Across spec evolutions changed leaves may carry different field
-    // names — the diff emits the union, absent fields as NULL.
-    val allNames: Seq[String] = changed
-      .flatMap(_.split("/").map(_.split("=", 2)(0))).distinct
-    def side(m: Map[String, String]): Option[DataFrame] = {
-      val leaves = changed.flatMap(k => m.get(k).map(d => (k, d)))
-      if (leaves.isEmpty) None
-      else Some(leaves
-        // one group per field-name layout (spec generation): pure dirs
-        // read as ONE relation, MOR chains resolve through the grouped
-        // resolver — plan width is generations × chain depth, never
-        // the changed-leaf count
-        .groupBy { case (k, _) =>
-          k.split("/").toSeq.map(_.split("=", 2)(0)) }
-        .toSeq.sortBy(_._1.mkString("/"))
-        .map { case (names, ls) =>
-          val (mor, pure) = ls.partition { case (k, d) =>
-            isMorDir(spark, s"$root/$k/$d") }
-          val parts =
-            (if (pure.isEmpty) Nil
-             else Seq(readDirsWithFields(spark,
-               pure.map { case (k, d) => s"$root/$k/$d" }, names))) ++
-            (if (mor.isEmpty) Nil
-             else Seq(resolveMorGrouped(spark,
-               mor.map { case (k, d) => (s"$root/$k", d) }, names,
-               None)))
-          val df = parts.reduce(_.unionByName(_))
-          val dataCols = df.columns.toSeq.filterNot(names.contains)
-          allNames.filterNot(names.contains)
-            .foldLeft(df)((x, n) =>
-              x.withColumn(n, lit(null).cast("string")))
-            .select((dataCols.map(col) ++ allNames.map(col)): _*)
-        }.reduce(_.unionByName(_)))
-    }
-    (side(from), side(to)) match {
-      case (None, None) =>
-        read(spark, root, spec, Some(toSnap)).limit(0)
-          .withColumn(changeCol, lit(""))
-      case (f, t) =>
-        val fDf = f.orElse(t.map(_.limit(0))).get
-        val tDf = t.orElse(f.map(_.limit(0))).get
-        multisetDiff(tDf, fDf, changeCol)
-    }
+    diffSnapshots(spark, root, identity, Nil, fromSnap, toSnap, changeCol,
+      read(spark, root, spec, Some(toSnap)))
   }
 
   // ---------------------------------------------------------------------
@@ -695,12 +514,8 @@ object SpecManifest extends MergeOnRead {
     * MOR-resolving; the single-leaf reader merge builders use instead
     * of a raw parquet read of the live version dir. */
   def readLeaf(spark: SparkSession, root: String, spec: PartitionSpec,
-      values: Seq[String]): DataFrame = {
-    val lp = leafPath(spec, values)
-    val dir = ManifestTable.currentVersion(s"$root/$lp").getOrElse(
-      sys.error(s"SpecManifest: no MANIFEST under $root/$lp"))
-    resolveVersionData(spark, s"$root/$lp", dir, None)
-  }
+      values: Seq[String]): DataFrame =
+    readLive(spark, s"$root/${leafPath(spec, values)}", None)
 
   /** A leaf's PHYSICAL data schema: its live chain's bottom (pure)
     * parquet footer — what [[commitMerge]] validates upserts against.
@@ -728,16 +543,10 @@ object SpecManifest extends MergeOnRead {
       chainKeys(spark, s"$root/$lp", d))
   }
 
-  /** MERGE-ON-READ commit over leaf-keyed `upserts` (full-data-schema
-    * replacement rows, keyed by `keyCols`) and `deletes` (key rows):
-    * each touched leaf gets a new version dir holding only the delta
-    * files and a `_mor.tsv` naming its base, and one atomic root
-    * snapshot covers the whole delta ([[MergeOnRead]]'s commit). Leaves
-    * must exist, every touched leaf's chain-bottom schema must agree
-    * and match the upserts, and per leaf the upsert and delete key sets
-    * must be disjoint. `onBeforeLock` is the test seam between the
-    * lock-free staging and the locked re-bind. Returns the snapshot
-    * name. */
+  /** MERGE-ON-READ commit ([[commitMergeCore]]) over leaf-keyed
+    * `upserts` (full-data-schema rows, keyed by `keyCols`) and `deletes`
+    * (key rows) into existing leaves whose chain-bottom schemas agree.
+    * Returns the snapshot name. */
   def commitMerge(spark: SparkSession, root: String,
       spec: PartitionSpec, keyCols: Seq[String],
       upserts: Map[Seq[String], DataFrame] = Map.empty,
@@ -752,29 +561,16 @@ object SpecManifest extends MergeOnRead {
       onBeforeLock)
   }
 
-  /** Collect file-level min/max zone maps for `cols` on every LIVE
-    * leaf version dir — the single-column layout's `analyzeFileStats`
-    * on the composite layout. The content-pinned read relations already
-    * carry the zone-map property, so after ANALYZE a PLAIN
-    * `read(…).where(range)` prunes files below partition pruning with
-    * no helper call (the w21 contract on spec tables). Idempotent per
-    * version dir; merge-on-read leaves refuse loudly (fold first —
-    * an empty sidecar would silently drop their content on skip).
-    * Returns the number of version dirs newly analyzed. */
+  /** [[analyzeLive]] over every LIVE leaf of every spec generation (an
+    * evolved table's old-layout leaves hold live data too). The pinned
+    * read relations carry the zone-map property, so after ANALYZE a
+    * plain `read(…).where(range)` skips files below partition pruning
+    * (the w21 contract on spec tables). */
   def analyzeFileStats(spark: SparkSession, root: String,
       spec: PartitionSpec, cols: Seq[String]): Int = {
     checkSpec(spark, root, spec)
-    // every generation's leaves: an evolved table's old-layout leaves
-    // hold live data too — skipping them would leave zone maps
-    // uncollected there while the returned count suggests full coverage
-    allLeafPaths(spark, root).map { lp =>
-      val dir = ManifestTable.currentDataDir(s"$root/$lp").getOrElse(
-        sys.error(s"SpecManifest: no MANIFEST under $root/$lp"))
-      require(!isMorDir(spark, dir),
-        s"SpecManifest: leaf $lp is merge-on-read at $dir - analyze " +
-          "after compactLeaves() folds the delta chain down")
-      if (FileStats.collect(spark, dir, cols) >= 0) 1 else 0
-    }.sum
+    analyzeLive(spark, allLeafPaths(spark, root).map(lp => s"$root/$lp"),
+      cols)
   }
 
   /** FILE inspection table of a snapshot (see [[SnapshotLog]]);
@@ -852,10 +648,8 @@ object SpecManifest extends MergeOnRead {
         // everything)
         val rows = keys
           .filter(_.split("/").length == spec.names.length)
-          .map { lp =>
-            val vs = lp.split("/").toSeq.map(_.split("=", 2)(1))
-            org.apache.spark.sql.Row.fromSeq(vs :+ lp)
-          }
+          .map(lp => org.apache.spark.sql.Row.fromSeq(
+            leafFields(lp).map(_._2) :+ lp))
         val sch = org.apache.spark.sql.types.StructType(
           (spec.names :+ "_graft_leaf").map(n =>
             org.apache.spark.sql.types.StructField(n,

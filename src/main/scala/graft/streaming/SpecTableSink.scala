@@ -121,8 +121,7 @@ class SpecTableSink(ctx: SQLContext, parameters: Map[String, String])
       .map(r => ns.indices.map(i => r.getString(i)))
       .toSeq.sortBy(_.mkString("/"))
     if (touched.nonEmpty) {
-      def leafPathOf(vs: Seq[String]) =
-        ns.zip(vs).map { case (n, v) => s"$n=$v" }.mkString("/")
+      def leafPathOf(vs: Seq[String]) = SpecManifest.leafPath(spec, vs)
       def leafOf(vs: Seq[String]): DataFrame =
         ns.zipWithIndex.foldLeft(tagged) { case (d, (n, i)) =>
           d.filter(col(n) === vs(i)) }.drop(ns: _*)

@@ -5,13 +5,15 @@ import java.nio.file.{Files, Path}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.SpecManifest
+import graft.engine.{PartitionedManifest, SpecManifest}
 
 /** Job budgets: the exact Spark job count of each SQL DML statement, read,
   * CDC scan and compaction on a small hidden-partition table — the shape
   * of the benchmark's `table_dml` workload, `PARTITIONED BY (years(d),
   * bucket(2, k))` with about 1,300 rows in 2 leaves. A change that adds a
-  * job to any of them fails here, before it reaches a benchmark. */
+  * job to any of them fails here, before it reaches a benchmark. The
+  * single-column layout's paths that no benchmark workload runs are
+  * pinned the same way. */
 class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.session
 
@@ -39,6 +41,14 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** (k, v, unix date, s) */
   type R = (Long, Double, Int, String)
+
+  /** Runs `body`, recording its exact job count as `jobs(op)`. */
+  private def counted[T](jobs: scala.collection.mutable.Map[String, Int],
+      op: String)(body: => T): T = {
+    val (out, n) = JobCount.of(spark)(body)
+    jobs(op) = n
+    out
+  }
 
   test("per-statement job budgets on a 2-leaf hidden-partition table; " +
       "every MERGE job names its statement") {
@@ -72,11 +82,7 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     view(ins, "budget_ins")
     view(mrg, "budget_mrg")
     val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    def run[T](op: String)(body: => T): T = {
-      val (out, n) = JobCount.of(spark)(body)
-      jobs(op) = n
-      out
-    }
+    def run[T](op: String)(body: => T): T = counted(jobs, op)(body)
     run("insert")(spark.sql(s"INSERT INTO $Table SELECT k, v, d, s FROM budget_ins"))
     ins.foreach(r => model(r._1) = r)
     val (_, mergeJobs) = JobCount.described(spark)(spark.sql(
@@ -115,5 +121,66 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs.toSeq == budget, s"jobs per operation (budget $budget)")
     assert(mergeJobs.nonEmpty && mergeJobs.forall(_ == s"graft MERGE into $Table"),
       s"MERGE job descriptions: $mergeJobs")
+  }
+
+  test("single-column layout: exact job counts of seed, commit, reads, " +
+      "CDC, catalog sync and resync, merge-on-read and compaction") {
+    import spark.implicits._
+    val root = Files.createDirectories(wh.resolve("single")).toString
+    val table = "graft_jobpin_tbl"
+    try {
+      // (k, v, bk): 60 rows over 3 partitions
+      var model: Map[Long, (Long, Double, Int)] =
+        (0 until 60).map(i => i.toLong -> ((i.toLong, i * 1.5, i % 3))).toMap
+      val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+      def run[T](op: String)(body: => T): T = counted(jobs, op)(body)
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double, Int)] =
+        df.select($"k", $"v", $"bk").as[(Long, Double, Int)].collect().toSeq.sorted
+      def want: Seq[(Long, Double, Int)] = model.values.toSeq.sorted
+
+      run("seed")(PartitionedManifest.seed(spark, root,
+        model.values.toSeq.toDF("k", "v", "bk"), "bk"))
+      val s0 = PartitionedManifest.commitSnapshot(spark, root, "bk", Map.empty)
+      // rewrite partitions 0 and 1 in one commit
+      val upd = model.values.filter(_._3 < 2).map(r => r.copy(_2 = r._2 + 100)).toSeq
+      upd.foreach(r => model += r._1 -> r)
+      val s1 = run("commitSnapshot")(PartitionedManifest.commitSnapshot(
+        spark, root, "bk", upd.groupBy(_._3).map { case (b, rs) =>
+          b.toString -> rs.map(r => (r._1, r._2)).toDF("k", "v") }))
+      assert(run("read")(rows(PartitionedManifest.read(spark, root, "bk", "int"))) == want)
+      assert(run("readSnapshot")(rows(PartitionedManifest.readSnapshot(
+        spark, root, "bk", "int"))) == want)
+      val cdc = run("changesBetween")(PartitionedManifest.changesBetween(
+        spark, root, "bk", "int", s0, s1).select($"k", $"_change_type")
+        .as[(Long, String)].collect().toSeq)
+      assert(cdc.count(_._2 == "insert") == upd.size &&
+        cdc.count(_._2 == "delete") == upd.size, s"cdc: $cdc")
+      run("syncCatalogTable")(PartitionedManifest.syncCatalogTable(
+        spark, root, table, "bk", "int"))
+      assert(rows(spark.table(table)) == want)
+      // merge-on-read: upsert two keys of partition 2, delete one
+      val p2 = model.values.filter(_._3 == 2).toSeq.sortBy(_._1)
+      val ups = p2.take(2).map(r => r.copy(_2 = -r._2))
+      val gone = p2(2)._1
+      run("commitMerge")(PartitionedManifest.commitMerge(spark, root, "bk",
+        Seq("k"), upserts = Map("2" -> ups.map(r => (r._1, r._2)).toDF("k", "v")),
+        deletes = Map("2" -> Seq(gone).toDF("k"))))
+      ups.foreach(r => model += r._1 -> r)
+      model -= gone
+      assert(run("read.mor")(rows(PartitionedManifest.read(spark, root, "bk", "int"))) == want)
+      val (_, compacted) = run("compact")(PartitionedManifest.compact(spark, root, "bk"))
+      assert(compacted == Seq("2"), s"compacted: $compacted")
+      assert(rows(PartitionedManifest.read(spark, root, "bk", "int")) == want)
+      // the catalog diff branch: partition 2 moved, 0 and 1 did not
+      run("syncCatalogTable.resync")(PartitionedManifest.syncCatalogTable(
+        spark, root, table, "bk", "int"))
+      assert(rows(spark.table(table)) == want)
+
+      val pins = Seq("seed" -> 2, "commitSnapshot" -> 2, "read" -> 1,
+        "readSnapshot" -> 1, "changesBetween" -> 2, "syncCatalogTable" -> 0,
+        "commitMerge" -> 4, "read.mor" -> 2, "compact" -> 3,
+        "syncCatalogTable.resync" -> 0)
+      assert(jobs.toSeq == pins, s"jobs per operation (pinned $pins)")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 }
